@@ -14,7 +14,7 @@ import java.util.Locale
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HostCalib.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")

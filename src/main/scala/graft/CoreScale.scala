@@ -53,7 +53,7 @@ object CoreScale {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("/tmp/corescale.json")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HostCalib.cpus
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
     val spark = SparkSession.builder()

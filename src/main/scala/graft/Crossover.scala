@@ -87,10 +87,11 @@ object Crossover {
     }
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
+    val cpus = HostCalib.cpus
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       .appName("graft-crossover")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -206,7 +207,7 @@ object Crossover {
          |"factors": [${factors.mkString(", ")}],
          |"cohort": [${cohort.map(jsonStr).mkString(", ")}],
          |"protocol": {
-         |  "spark": "local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}], shuffle.partitions=32, AQE, noop sink, 5 reps (first dropped as warmup) -> median of 4, clearCache+unpersist+System.gc between reps",
+         |  "spark": "local[$cpus], shuffle.partitions=$cpus, AQE, noop sink, 5 reps (first dropped as warmup) -> median of 4, clearCache+unpersist+System.gc between reps",
          |  "q107_support": "MinPairSupport * factor (replication multiplies every pair's support by the factor; a fixed threshold would promote the whole vocabulary into the frequent set)",
          |  "corpora": "ScaleBench replicated documents (synth v${ScaleBench.SynthVersion}), same cache as the scaling table"
          |},

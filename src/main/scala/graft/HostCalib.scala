@@ -27,6 +27,11 @@ object HostCalib {
     * stop being comparable across artifacts. */
   val Rows = 9_000_000_000L
 
+  /** Core count of the measuring mains: `SPARK_GRAFT_CPUS` when set,
+    * else the cores the JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   private val warmed = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   def seconds(spark: SparkSession): Double = {
@@ -51,7 +56,7 @@ object HostCalib {
   /** Standalone sizing/inspection entry: prints one probe value. */
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[$cpus]")
       .appName("graft-hostcalib")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -182,7 +182,7 @@ object ScaleBench {
       sys.env.get("SPARK_GRAFT_OPS").map(_.split(",").map(_.trim).toSet)
     def opSelected(name: String): Boolean = opFilter.forall(_.contains(name))
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${HostCalib.cpus}]")
       .appName("graft-scalebench")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

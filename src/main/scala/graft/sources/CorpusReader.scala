@@ -11,6 +11,18 @@ import org.apache.spark.sql.functions._
   * every executor reads its own file split, labels derive from the file
   * path, and nothing funnels through the driver. At 100 TB this is the
   * difference between a working source and an OOM.
+  *
+  * Both loaders return frames packed by bytes: at most
+  * `max(defaultParallelism, ceil(sizeInBytes / spark.sql.files.maxPartitionBytes))`
+  * partitions. The file scan charges every file
+  * `spark.sql.files.openCostInBytes` (4 MB by default) when it packs
+  * splits, so a directory of tiny reviews arrives as one partition per
+  * 32 files (128 MB / 4 MB) holding a few tens of KB, and every later
+  * fit iteration, tree level and χ² pass runs one task per sliver. The
+  * packing is a shuffle-free `coalesce`, so it only ever merges: once
+  * files are large enough for the open cost not to matter, the scan
+  * already has no more partitions than the bound and the frame comes
+  * back as read.
   */
 object CorpusReader {
 
@@ -25,16 +37,27 @@ object CorpusReader {
         .withColumn("label", lit(label))
       limitPerClass.fold(df)(df.limit)
     }
-    side("pos", 1.0).unionByName(side("neg", 0.0))
+    packed(side("pos", 1.0).unionByName(side("neg", 0.0)))
   }
 
   /** S2 `loadUknown`: unlabeled docs, id = filename stem
     * (`loadFilesPartial.py:30-40`). */
   def loadUnknown(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
+    packed(spark.read.option("wholetext", "true").text(path)
       .withColumn("name",
         regexp_extract(input_file_name(), "([^/]+)\\.[^.]+$", 1))
-      .withColumnRenamed("value", "review")
+      .withColumnRenamed("value", "review"))
+
+  /** Coalesce `df` to the byte-packed partition count (see above). The
+    * size comes from the analyzed plan's statistics, which the read has
+    * already computed, so no optimizer or physical planning runs here. */
+  private def packed(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    val bytes = df.queryExecution.analyzed.stats.sizeInBytes
+    val maxBytes = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    val bySize = ((bytes + maxBytes - 1) / maxBytes).min(Int.MaxValue).toInt
+    df.coalesce(math.max(spark.sparkContext.defaultParallelism, bySize))
+  }
 
   /** S6 TSV prediction sink: `docid\tlabel` lines. Distributed write;
     * `single=true` coalesces to one golden file (small outputs only —
