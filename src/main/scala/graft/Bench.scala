@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.util.Locale
+import Harness.fmt3
 
 /** Per-round benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line:
@@ -14,56 +13,20 @@ import java.util.Locale
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = HostCalib.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-bench")
 
     // SPARK_GRAFT_WARM=N re-runs each query N extra times and reports the
     // fastest — steady-state data-path cost with parse/codegen/scheduling
     // constants amortized. Default 0 = cold-per-query, the driver's mode.
     val warm = sys.env.getOrElse("SPARK_GRAFT_WARM", "0").toInt
 
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // Deterministic between-query cleanup. clearCache() drops SQL-
-        // cached frames, but localCheckpoint blocks (dedup/canonicalize
-        // intermediates) are RDD-persisted and only freed when the GC +
-        // ContextCleaner get around to them — letting them pile up across
-        // the sweep makes cleaner/GC stalls land on whichever heavy query
-        // runs next (measured: q45 5.4s → 34.8s in a full sweep without
-        // this). The blocks are garbage once the query's write finished,
-        // so free them synchronously here, OUTSIDE the timed window.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        // Broadcast blocks and codegen classloaders are freed by the
-        // ContextCleaner only after a DRIVER GC notices they're
-        // unreachable. Across a 60+ query sweep the backlog grows until
-        // collection lands mid-query on whichever entry runs late in the
-        // sweep (measured: q64 3.5 s fresh vs 71 s as sweep query #63,
-        // with q51 298 s in the worst 8g-heap run). One explicit GC here,
-        // OUTSIDE the timed window, drains the backlog each iteration.
-        System.gc()
-        dt
-      } catch {
+    def runOnce(name: String): Double =
+      try Harness.timeNoop(spark)(SparkEntry.queries(name)(spark, sfDir))
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
       }
-    }
 
     def run(name: String): Double = {
       val times = (0 to warm).map(_ => runOnce(name))
@@ -84,14 +47,7 @@ object Bench {
       try { spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count(); () }
       catch { case _: Throwable => () }
     }
-    // environment fingerprint: machine load outside this JVM showed up as
-    // 2.4x total-time swings between otherwise identical runs — recording
-    // loadavg at both ends makes a contaminated run self-identifying
-    // instead of a cross-round mystery.
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ")(0)
-      catch { case _: Throwable => "-1" }
-    val loadStart = loadavg()
+    val loadStart = Harness.loadavg()
     // fixed-query session warm-up (first catalog entry, NOT the filtered
     // head): with args filters the old names.head warm-up varied by
     // subset, making subset runs not strictly comparable to full sweeps
@@ -101,26 +57,7 @@ object Bench {
     // a fixed in-JVM probe at both ends makes a slow-window sweep
     // self-identifying without cross-referencing other artifacts
     val calibStart = HostCalib.seconds(spark)
-    // Idle-window gate (r17 verdict item 8): a sweep started on a loaded
-    // host produced a 252 s total and a 44.8 s q82 cell that two same-HEAD
-    // pairing runs refuted — only the calib/load stamps rescued the
-    // reading. Make the artifact self-adjudicating: compare calib_start
-    // against the idle reference (~1.9 s at parallelism 32 — only
-    // meaningful at that parallelism) and stamp `window_ok` into env.
-    // SPARK_GRAFT_REQUIRE_IDLE=1 refuses outright (manual regen mode);
-    // the default loudly marks so the driver's automated run never breaks.
-    val idleRef = sys.env.getOrElse("SPARK_GRAFT_IDLE_REF", "1.9").toDouble
-    val windowOk = spark.sparkContext.defaultParallelism != 32 ||
-      calibStart <= idleRef * 1.15
-    if (!windowOk) {
-      System.err.println(f"[bench] WINDOW-CONTAMINATED calib_start=$calibStart%.3f " +
-        f"> 1.15 x idle_ref=$idleRef%.2f — absolute cells from this sweep are " +
-        "inflated; re-run on an idle host or read PAIRING ratios instead")
-      if (sys.env.get("SPARK_GRAFT_REQUIRE_IDLE").contains("1")) {
-        System.err.println("[bench] SPARK_GRAFT_REQUIRE_IDLE=1 — refusing to sweep")
-        spark.stop(); sys.exit(3)
-      }
-    }
+    val windowOk = Harness.windowOk(spark, calibStart, "bench")
     val results = names.map(n => n -> run(n))
     // Variance instrument (r16 item 5, generalized per r17 verdict item
     // 1): single-shot sweep cells for cache-materializing and streaming
@@ -161,23 +98,22 @@ object Bench {
       }
     }
     val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = loadavg()
+    val loadEnd = Harness.loadavg()
 
-    def f(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
     val queryVarJson = queryVar.map { case (n, (sw, mn, med, samples)) =>
-      s""""$n":{"sweep":${f(sw)},"min":${f(mn)},"median":${f(med)},"samples":[${samples.map(f).mkString(",")}]}"""
+      s""""$n":{"sweep":${fmt3(sw)},"min":${fmt3(mn)},"median":${fmt3(med)},"samples":[${samples.map(fmt3).mkString(",")}]}"""
     }.mkString("{", ",", "}")
-    val qs = results.map { case (k, v) => s""""$k":${f(v)}""" }
+    val qs = results.map { case (k, v) => s""""$k":${fmt3(v)}""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val env = s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},""" +
       s""""warm":$warm,"load_start":$loadStart,"load_end":$loadEnd,""" +
-      s""""calib_start":${f(calibStart)},"calib_end":${f(calibEnd)},""" +
+      s""""calib_start":${fmt3(calibStart)},"calib_end":${fmt3(calibEnd)},""" +
       s""""calib_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""window_ok":$windowOk,"idle_ref":$idleRef,""" +
-      s""""calib_note":"HostCalib fixed ALU probe, seconds; idle-host reference ~1.9 AT parallelism 32 — stamps are only comparable at equal calib_parallelism (the probe partitions by it); window_ok = calib_start within 1.15x idle_ref"}"""
+      s""""window_ok":$windowOk,"idle_ref":${Harness.idleRef},""" +
+      s""""calib_note":"${Harness.CalibNote}"}"""
     val full =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":$qs,""" +
         s""""query_variance":$queryVarJson,"sf":"$sfDir",$env}"""
     // The FULL per-query map (140 queries ≈ 4 KB) overflows the ~2 KB
     // stdout tail the driver keeps, so its regex never recovered the
@@ -193,11 +129,11 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
-      .map { case (k, v) => s""""$k":${f(v)}""" }.mkString("{", ",", "}")
+      .map { case (k, v) => s""""$k":${fmt3(v)}""" }.mkString("{", ",", "}")
     val queryVarShort = queryVar.map { case (n, (_, mn, med, _)) =>
-      s""""$n":{"min":${f(mn)},"median":${f(med)}}"""
+      s""""$n":{"min":${fmt3(mn)},"median":${fmt3(med)}}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec",""" +
+    println(s"""{"metric":"total","value":${fmt3(total)},"unit":"sec",""" +
       s""""queries":$slowest,"queries_shown":"15 slowest of ${results.size}",""" +
       s""""query_variance":$queryVarShort,""" +
       s""""queries_file":"$outPath","sf":"$sfDir",$env}""")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** r15 audit, r16 round-gate: walk every catalog query's plan,
   * janino-compile its whole-stage-codegen units, and report the three
@@ -114,17 +114,15 @@ object CodegenAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outPath = sys.env.getOrElse("GRAFT_AUDIT_OUT", "CODEGEN_AUDIT.json")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-codegen-audit")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // AQE wraps the plan; codegenToSeq sees nothing
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE wraps the plan and codegenToSeq sees nothing. Set as a JVM
+    // property before the session exists, so it lands in the SparkConf
+    // that the streaming entries' per-query session clones
+    // (StreamStage.streamSession) start from; a conf.set on the returned
+    // session would not reach them.
+    sys.props("spark.sql.adaptive.enabled") = "false"
+    // pinned at SparkSpec's local[4], the parallelism CODEGEN_AUDIT.json
+    // and CodegenAuditSpec share
+    val spark = Harness.session("graft-codegen-audit", cpus = "4")
     var rows = List.empty[(String, UnitStats)]
     var skipped = List.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

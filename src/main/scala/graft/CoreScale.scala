@@ -1,9 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
+import Harness.fmt3
 
 /** Core-scaling duel at a replicated factor (r19, verdict item 5).
   *
@@ -55,19 +54,8 @@ object CoreScale {
     val factor = if (args.length > 1) args(1).toInt else 10
     val cpus = HostCalib.cpus
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corescale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val loadStart = Harness.loadavg()
+    val spark = Harness.session("graft-corescale")
 
     val dirs = Seq(
       ScaleBench.ensureDocuments(spark, baseDir, factor),
@@ -79,28 +67,15 @@ object CoreScale {
     // window stamp AFTER corpus synthesis (its I/O would contaminate)
     val calibStart = HostCalib.seconds(spark)
 
-    def time(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-      dt
-    }
-    def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
-
     val Reps = 5
     val cells = Cohort.flatMap { name =>
       try {
         spark.sparkContext.setJobDescription(s"corescale x$factor $name")
-        val ts = (1 to Reps).map(_ => time(name))
-        val timed = ts.drop(1).sorted
-        val med = (timed(1) + timed(2)) / 2.0
-        println(s"[corescale] cores=$cpus x$factor $name median=${fmt(med)} " +
-          s"runs=${ts.map(fmt).mkString(",")}")
+        val ts = (1 to Reps).map(_ =>
+          Harness.timeNoop(spark)(SparkEntry.queries(name)(spark, dir)))
+        val med = Harness.medianOfLast4(ts)
+        println(s"[corescale] cores=$cpus x$factor $name median=${fmt3(med)} " +
+          s"runs=${ts.map(fmt3).mkString(",")}")
         Some(name -> (med, ts))
       } catch { case e: Throwable =>
         println(s"[corescale] cores=$cpus x$factor $name FAILED: " +
@@ -109,15 +84,15 @@ object CoreScale {
       }
     }
     val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
+    val loadEnd = Harness.loadavg()
 
     val cellsJson = cells.map { case (n, (med, ts)) =>
-      s""""$n":{"median":${fmt(med)},"runs":[${ts.map(fmt).mkString(",")}]}"""
+      s""""$n":{"median":${fmt3(med)},"runs":[${ts.map(fmt3).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     val json =
       s"""{"cores":$cpus,"factor":$factor,"reps":$Reps,"protocol":"drop-first median-of-4, noop sink, clear+gc between reps","cells":$cellsJson,""" +
         s""""env":{"load_start":$loadStart,"load_end":$loadEnd,""" +
-        s""""calib_start":${fmt(calibStart)},"calib_end":${fmt(calibEnd)},""" +
+        s""""calib_start":${fmt3(calibStart)},"calib_end":${fmt3(calibEnd)},""" +
         s""""calib_parallelism":${spark.sparkContext.defaultParallelism},""" +
         s""""calib_note":"HostCalib probe partitions by calib_parallelism; stamps are only comparable at equal parallelism"}}"""
     Files.write(Paths.get(outFile), (json + "\n").getBytes("UTF-8"))

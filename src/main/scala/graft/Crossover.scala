@@ -1,8 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.Locale
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import Harness.{fmt3, jsonStr, medianOfLast4}
 
 /** Spark half of the floor-resident crossover duel — the committed form
   * of round 13's decisive evidence (ARCHITECTURE.md "The crossover,
@@ -58,16 +58,6 @@ object Crossover {
     "q71_heavy_hitters",
     "q146_dsir_resample")
 
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/crossover")
     val factors =
@@ -86,32 +76,9 @@ object Crossover {
       case None => Cohort
     }
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
+    val loadStart = Harness.loadavg()
     val cpus = HostCalib.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crossover")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // builder runs INSIDE the timed region: q107's tier census is
-    // plan-construction work and belongs to the operator's cost
-    def time(build: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      build.write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc() // same debris fix as Bench/ScaleBench
-      dt
-    }
-    def fmt(d: Double): String = "%.3f".formatLocal(Locale.ROOT, d)
+    val spark = Harness.session("graft-crossover")
 
     // q88/q97/q107/q146 read documents, q64/q72/q71 lineitem, q42
     // embeddings — all in the shared per-factor corpus dir so the duck
@@ -138,21 +105,7 @@ object Crossover {
     // host-window stamp after the corpora are ensured (synthesis I/O
     // would contaminate the reading) — see HostCalib
     val calibStart = HostCalib.seconds(spark)
-    // Idle-window gate (r17 verdict item 8): CROSSOVER_r17 ran at
-    // load_end 15.8/21.8 and a contaminated window inverted a q72 duel
-    // verdict once that round — mark (or refuse, under
-    // SPARK_GRAFT_REQUIRE_IDLE=1) instead of relying on the reader.
-    val idleRef = sys.env.getOrElse("SPARK_GRAFT_IDLE_REF", "1.9").toDouble
-    val windowOk = spark.sparkContext.defaultParallelism != 32 ||
-      calibStart <= idleRef * 1.15
-    if (!windowOk) {
-      System.err.println(f"[crossover] WINDOW-CONTAMINATED calib_start=" +
-        f"$calibStart%.3f > 1.15 x idle_ref=$idleRef%.2f")
-      if (sys.env.get("SPARK_GRAFT_REQUIRE_IDLE").contains("1")) {
-        System.err.println("[crossover] SPARK_GRAFT_REQUIRE_IDLE=1 — refusing to sweep")
-        spark.stop(); sys.exit(3)
-      }
-    }
+    val windowOk = Harness.windowOk(spark, calibStart, "crossover")
 
     val Reps = 5 // first dropped as warmup, median of the remaining 4
     val runs = scala.collection.mutable.LinkedHashMap[(String, Int), Seq[Double]]()
@@ -160,12 +113,11 @@ object Crossover {
       cohort.foreach { name =>
         val dir = corpora(factor)
         try {
-          val ts = (1 to Reps).map(_ => time(buildQuery(name, factor, dir)))
+          val ts = (1 to Reps).map(_ =>
+            Harness.timeNoop(spark)(buildQuery(name, factor, dir)))
           runs((name, factor)) = ts
-          val timed = ts.drop(1).sorted
-          val med = (timed(1) + timed(2)) / 2.0
-          println(s"[crossover] x$factor $name median=${fmt(med)} " +
-            s"runs=${ts.map(fmt).mkString(",")}")
+          println(s"[crossover] x$factor $name median=${fmt3(medianOfLast4(ts))} " +
+            s"runs=${ts.map(fmt3).mkString(",")}")
         } catch { case e: Throwable =>
           // a self-gated query may legitimately refuse a replicated
           // corpus (e.g. a recall floor over duplicate ties); record
@@ -177,16 +129,12 @@ object Crossover {
     }
 
     val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Files.readString(Paths.get("/proc/loadavg")).split(" ")(0)
-    def median4(ts: Seq[Double]): Double = {
-      val s = ts.drop(1).sorted
-      (s(1) + s(2)) / 2.0
-    }
+    val loadEnd = Harness.loadavg()
     val done: Seq[String] = cohort.filter(n => factors.exists(f => runs.contains((n, f))))
     val sparkJson = done.map { name =>
       val perFactor = factors.flatMap { f =>
         runs.get((name, f)).map { ts =>
-          s""""x$f": {"median": ${fmt(median4(ts))}, "runs": [${ts.map(fmt).mkString(", ")}]}"""
+          s""""x$f": {"median": ${fmt3(medianOfLast4(ts))}, "runs": [${ts.map(fmt3).mkString(", ")}]}"""
         }
       }.mkString(", ")
       s"${jsonStr(name)}: {$perFactor}"
@@ -212,7 +160,7 @@ object Crossover {
          |  "corpora": "ScaleBench replicated documents (synth v${ScaleBench.SynthVersion}), same cache as the scaling table"
          |},
          |"corpora": {$corporaJson},
-         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, "load_start": $loadStart, "load_end": $loadEnd, "calib_start": ${fmt(calibStart)}, "calib_end": ${fmt(calibEnd)}, "calib_parallelism": ${spark.sparkContext.defaultParallelism}, "window_ok": $windowOk, "idle_ref": $idleRef, "calib_note": "HostCalib fixed ALU probe, seconds; idle-host reference ~1.9 AT parallelism 32 — stamps are only comparable at equal calib_parallelism (the probe partitions by it); window_ok = calib_start within 1.15x idle_ref"},
+         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, "load_start": $loadStart, "load_end": $loadEnd, "calib_start": ${fmt3(calibStart)}, "calib_end": ${fmt3(calibEnd)}, "calib_parallelism": ${spark.sparkContext.defaultParallelism}, "window_ok": $windowOk, "idle_ref": ${Harness.idleRef}, "calib_note": "${Harness.CalibNote}"},
          |"spark": {
          |  $sparkJson
          |},

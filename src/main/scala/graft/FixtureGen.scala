@@ -167,14 +167,9 @@ object FixtureGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-fixtures")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // pinned at SparkSpec's local[4], the parallelism GoldenSpec and
+    // DistributionSpec check the goldens and pins at
+    val spark = Harness.session("graft-fixtures", cpus = "4")
 
     val root = Paths.get(CorpusDir)
     if (!Files.exists(root.resolve("train/pos"))) writeCorpus(root)

@@ -55,12 +55,7 @@ object HostCalib {
 
   /** Standalone sizing/inspection entry: prints one probe value. */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-hostcalib")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-hostcalib")
     // one untimed warm-up drains JIT/codegen cold start from the stamp
     seconds(spark)
     (1 to 3).foreach(i => println(f"calib[$i] ${seconds(spark)}%.3f s"))

@@ -181,30 +181,8 @@ object ScaleBench {
     val opFilter: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_OPS").map(_.split(",").map(_.trim).toSet)
     def opSelected(name: String): Boolean = opFilter.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master(s"local[${HostCalib.cpus}]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-scalebench")
 
-    def time(f: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f.write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // same fix as Bench: broadcast/codegen debris is only freed when a
-      // driver GC runs; without this the backlog collects mid-op and the
-      // sweep tail reads 10-50× slow (measured factor-10 quality_rules
-      // 409 s vs ~13 s healthy)
-      System.gc()
-      dt
-    }
     def fmt(d: Double): String = "%.2f".formatLocal(Locale.ROOT, d)
 
     // run `f` with Graph's small-graph fast path disabled, so the
@@ -649,7 +627,7 @@ object ScaleBench {
           Similarity.ivfPqIndexRead(spark, s"$dir/ivfpq_index.parquet"),
           emb, queries100, 10, rerank = 50)))
       val timed = (ops ++ annOps).filter(p => opSelected(p._1))
-        .map { case (name, mk) => name -> time(mk()) }
+        .map { case (name, mk) => name -> Harness.timeNoop(spark)(mk()) }
       val js = timed.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
       val rows = spark.read.parquet(s"$dir/documents.parquet").count()
       println(s"""{"factor":$factor,"rows":$rows,$js}""")

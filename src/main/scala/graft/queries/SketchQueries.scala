@@ -463,7 +463,7 @@ object SketchQueries {
     // estimate side to the ORACLE's own form — union the per-flag
     // register frame with its 'ALL' relabeling, ONE merge agg, ONE
     // estimate agg — replacing the separate flagEst/allEst branches +
-    // a 768-row localCheckpoint (duel in tools/Q72Duel.scala: min
+    // a 768-row localCheckpoint (duel in `git show d1198c1:tools/Q72Duel.scala`: min
     // 1.014 → 0.852 s at sf0.1, all variants bit-identical; the
     // per-flag scopes pass through the merge untouched because
     // (flag, bucket) rows are already unique, so max is the identity).

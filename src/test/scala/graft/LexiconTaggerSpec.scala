@@ -71,8 +71,9 @@ class LexiconTaggerSpec extends SparkSpec {
     info(f"rule accuracy $ruleAcc%.3f, lexicon accuracy $lexAcc%.3f on ${n.toInt} tokens")
     assert(lexAcc > ruleAcc, s"no lift: lexicon $lexAcc vs rules $ruleAcc")
     // floors a hair under the measured values (0.817 / 0.888 on the
-    // 4438-token sample — the r18 +1985-token extension in
-    // tools/pos_gold_extend_r18.py, authored as held-out prose under
+    // 4438-token sample — the r18 +1985-token extension (its one-off
+    // script: `git show d1198c1:tools/pos_gold_extend_r18.py`),
+    // authored as held-out prose under
     // the same validator, follows the r16 extension's provenance
     // discipline) so regressions fail loudly. The rule floor TIGHTENS
     // 0.80 -> 0.81 with the larger sample; the HAND-lexicon layer
@@ -239,7 +240,8 @@ class LexiconTaggerSpec extends SparkSpec {
     assert(hmm >= ctx, s"trained layer regressed below hand rules: $hmm < $ctx")
     // measured 0.8882 / 0.9029 / 0.9538 on the 4438-token gold sample
     // (r18, three duelled levers all adopted: the ~doubled training
-    // corpus — tools/pos_train_extend_r18.py, emission lexicon 358 →
+    // corpus — one-off script `git show d1198c1:tools/pos_train_extend_r18.py`,
+    // emission lexicon 358 →
     // ~800 forms — moved HMM 0.9227 → 0.9376 on the extended gold; the
     // capitalization-context decode branch added 0.9376 → 0.9387; and
     // the bilateral OOV decode — left × right transition scoring of

@@ -1,20 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: dump a catalog query's generated code units to /tmp for
   * method-size inspection (used to adjudicate the r18 q53b NEAR-LIMIT
   * entry). Not part of the library — copy under src/ to run. */
 object CgDump {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q53b_pos_hmm_dist")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("cg-dump").config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    sys.props("spark.sql.adaptive.enabled") = "false" // as in CodegenAudit
+    val spark = graft.Harness.session("cg-dump", cpus = "4")
     val df = graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
     val codes = org.apache.spark.sql.execution.debug.codegenStringSeq(
       df.queryExecution.executedPlan)

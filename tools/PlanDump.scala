@@ -3,14 +3,13 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named catalog queries to files.
   *
   * Usage: runMain graft.PlanDump <dataDir> <outDir> <suffix> <q1> [q2 ...]
   * Writes <outDir>/<qname>_<suffix>.txt per query. Lives in tools/ (not
-  * compiled); copy under src/main/scala/graft/ to run, like Scratch.scala.
+  * compiled); copy under src/main/scala/graft/ to run.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,21 +19,8 @@ object PlanDump {
     val names   = args.drop(3).toSeq
     Files.createDirectories(outDir)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Mirror Bench's session config exactly so plans match what the
-    // bench executes (AQE, graft extensions, partition count).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session, so plans match what the bench executes
+    val spark = Harness.session("graft-plandump")
 
     val catalog = SparkEntry.queries
     names.foreach { n =>

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ml.{LexiconTagger, PosLexicon}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch error scan for the pos_gold extension: prints the HMM
@@ -9,11 +8,7 @@ import org.apache.spark.sql.functions._
   * floors are re-pinned. */
 object PosErrScan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("pos-errscan").config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session("pos-errscan", cpus = "4")
     import spark.implicits._
     val gold = spark.read.option("sep", "\t").option("header", "true")
       .csv("fixtures/pos_gold.tsv").collect()
