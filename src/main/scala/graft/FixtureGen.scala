@@ -3,15 +3,17 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import graft.ml.GraftPipelines
 import graft.sources.CorpusReader
+import org.apache.spark.ml.Pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.Random
 
 /** Regenerates the committed regression fixtures under fixtures/:
-  * a deterministic mini-corpus (FIXTURES.md §A1 shape) and the golden
-  * predictions of the seeded script5 pipeline over it. GoldenSpec
-  * asserts the live pipeline still reproduces the committed golden —
-  * the cross-round drift guard the reference's classifications_*.txt
+  * a deterministic mini-corpus (FIXTURES.md §A1 shape), the golden
+  * predictions of every seeded scripted pipeline over it, and their
+  * neg-fraction pins on the synthetic corpus. GoldenSpec asserts the
+  * live pipelines still reproduce the committed goldens — the
+  * cross-round drift guard the reference's classifications_*.txt
   * files couldn't be (theirs were unseeded; ours are pinned).
   *
   * Run: sbt "runMain graft.FixtureGen"
@@ -19,9 +21,8 @@ import scala.util.Random
 object FixtureGen {
 
   val CorpusDir = "fixtures/corpus"
-  val GoldenFile = "fixtures/golden_script5.tsv"
 
-  /** Committed per-fitter neg-fraction pins on the seeded synthetic
+  /** Committed per-pipeline neg-fraction pins on the seeded synthetic
     * corpus (DistributionSpec's ±2pp drift tripwire). Regenerated by
     * [[main]] alongside the goldens, so a conscious re-pin after a
     * Spark upgrade or pipeline edit is ONE command — the same
@@ -32,7 +33,7 @@ object FixtureGen {
     * single computation DistributionSpec asserts against and [[main]]'s
     * pin regeneration emits, so the pins can never drift from the
     * spec's own arithmetic. */
-  def negFraction(scored: org.apache.spark.sql.DataFrame): (Double, Long) = {
+  def negFraction(scored: DataFrame): (Double, Long) = {
     val counts = scored.select(col("prediction").cast("double"))
       .groupBy("prediction").count()
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
@@ -51,28 +52,13 @@ object FixtureGen {
   /** Every scripted pipeline with a committed golden — one TSV per
     * variant, so the "script-equivalent pipelines" claim is pinned for
     * all of them, not just script5. */
-  def goldenPipelines: Map[String, () => org.apache.spark.ml.Pipeline] = Map(
+  def goldenPipelines: Map[String, () => Pipeline] = Map(
     "script1" -> (() => GraftPipelines.script1()),
     "script2" -> (() => GraftPipelines.script2()),
+    "script3" -> (() => GraftPipelines.script3()),
     "script4" -> (() => GraftPipelines.script4()),
     "script5" -> (() => GraftPipelines.script5()),
     "reglogit" -> (() => GraftPipelines.reglogit()))
-
-  /** Fit-function form of the scripted variants: train → (test → scored).
-    * Generalizes goldenPipelines so script3's two-phase fit (the χ²
-    * selector's slice indices depend on the fitted vectors,
-    * GraftPipelines.script3Fit) gets a committed golden too — the
-    * reference commits `classifications_script3.txt` alongside the
-    * single-pipeline scripts (`script3_ter.py:199-210`). */
-  def goldenFitters: Map[String, DataFrame => DataFrame => DataFrame] =
-    goldenPipelines.map { case (name, mk) =>
-      name -> ((train: DataFrame) => {
-        val model = mk().fit(train); (test: DataFrame) => model.transform(test)
-      })
-    } + ("script3" -> ((train: DataFrame) => {
-      val (vecModel, downstream) = GraftPipelines.script3Fit(train)
-      (test: DataFrame) => downstream.transform(vecModel.transform(test))
-    }))
 
   def goldenFileFor(name: String): String = s"fixtures/golden_$name.tsv"
 
@@ -104,25 +90,15 @@ object FixtureGen {
 
   /** Fit one seeded scripted variant on the corpus and return the
     * (name, prediction) golden rows, sorted. */
-  def goldenRowsForFitter(spark: SparkSession, corpus: String,
-                          fit: DataFrame => DataFrame => DataFrame): Seq[(String, Double)] = {
+  def goldenRowsFor(spark: SparkSession, corpus: String,
+                    pipeline: Pipeline): Seq[(String, Double)] = {
     val clean = (df: DataFrame) =>
       df.withColumn("review", graft.functions.TextFunctions.cleanLower(col("review")))
     val train = clean(CorpusReader.loadLabeled(spark, s"$corpus/train"))
-    val scored = fit(train)(clean(CorpusReader.loadUnknown(spark, s"$corpus/test")))
+    val scored = pipeline.fit(train).transform(clean(CorpusReader.loadUnknown(spark, s"$corpus/test")))
     scored.select("name", "prediction").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq
   }
-
-  /** Pipeline overload (kept for source compatibility). */
-  def goldenRowsFor(spark: SparkSession, corpus: String,
-                    pipeline: org.apache.spark.ml.Pipeline): Seq[(String, Double)] =
-    goldenRowsForFitter(spark, corpus,
-      train => { val m = pipeline.fit(train); m.transform(_) })
-
-  /** script5 golden rows (kept for source compatibility). */
-  def goldenRows(spark: SparkSession, corpus: String): Seq[(String, Double)] =
-    goldenRowsFor(spark, corpus, GraftPipelines.script5())
 
   // ------------------------------------------- distribution-level corpus
 
@@ -174,18 +150,18 @@ object FixtureGen {
     val root = Paths.get(CorpusDir)
     if (!Files.exists(root.resolve("train/pos"))) writeCorpus(root)
     Files.createDirectories(Paths.get("fixtures"))
-    goldenFitters.toSeq.sortBy(_._1).foreach { case (name, fit) =>
-      val rows = goldenRowsForFitter(spark, CorpusDir, fit)
+    goldenPipelines.toSeq.sortBy(_._1).foreach { case (name, mk) =>
+      val rows = goldenRowsFor(spark, CorpusDir, mk())
       val tsv = rows.map { case (n, p) => s"$n\t$p" }.mkString("", "\n", "\n")
       Files.writeString(Paths.get(goldenFileFor(name)), tsv)
       println(s"wrote ${rows.size} golden rows to ${goldenFileFor(name)}")
     }
-    // distribution-level pins: each fitter's measured neg fraction on
+    // distribution-level pins: each pipeline's measured neg fraction on
     // the seeded ~2k-doc corpus (DistributionSpec reads this file)
     val (train, test) = syntheticCorpus(spark)
     train.cache().count()
-    val pins = goldenFitters.toSeq.sortBy(_._1).map { case (name, fit) =>
-      val (frac, total) = negFraction(fit(train)(test))
+    val pins = goldenPipelines.toSeq.sortBy(_._1).map { case (name, mk) =>
+      val (frac, total) = negFraction(mk().fit(train).transform(test))
       require(total == 400L, s"$name scored $total docs, expected 400")
       println(s"measured neg fraction $name = $frac")
       s"$name\t$frac"

@@ -86,9 +86,6 @@ object TextFunctions {
   def nonStopwordCount(tokens: Column, stopwords: Seq[String] = NltkStopwords): Column =
     graft.plans.StopwordCountExpr.column(tokens, stopwords, matchStopwords = false)
 
-  /** Reference P9: per-document distinct tokens. */
-  def distinctTokens(tokens: Column): Column = array_distinct(tokens)
-
   /** Reference T4/T5: n-grams as space-joined consecutive token runs,
     * via the codegen'd [[graft.plans.NGramArray]] expression (the
     * composed `transform(sequence(...), i => concat_ws(" ", slice(...)))`
@@ -189,9 +186,6 @@ object TextFunctions {
     val toks = if (distinct) array_distinct(tokens) else tokens
     simhashFromHashes(transform(toks, t => md5Hash60(t)))
   }
-
-  /** Token count (whitespace tokenization). */
-  def tokenCount(text: Column): Column = size(whitespaceTokens(text))
 
   /** Whitespace character class, spelled out instead of `\s`: Java's
     * `\s` includes vertical tab (\x0B), RE2's does not — inlining the

@@ -129,21 +129,39 @@ object GraftPipelines {
         .setFeaturesCol("bigramVectors").setLabelCol("target_indexed")
         .setMaxIter(30).setRegParam(0.01)))
 
+  /** The reference's 11 authorized POS trigram patterns (`script4.py:124`). */
+  val AuthorizedTrigrams: Seq[String] = Seq(
+    "NOUN VERB ADJ", "PRON VERB ADJ", "ADP ADJ NOUN", "VERB ADJ NOUN",
+    "PRON VERB PRON", "PRON ADV VERB", "ADV ADJ NOUN", "VERB ADV ADJ",
+    "PRON VERB DET", "DET ADJ NOUN", "VERB DET NOUN")
+
+  /** script4_bis reduced set (`script4_bis.py:76`). */
+  val ReducedTrigrams: Seq[String] = Seq("NOUN VERB ADJ")
+
+  /** F3: `selectedTrigrams` keeps word-trigram i of `wordTrigrams` iff
+    * tag-trigram i of `tagTrigrams` is in `patterns`
+    * (`script4.py:124-137`). The reference does this in a Python map
+    * over a broadcast set; here it is one higher-order SQL expression —
+    * zip_with → filter → transform, no UDF. */
+  def posPatternFilter(patterns: Seq[String]): SQLTransformer = {
+    val auth = patterns.map(p => s"'$p'").mkString(", ")
+    new SQLTransformer().setStatement(
+      "SELECT *, transform(filter(zip_with(wordTrigrams, tagTrigrams, " +
+        s"(w, t) -> struct(w AS w, t AS t)), s -> s.t IN ($auth)), " +
+        "s -> s.w) AS selectedTrigrams FROM __THIS__")
+  }
+
   /** script4: unigrams + POS-pattern-filtered trigrams, two vocabularies
     * concatenated (`script4.py:82-183`) → LR. The index-offset concat of
     * the reference (trigram idx + |uniVocab|, `script4.py:174`) is
     * exactly VectorAssembler over the two CountVectorizer outputs. */
-  def script4(reduced: Boolean = false): Pipeline = {
-    val pats = if (reduced) PosPatternFilter.ReducedTrigrams
-               else PosPatternFilter.AuthorizedTrigrams
+  def script4(reduced: Boolean = false): Pipeline =
     new Pipeline().setStages(Array(
       wordPunctTokenizer("review", "words"),
       new PosTagger().setInputCol("words").setOutputCol("tags"),
       ngram("words", "wordTrigrams", 3),
       ngram("tags", "tagTrigrams", 3),
-      new PosPatternFilter().setWordsCol("wordTrigrams")
-        .setTagsCol("tagTrigrams").setOutputCol("selectedTrigrams")
-        .setPatterns(pats),
+      posPatternFilter(if (reduced) ReducedTrigrams else AuthorizedTrigrams),
       binaryVectorizer("words", "uniVectors"),
       binaryVectorizer("selectedTrigrams", "triVectors"),
       new VectorAssembler()
@@ -153,7 +171,6 @@ object GraftPipelines {
       new LogisticRegression()
         .setFeaturesCol("featureVectors").setLabelCol("target_indexed")
         .setMaxIter(30).setRegParam(0.01)))
-  }
 
   /** main_reglogit: whitespace split → per-doc distinct → binary vectors
     * → LR (`main_reglogit.py:55-91`). The per-doc `set()` (P9) is an
@@ -177,27 +194,39 @@ object GraftPipelines {
       labelIndexer(),
       new NaiveBayes().setFeaturesCol("features").setLabelCol("target_indexed")))
 
-  // ------------------------------------------------- script3: chi² path
-
-  /** script3_ter: tokenize → bigrams → binary vectors → χ² p≤0.5 →
-    * LR. Two-phase (selector indices depend on the fitted vectors), so
-    * exposed as fit-producing-model rather than one static Pipeline. */
-  def script3Fit(train: DataFrame, maxPValue: Double = 0.5): (PipelineModel, PipelineModel) = {
-    val vectorize = new Pipeline().setStages(Array(
+  /** script3_ter: tokenize → bigrams → binary vectors → χ² p ≤ 0.5 →
+    * LR (F1, `script3_ter.py:100-136`; `script3_bis.py` used 0.3). */
+  def script3(maxPValue: Double = 0.5): Pipeline = {
+    // fpr rejects a threshold above 1, and nextUp(1.0) is above 1
+    require(maxPValue < 1.0, s"maxPValue $maxPValue must be below 1")
+    new Pipeline().setStages(Array(
       wordPunctTokenizer("review", "words"),
       ngram("words", "bigrams", 2),
       binaryVectorizer("bigrams", "bigramVectors"),
-      labelIndexer()))
-    val vecModel = vectorize.fit(train)
-    val vecTrain = vecModel.transform(train)
-    val slicer = ChiSqSelectorByPValue.fit(
-      vecTrain, "bigramVectors", "target_indexed", maxPValue, "selectedVectors")
-    val downstream = new Pipeline().setStages(Array(
-      slicer,
+      labelIndexer(),
+      new UnivariateFeatureSelector()
+        .setFeatureType("categorical").setLabelType("categorical")
+        .setSelectionMode("fpr")
+        // fpr keeps p < threshold, the reference keeps p <= maxPValue;
+        // for doubles p < nextUp(x) holds exactly when p <= x
+        .setSelectionThreshold(java.lang.Math.nextUp(maxPValue))
+        .setFeaturesCol("bigramVectors").setLabelCol("target_indexed")
+        .setOutputCol("selectedVectors"),
       new LogisticRegression()
         .setFeaturesCol("selectedVectors").setLabelCol("target_indexed")
         .setMaxIter(30).setRegParam(0.01)))
-    (vecModel, downstream.fit(vecTrain))
+  }
+
+  /** [[script3]] fitted once and returned as (vectorizer model,
+    * selector+LR model). Re-wrapping already-fitted stages through
+    * `Pipeline.fit` runs no job; the second slice is checked against
+    * the (lazily) vectorized schema. */
+  def script3Fit(train: DataFrame, maxPValue: Double = 0.5): (PipelineModel, PipelineModel) = {
+    val (vec, down) = script3(maxPValue).fit(train).stages.splitAt(4)
+    val vecModel = new Pipeline().setStages(vec.toArray[PipelineStage]).fit(train)
+    val downModel = new Pipeline().setStages(down.toArray[PipelineStage])
+      .fit(vecModel.transform(train))
+    (vecModel, downModel)
   }
 
   // -------------------------------------------------- evaluation/tuning

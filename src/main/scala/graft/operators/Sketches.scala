@@ -524,7 +524,4 @@ object Sketches {
       }
     }
   }
-
-  /** Column-side bin assignment matching [[histQuantiles]]'s contract. */
-  def histBin(value: Column, width: Double): Column = floor(value / width)
 }

@@ -100,18 +100,6 @@ object GraftSqlBridge {
     out
   }
 
-  /** Raw internalCreateDataFrame passthrough WITHOUT the registry —
-    * exists so CodegenAuditSpec can pin that an RDD scan this bridge
-    * did not produce reads `opaque` in the audit (never silently
-    * passes). Not for production use: [[mapPartitionsInternal]] is
-    * the registered form. */
-  def unregisteredInternalDataFrame(
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType,
-      spark: SparkSession): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
-
   /** Split a sort Column (`c.desc` / `c.asc` / bare) into its value
     * column and direction. Spark 4 Columns carry a ColumnNode, not a
     * catalyst Expression — `expression(c)` would wrap the SortOrder in

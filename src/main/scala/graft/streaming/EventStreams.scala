@@ -28,14 +28,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"),
         col("event_type"), col("n_events"), col("total_value"))
 
-  /** Sliding-window per-type rate (10 min windows every 5 min). */
-  def slidingRate(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n_events"))
-
   /** Streaming exact-dedup: drop repeated ids within the watermark
     * horizon — the streaming twin of Dedup.exactDedup. State holds only
     * ids newer than the watermark (bounded), which is the correct

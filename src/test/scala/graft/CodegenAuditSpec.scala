@@ -73,12 +73,11 @@ class CodegenAuditSpec extends SparkSpec {
     assert(audited(fn(spark, sf)).opaque == 0,
       "q42's partial-cap barrier must be registered, not opaque")
     // a foreign RDD scan (not from the bridge) is opaque by contract
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val foreignRdd = spark.range(3).queryExecution.toRdd
-      .mapPartitions(identity, preservesPartitioning = true)
-    val foreign = org.apache.spark.sql.GraftSqlBridge
-      .unregisteredInternalDataFrame(foreignRdd,
-        StructType(Seq(StructField("id", LongType, nullable = false))), spark)
+    val foreign = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(0L), Row(1L), Row(2L))),
+      StructType(Seq(StructField("id", LongType, nullable = false))))
     assert(audited(foreign).opaque == 1,
       "an unregistered RDD scan must be reported opaque")
   }

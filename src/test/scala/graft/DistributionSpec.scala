@@ -26,7 +26,7 @@ class DistributionSpec extends SparkSpec {
 
   // Round-12 drift pins: every scripted pipeline's neg fraction on the
   // committed seeded corpus, measured at HEAD and banded ±2pp — the
-  // per-fitter tripwire the broad reference band above can't provide.
+  // per-pipeline tripwire the broad reference band above can't provide.
   // These pin THIS repo's deterministic behavior (seeded splits, seeded
   // fits) for cross-Spark-version drift, NOT the reference's absolute
   // splits: those were observed on the 25k movie corpus and do not
@@ -41,12 +41,12 @@ class DistributionSpec extends SparkSpec {
 
   private lazy val corpus = FixtureGen.syntheticCorpus(spark)
 
-  FixtureGen.goldenFitters.foreach { case (name, fit) =>
+  FixtureGen.goldenPipelines.foreach { case (name, mk) =>
     test(s"$name label split on a balanced 2k-doc corpus stays within the reference band and its ±2pp pin") {
       val (train, test) = corpus
       // the SAME computation FixtureGen's pin-regeneration mode emits —
       // shared so the pins can never drift from the spec's arithmetic
-      val (negFrac, total) = FixtureGen.negFraction(fit(train)(test))
+      val (negFrac, total) = FixtureGen.negFraction(mk().fit(train).transform(test))
       assert(total == 400L, s"expected 400 scored docs, got $total")
       assert(negFrac >= LoNeg && negFrac <= HiNeg,
         s"$name neg fraction $negFrac outside [$LoNeg, $HiNeg] " +

@@ -7,13 +7,12 @@ import scala.jdk.CollectionConverters._
   * files must be exactly reproduced by the live pipelines over the
   * committed corpus — one golden per scripted variant (script1, script2,
   * script3, script4, script5, reglogit), so the "script-equivalent
-  * pipelines" claim is pinned for all of them, including script3's
-  * two-phase χ² fit. If Spark-version or engine changes alter behavior,
-  * this fails loudly and the goldens are consciously regenerated via
-  * `sbt "runMain graft.FixtureGen"`. */
+  * pipelines" claim is pinned for all of them. If Spark-version or
+  * engine changes alter behavior, this fails loudly and the goldens are
+  * consciously regenerated via `sbt "runMain graft.FixtureGen"`. */
 class GoldenSpec extends SparkSpec {
 
-  FixtureGen.goldenFitters.foreach { case (name, fit) =>
+  FixtureGen.goldenPipelines.foreach { case (name, mk) =>
     test(s"$name reproduces the committed golden predictions") {
       val file = Paths.get(FixtureGen.goldenFileFor(name))
       if (!Files.exists(file))
@@ -21,7 +20,7 @@ class GoldenSpec extends SparkSpec {
       val expected = Files.readAllLines(file).asScala
         .filter(_.nonEmpty)
         .map { l => val Array(n, p) = l.split("\t"); (n, p.toDouble) }.toSeq
-      val actual = FixtureGen.goldenRowsForFitter(spark, FixtureGen.CorpusDir, fit)
+      val actual = FixtureGen.goldenRowsFor(spark, FixtureGen.CorpusDir, mk())
       assert(actual == expected)
     }
   }

@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 import graft.ml._
 import graft.sources.CorpusReader
-import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.feature.UnivariateFeatureSelector
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.stat.ChiSquareTest
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -70,6 +73,21 @@ class MlPipelineSpec extends SparkSpec {
     assert(acc > 0.8, s"accuracy=$acc")
   }
 
+  test("script3's chi-squared filter keeps a feature whose p-value equals maxPValue") {
+    // the reference keeps p <= maxPValue; Spark's fpr mode alone keeps p < threshold
+    val train = CorpusReader.loadLabeled(spark, s"${FixtureGen.CorpusDir}/train")
+      .withColumn("review", graft.functions.TextFunctions.cleanLower(col("review")))
+    val vectorize = new Pipeline().setStages(GraftPipelines.script3().getStages.take(4))
+    val vectors = vectorize.fit(train).transform(train)
+    val pValues = ChiSquareTest.test(vectors, "bigramVectors", "target_indexed")
+      .head().getAs[Vector]("pValues").toArray
+    val (p, i) = pValues.zipWithIndex.filter(_._1 < 1.0).maxBy(_._1)
+    val selector = GraftPipelines.script3(maxPValue = p).getStages(4)
+      .asInstanceOf[UnivariateFeatureSelector].fit(vectors)
+    assert(selector.selectedFeatures.contains(i),
+      s"feature $i with p-value $p dropped at maxPValue = $p")
+  }
+
   test("AUC evaluator works on LR output") {
     val Array(train, test) = corpus.randomSplit(Array(0.8, 0.2), GraftPipelines.Seed)
     val model = GraftPipelines.script5().fit(train)
@@ -97,13 +115,15 @@ class MlPipelineSpec extends SparkSpec {
   }
 
   test("pipeline model persists and reloads via MLWriter (replaces pickle S7)") {
-    val dir = Files.createTempDirectory("graft-model").toString
-    val (model, _) = GraftPipelines.trainEval(corpus, GraftPipelines.script5())
-    model.write.overwrite().save(dir)
-    val back = PipelineModel.load(dir)
-    val a = model.transform(corpus).select("prediction").collect().map(_.getDouble(0))
-    val b = back.transform(corpus).select("prediction").collect().map(_.getDouble(0))
-    assert(a.sameElements(b))
+    Seq(GraftPipelines.script5(), GraftPipelines.script3()).foreach { pipeline =>
+      val dir = Files.createTempDirectory("graft-model").toString
+      val (model, _) = GraftPipelines.trainEval(corpus, pipeline)
+      model.write.overwrite().save(dir)
+      val back = PipelineModel.load(dir)
+      val a = model.transform(corpus).select("prediction").collect().map(_.getDouble(0))
+      val b = back.transform(corpus).select("prediction").collect().map(_.getDouble(0))
+      assert(a.nonEmpty && a.sameElements(b))
+    }
   }
 
   test("script3Fit's two-phase models both persist and reload (M10 + S7)") {
@@ -214,7 +234,7 @@ class MlPipelineSpec extends SparkSpec {
     val df = Seq(Tuple1(1)).toDF("x")
       .withColumn("wordTrigrams", typedLit(Seq("a good movie", "movie was long")))
       .withColumn("tagTrigrams", typedLit(Seq("DET ADJ NOUN", "NOUN VERB ADJ2")))
-    val out = new PosPatternFilter().transform(df)
+    val out = GraftPipelines.posPatternFilter(GraftPipelines.AuthorizedTrigrams).transform(df)
       .select("selectedTrigrams").first().getSeq[String](0)
     assert(out == Seq("a good movie"))
   }

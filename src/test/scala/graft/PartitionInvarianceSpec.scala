@@ -1,35 +1,34 @@
 package graft
 
 import graft.ml.GraftPipelines
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.feature.SQLTransformer
 
 /** The fitted pipelines' predictions do not depend on how the corpus is
   * partitioned: the committed fixture corpus as CorpusReader returns it,
   * in one partition, and spread over 17. */
 class PartitionInvarianceSpec extends SparkSpec {
 
-  private val fitters: Seq[(String, DataFrame => DataFrame => DataFrame)] =
-    Seq("script1", "script5", "script3").map(n => n -> FixtureGen.goldenFitters(n)) :+
-      ("naiveBayes" -> ((train: DataFrame) => {
-        val model = GraftPipelines.naiveBayes().fit(train); model.transform(_)
-      }))
+  private val pipelines: Seq[(String, () => Pipeline)] =
+    Seq("script1", "script5", "script3").map(n => n -> FixtureGen.goldenPipelines(n)) :+
+      ("naiveBayes" -> (() => GraftPipelines.naiveBayes()))
 
-  private val layouts: Seq[(String, DataFrame => DataFrame)] = Seq(
-    "as read" -> identity,
-    "repartition(1)" -> (_.repartition(1)),
-    "repartition(17)" -> (_.repartition(17)))
+  /** Stages put in front of the pipeline, so both the cleaned training
+    * and the cleaned test side are relaid out. */
+  private def repartition(n: Int): Seq[PipelineStage] =
+    Seq(new SQLTransformer().setStatement(s"SELECT /*+ REPARTITION($n) */ * FROM __THIS__"))
 
-  /** The fixture corpus's sorted (name, prediction) rows, with both
-    * sides relaid out after cleaning. */
-  private def predictions(relayout: DataFrame => DataFrame,
-                          fit: DataFrame => DataFrame => DataFrame): Seq[(String, Double)] =
-    FixtureGen.goldenRowsForFitter(spark, FixtureGen.CorpusDir, train => {
-      val score = fit(relayout(train)); test => score(relayout(test))
-    })
+  private val layouts: Seq[(String, Seq[PipelineStage])] = Seq(
+    "as read" -> Nil,
+    "repartition(1)" -> repartition(1),
+    "repartition(17)" -> repartition(17))
 
-  fitters.foreach { case (name, fit) =>
+  pipelines.foreach { case (name, mk) =>
     test(s"$name predicts the same labels under every partition layout") {
-      val byLayout = layouts.map { case (layout, relayout) => layout -> predictions(relayout, fit) }
+      val byLayout = layouts.map { case (layout, relayout) =>
+        val pipeline = new Pipeline().setStages((relayout :+ mk()).toArray)
+        layout -> FixtureGen.goldenRowsFor(spark, FixtureGen.CorpusDir, pipeline)
+      }
       val (_, asRead) = byLayout.head
       assert(asRead.nonEmpty)
       byLayout.tail.foreach { case (layout, got) =>
