@@ -52,13 +52,13 @@ object CodegenAudit {
     *
     * Plan-hiding leaves are audited THROUGH, not skipped:
     *
-    *  - RDDScanExec: a GraftSqlBridge.mapPartitionsInternal barrier
-    *    (the capped LSH path) or a registered localCheckpoint /
-    *    createDataFrame boundary carries its whole upstream pipeline
+    *  - RDDScanExec: a registered localCheckpoint or graph-kernel
+    *    createDataFrame boundary (GraftSqlBridge.localCheckpointAudited
+    *    / createDataFrameAudited) carries its whole upstream pipeline
     *    inside an inner QueryExecution that codegenStringSeq cannot
-    *    see — the bridge's registry hands the source frame back and
-    *    its stats merge in, so the round-gate invariant covers the
-    *    hot stage on BOTH sides of the barrier. An RDD-scan leaf the
+    *    see — the bridge's registry hands the source frames back and
+    *    their stats merge in, so the round-gate invariant covers the
+    *    stages on BOTH sides of the barrier. An RDD-scan leaf the
     *    registry does NOT know is counted in `opaque` and reported,
     *    never silently passed.
     *  - InMemoryTableScanExec: a `.cache()` leaf hides the cached
@@ -87,8 +87,8 @@ object CodegenAudit {
     val outer = UnitStats(srcMax, byteMax,
       units.exists(_._3.maxMethodCodeSize < 0))
     val leafStats = plan.collect {
-      case r: org.apache.spark.sql.execution.RDDScanExec =>
-        org.apache.spark.sql.GraftSqlBridge.innerPlansOf(r.rdd) match {
+      case org.apache.spark.sql.execution.RDDScanExec(_, rdd, _, _, _, _) =>
+        org.apache.spark.sql.GraftSqlBridge.innerPlansOf(rdd) match {
           case inner if inner.nonEmpty =>
             inner.map(audit).reduce(_ merge _)
           case _ => UnitStats(0, 0, failed = false, opaque = 1)

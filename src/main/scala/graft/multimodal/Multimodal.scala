@@ -1,16 +1,16 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column processing: image/audio/video as opaque `binary`
   * columns with typed metadata, decoded by REAL pure-JVM codecs
   * ([[MediaCodec]]: 24-bit BMP pixels, 16-bit PCM WAV samples, GFV1
-  * frame container) in batch-shaped partition passes.
+  * frame container) in per-row UDFs.
   *
-  * Scale notes: payloads travel ONLY through narrow mapPartitions
-  * passes — no shuffle ever carries the binary column; aggregations
+  * Scale notes: payloads travel ONLY through narrow UDF projections —
+  * no shuffle ever carries the binary column; aggregations
   * happen after projection to small feature vectors. `repartitionForIo`
   * right-sizes partitions from CATALYST PLAN STATISTICS (no job, no
   * scan) — the knob that matters when rows are megabytes not kilobytes.
@@ -190,36 +190,24 @@ object Multimodal {
     (payload.length, hist)
   }
 
-  private val featureSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),
-    StructField("n_bytes", IntegerType, nullable = false),
-    StructField("hist", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false)))
+  private val featuresUdf = udf { (payload: Array[Byte]) =>
+    val (n, hist) = decodeHistogram(Option(payload).getOrElse(Array.emptyByteArray))
+    val tot = math.max(1L, hist.sum).toDouble
+    (n, hist, hist.map(_ / tot))
+  }.withName("media_features")
 
-  /** Decode + feature-extract in one batch-shaped partition pass
-    * (the Scala analogue of a pandas-batch UDF): iterate rows inside a
-    * partition, decode with the real codec, emit the raw 16-bin
-    * histogram (exact longs — what downstream aggregates should sum;
-    * integer counts stay oracle-checkable where float sums wouldn't)
-    * plus its fixed-width L1-normalized double form. */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val src = media.select("media_id", "modality", "content")
-    val rdd = src.rdd
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val payload = Option(r.getAs[Array[Byte]]("content"))
-            .getOrElse(Array.emptyByteArray)
-          val (n, hist) = decodeHistogram(payload)
-          val tot = math.max(1L, hist.sum).toDouble
-          Row(r.getAs[Long]("media_id"), r.getAs[String]("modality"),
-            n, hist.toSeq, hist.map(_ / tot).toSeq)
-        }
-      }
-    // registered boundary: the audit recurses into src's pipeline
-    // instead of stopping at the RDD scan (r16)
-    org.apache.spark.sql.GraftSqlBridge.createDataFrameAudited(src, rdd, featureSchema)
-  }
+  /** Decode + feature-extract each payload with the real codec in one
+    * narrow UDF pass: emit the raw 16-bin histogram (exact longs —
+    * what downstream aggregates should sum; integer counts stay
+    * oracle-checkable where float sums wouldn't) plus its fixed-width
+    * L1-normalized double form. The UDF is selected once and its
+    * struct flattened above it, so it runs once per row. */
+  def extractFeatures(media: DataFrame): DataFrame =
+    media
+      .select(col("media_id"), col("modality"),
+        featuresUdf(col("content")).as("f"))
+      .select(col("media_id"), col("modality"), col("f._1").as("n_bytes"),
+        col("f._2").as("hist"), col("f._3").as("features"))
 
   private val resizeUdf = udf { (payload: Array[Byte], newW: Int, newH: Int) =>
     if (payload != null && MediaCodec.modalityOf(payload) == "image") {

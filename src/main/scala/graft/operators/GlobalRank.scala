@@ -35,11 +35,11 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *
   *  2. [[topKBoundary]] — when only "is this row in the global top k?"
   *     is needed (selection, not ranking), a full sort is overkill:
-  *     a `treeAggregate` of per-partition bounded heaps (≤ k entries
-  *     each) reduces to the k-th order statistic on the driver, and
-  *     membership becomes a broadcast-free comparison against that
-  *     boundary literal. O(n) scan, O(k) state, zero shuffles of data
-  *     rows.
+  *     an ordered `limit(k)` (TakeOrderedAndProject: per-partition
+  *     bounded heaps of ≤ k rows, merged on collect) yields the
+  *     k-th order statistic, and membership becomes a broadcast-free
+  *     comparison against that boundary literal. O(n) scan, O(k)
+  *     state, zero shuffles of data rows.
   *
   * Contracts: sort keys must be non-null atomic orderable values (the
   * boundary literals and the driver-side sample ordering both compare
@@ -372,37 +372,18 @@ object GlobalRank {
     * relation has fewer than k rows (then everything is in the top k).
     *
     * `df` must have exactly two columns: a numeric key castable to
-    * double and a long tiebreak, in that order. Each partition keeps a
-    * bounded min-heap of k candidates; `treeAggregate` merges heaps
-    * pairwise so the driver receives one ≤ k-entry heap, not one per
-    * partition.
+    * double and a long tiebreak, in that order. The ordered `limit(k)`
+    * plans as TakeOrderedAndProject: each partition keeps a bounded
+    * k-row heap and collect merges them, so at most k rows per
+    * partition leave the executors.
     */
   def topKBoundary(df: DataFrame, k: Int): Option[(Double, Long)] = {
     import org.apache.spark.sql.functions.col
     require(k > 0, s"topKBoundary: k must be positive, got $k")
-    val pairs = df.select(
-      col(df.columns(0)).cast("double"), col(df.columns(1)).cast("long"))
-      .rdd.map(r => (r.getDouble(0), r.getLong(1)))
-    // ordering: "better" = higher key, then lower tie; the heap evicts
-    // the WORST of the kept k, so it is a min-heap under this ordering
-    val better: ((Double, Long), (Double, Long)) => Boolean = {
-      case ((k1, t1), (k2, t2)) => k1 > k2 || (k1 == k2 && t1 < t2)
-    }
-    val ord = new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int =
-        if (better(a, b)) 1 else if (better(b, a)) -1 else 0
-    }
-    def push(h: scala.collection.mutable.PriorityQueue[(Double, Long)],
-        e: (Double, Long)) = {
-      if (h.size < k) h.enqueue(e)
-      else if (better(e, h.head)) { h.dequeue(); h.enqueue(e) }
-      h
-    }
-    val empty = scala.collection.mutable.PriorityQueue
-      .empty[(Double, Long)](ord.reverse) // head = worst kept
-    val top = pairs.treeAggregate(empty)(push, { (a, b) =>
-      b.foreach(push(a, _)); a
-    })
-    if (top.size < k) None else Some(top.head)
+    val top = df
+      .select(col(df.columns(0)).cast("double").as("key"),
+        col(df.columns(1)).cast("long").as("tie"))
+      .orderBy(col("key").desc, col("tie").asc).limit(k).collect()
+    if (top.length < k) None else Some((top.last.getDouble(0), top.last.getLong(1)))
   }
 }

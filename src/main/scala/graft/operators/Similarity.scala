@@ -674,48 +674,20 @@ object Similarity {
     *   sort per bucket (O(B log B)) on the exchange the probe join
     *   already needs; at real scale the primary knob is still `bits`
     *   (smaller buckets), the cap is the guarantee. */
-  /** Map-side half of the two-stage bucket cap: within each INPUT
-    * partition (before any exchange) keep only the `cap` lowest
-    * `vec_id` rows of every (t, s) bucket. A partition-local sort on
-    * (t, s, vec_id) makes buckets contiguous, then a streaming O(1)-
-    * state pass filters — no hash map, no object conversion
-    * (InternalRow pass-through via GraftSqlBridge.mapPartitionsInternal;
-    * a Dataset.mapPartitions would round-trip the 64-double embedding
-    * through external objects per row). Output per partition per
-    * bucket ≤ cap, so the global cap window's per-task input is
-    * bounded by numPartitions·cap even when one hot bucket holds the
-    * whole corpus. Keeps a SUPERSET of the global cap-lowest set
-    * (each globally-lowest id is its own partition's lowest), so the
-    * downstream window produces bit-identical survivors. */
-  private[graft] def partialBucketCap(cAll: DataFrame, cap: Int): DataFrame = {
-    val sorted = cAll.sortWithinPartitions(col("t"), col("s"), col("vec_id"))
-    val tOrd = sorted.schema.fieldIndex("t")
-    val sOrd = sorted.schema.fieldIndex("s")
-    // The streaming filter below reads t/s positionally with getInt/
-    // getLong; on UnsafeRow a type drift (t widened to long, s emitted
-    // as int by a future tables==1 shortcut) would misread raw bytes
-    // SILENTLY and corrupt bucket grouping only on the capped path —
-    // fail loudly instead (r16 ADVICE).
-    require(sorted.schema(tOrd).dataType == org.apache.spark.sql.types.IntegerType,
-      s"partialBucketCap: column t must be INT, got ${sorted.schema(tOrd).dataType}")
-    require(sorted.schema(sOrd).dataType == org.apache.spark.sql.types.LongType,
-      s"partialBucketCap: column s must be BIGINT, got ${sorted.schema(sOrd).dataType}")
-    org.apache.spark.sql.GraftSqlBridge.mapPartitionsInternal(sorted, { it =>
-      var started = false
-      var curT = 0
-      var curS = 0L
-      var n = 0L
-      it.filter { r =>
-        val t = r.getInt(tOrd)
-        val s = r.getLong(sOrd)
-        if (!started || t != curT || s != curS) {
-          started = true; curT = t; curS = s; n = 0L
-        }
-        n += 1
-        n <= cap
-      }
-    })
-  }
+  /** The two-stage bucket cap: keep the `cap` lowest `vec_id` rows of
+    * every (t, s) bucket with Spark's `WindowGroupLimit`, which the
+    * planner splits into a `Partial` pass within each INPUT partition
+    * (a partition-local sort, then the per-group limit) below the
+    * exchange and a `Final` pass above it. Partial output per
+    * partition per bucket is ≤ cap, so no task after the exchange
+    * receives more than numPartitions·cap rows of a bucket even when
+    * one hot bucket holds the whole corpus. Each globally cap-lowest
+    * id is its own partition's lowest, so the Partial pass keeps a
+    * superset of the survivors and the result is bit-identical to the
+    * window alone. */
+  private[graft] def partialBucketCap(cAll: DataFrame, cap: Int): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.windowGroupLimit(
+      cAll, Seq("t", "s"), "vec_id", cap)
 
   def signLshKnn(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int = 8,
                  multiProbe: Boolean = false, dim: Int = 64,

@@ -1,48 +1,49 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, RowNumber, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ⇄ Expression bridge. Spark 4's classic converters
   * (`org.apache.spark.sql.classic.ExpressionUtils`) are `private[sql]`,
   * so a library registering custom Catalyst expressions needs one
   * object compiled into the `org.apache.spark.sql` package to reach
-  * them — the conventional extension-point shim, kept to these two
-  * one-line forwarders. */
+  * them — the conventional extension-point shim. Besides the two
+  * forwarders and [[sortKey]], it builds the one Catalyst node the
+  * public API cannot ([[windowGroupLimit]]) and keeps the audit
+  * registry for the two materializing barriers: local checkpoints and
+  * the graph kernels' `createDataFrame`. */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Partition-local pass over a DataFrame's InternalRows, schema
-    * preserved — the zero-copy form of `mapPartitions` for operators
-    * whose per-partition logic only reads a few fixed columns and
-    * passes rows through (e.g. Similarity's map-side bucket cap). The
-    * Dataset.mapPartitions route would deserialize every row to
-    * external objects and back (for LSH rows that is a 64-double array
-    * per row); this one touches primitives in place.
-    *
-    * Contract for `f`: iterator rows may be REUSED by the engine —
-    * read fields of the current row only, never buffer row references
-    * (remember primitives instead). The result must be row-for-row a
-    * subset/transform with the SAME schema. */
-  def mapPartitionsInternal(df: DataFrame,
-      f: Iterator[org.apache.spark.sql.catalyst.InternalRow] =>
-        Iterator[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
-    val classic = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val mapped = df.queryExecution.toRdd.mapPartitions(f, preservesPartitioning = true)
-    innerPlans.put(mapped, Seq(df))
-    classic.internalCreateDataFrame(mapped, df.schema)
+  /** Spark's own `WindowGroupLimit` over `df`: keep the `limit` rows
+    * with the lowest `order` column in every `partitionCols` group, as
+    * `row_number() <= limit` would. The planner splits it into a
+    * `Partial` pass below the exchange (a partition-local sort, then
+    * the per-group limit) and a `Final` pass above it. Spark's
+    * InferWindowGroupLimit inserts the same node only for limits up to
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (1000); this
+    * builds it for any limit. Keep the `row_number() <= limit` window
+    * above it as the declared semantics — the shape Spark builds when
+    * it infers the node itself. */
+  def windowGroupLimit(df: DataFrame, partitionCols: Seq[String], order: String,
+      limit: Int): DataFrame = {
+    val classicDf = df.asInstanceOf[classic.Dataset[Row]]
+    classic.Dataset.ofRows(classicDf.sparkSession,
+      WindowGroupLimit(partitionCols.map(classicDf.resolve),
+        Seq(SortOrder(classicDf.resolve(order), Ascending)), RowNumber(), limit,
+        classicDf.logicalPlan))
   }
 
-  /** Inner plans hidden behind [[mapPartitionsInternal]]'s RDD
-    * barrier, keyed by the produced RDD. The barrier bakes the source
-    * DataFrame into a LogicalRDD, and plan walkers (debug.codegenToSeq
-    * — what graft.CodegenAudit compiles) see only an opaque
-    * RDDScanExec leaf — so without this registry the audit would
-    * silently stop covering everything upstream of the barrier (for
-    * the capped LSH path that is the scan + signature + explode +
-    * sort, the exact hot stage the audit exists to watch). Weak keys:
-    * entries die with their RDDs. */
+  /** Inner plans hidden behind a registered RDD barrier, keyed by the
+    * barrier's RDD. A local checkpoint or an imperative kernel's
+    * `createDataFrame` bakes its source frames into a LogicalRDD, and
+    * plan walkers (debug.codegenToSeq — what graft.CodegenAudit
+    * compiles) see only an opaque RDDScanExec leaf — so without this
+    * registry the audit would silently stop covering everything
+    * upstream of the barrier. Weak keys: entries die with their RDDs. */
   private val innerPlans =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], Seq[DataFrame]]())
@@ -56,6 +57,15 @@ object GraftSqlBridge {
   def innerPlansOf(rdd: org.apache.spark.rdd.RDD[_]): Seq[DataFrame] =
     Option(innerPlans.get(rdd)).getOrElse(Seq.empty)
 
+  /** Register every RDD leaf of `out`'s plan as built from `sources`. */
+  private def registered(out: DataFrame, sources: Seq[DataFrame]): DataFrame = {
+    out.queryExecution.analyzed.foreach {
+      case LogicalRDD(_, rdd, _, _, _, _) => innerPlans.put(rdd, sources)
+      case _ =>
+    }
+    out
+  }
+
   /** `df.localCheckpoint()` with the checkpoint boundary REGISTERED
     * for graft.CodegenAudit: an eager localCheckpoint materializes to
     * an RDD and every downstream plan reads it through an opaque
@@ -65,39 +75,19 @@ object GraftSqlBridge {
     * checkpoint RDD → source frame lets the audit recurse through the
     * boundary, so the committed zero-failed-compiles invariant again
     * covers whole queries, not their post-checkpoint suffixes. */
-  def localCheckpointAudited(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        innerPlans.put(lr.rdd, Seq(df))
-    }
-    cp
-  }
+  def localCheckpointAudited(df: DataFrame): DataFrame =
+    registered(df.localCheckpoint(), Seq(df))
 
   /** `spark.createDataFrame(rdd, schema)` with the boundary REGISTERED
-    * for the audit, for imperative per-partition passes built from a
-    * DataFrame projection (the multimodal decode shape:
-    * `source.rdd.mapPartitions(decode)` → new frame). Same plan as the
-    * raw call; the audit additionally recurses into `source`'s
-    * pipeline instead of stopping at the opaque leaf. */
-  def createDataFrameAudited(source: DataFrame,
-      rdd: org.apache.spark.rdd.RDD[Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    createDataFrameAudited(Seq(source), rdd, schema)
-
-  /** Multi-source form: an imperative kernel fed by SEVERAL DataFrame
-    * projections (Graph.bfsLevels: edges + seeds) registers them all,
-    * so the audit recurses into every feeding pipeline. */
+    * for the audit, for an imperative kernel fed by one or more
+    * DataFrame projections (Graph.bfsLevels: edges + seeds). Same plan
+    * as the raw call; the audit additionally recurses into every
+    * feeding pipeline instead of stopping at the opaque leaf. */
   def createDataFrameAudited(sources: Seq[DataFrame],
       rdd: org.apache.spark.rdd.RDD[Row],
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     require(sources.nonEmpty, "createDataFrameAudited: no source frames")
-    val out = sources.head.sparkSession.createDataFrame(rdd, schema)
-    out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        innerPlans.put(lr.rdd, sources)
-    }
-    out
+    registered(sources.head.sparkSession.createDataFrame(rdd, schema), sources)
   }
 
   /** Split a sort Column (`c.desc` / `c.asc` / bare) into its value

@@ -10,7 +10,7 @@ import graft.multimodal.Multimodal
   * size is closed-form in the document's UTF-8 byte length (BMP:
   * 54 + 48·rows; WAV: 44 + 2·samples; GFV1: fixed 1008), so DuckDB
   * reproduces the exact byte accounting without decoding. q61 runs the
-  * full batch-shaped decode+feature pass (real pixel/sample decode →
+  * full decode+feature pass (real pixel/sample decode →
   * rows-only check; exact feature values for known payloads are
   * asserted in MultimodalSpec).
   */
@@ -50,7 +50,7 @@ object MultimodalQueries {
       |GROUP BY modality ORDER BY modality""".stripMargin
 
   // ---------------------------------------------------------------- q61
-  /** Full batch-shaped decode + feature extraction with the REAL codecs,
+  /** Full decode + feature extraction with the REAL codecs,
     * rolled up per modality. Aggregates are EXACT integer counts from the
     * raw 16-bin histogram (bin 0 exercises the BMP zero-padding path;
     * bin 7 is an arbitrary interior bin) with ONE final double division —
@@ -141,42 +141,32 @@ object MultimodalQueries {
       |FROM counted GROUP BY md ORDER BY modality""".stripMargin
 
   // ---------------------------------------------------------------- q68
+  private val jpegDimsUdf = udf { (payload: Array[Byte]) =>
+    val (w, h, rgb) = graft.multimodal.MediaCodec.decodeJpeg(payload)
+    (w.toLong, h.toLong, rgb.length.toLong)
+  }.withName("jpeg_dims")
+
   /** REAL JPEG decode through `javax.imageio`: synthesize a JPEG per
     * document (same pixels/dims as the BMP path, lossy-compressed),
-    * decode every payload back in a batch-shaped partition pass, and
+    * decode every payload back in one narrow UDF pass, and
     * emit the decoded facts that survive lossy compression EXACTLY —
     * dimensions and pixel-array shape. The oracle computes the same
     * facts closed-form from the text length; a broken encode or decode
     * path shifts dims/row counts and hash-fails. Pixel-VALUE fidelity
     * (MAE bounds, solid-color near-exactness) is pinned in
     * MultimodalSpec, where tolerance assertions belong. */
-  def q68JpegDecode(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val media = Multimodal.jpegFromDocuments(Tables(spark, dir).documents)
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("jpeg_w", LongType, nullable = false),
-      StructField("jpeg_h", LongType, nullable = false),
-      StructField("n_px_bytes", LongType, nullable = false)))
-    val src = media.select("media_id", "content")
-    val rdd = src.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val (w, h, rgb) = graft.multimodal.MediaCodec.decodeJpeg(
-          r.getAs[Array[Byte]]("content"))
-        org.apache.spark.sql.Row(r.getAs[Long]("media_id"),
-          w.toLong, h.toLong, rgb.length.toLong)
-      }
-    }
-    // registered boundary: the audit recurses into src (r16)
-    org.apache.spark.sql.GraftSqlBridge.createDataFrameAudited(src, rdd, schema)
-      // hash-repartition (r18): the decode RDD has no shuffle anywhere in
-      // its lineage, so the orderBy's range sampler re-ran the ENTIRE
+  def q68JpegDecode(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.jpegFromDocuments(Tables(spark, dir).documents)
+      .select(col("media_id"), jpegDimsUdf(col("content")).as("d"))
+      .select(col("media_id"), col("d._1").as("jpeg_w"), col("d._2").as("jpeg_h"),
+        col("d._3").as("n_px_bytes"))
+      // hash-repartition (r18): the decode has no shuffle anywhere in its
+      // lineage, so the orderBy's range sampler re-ran the ENTIRE
       // encode+decode pipeline; one hash exchange of the 4-long decoded
-      // rows materializes it once (1.488 -> measured below) and the
-      // sampler reads shuffle files instead
+      // rows materializes it once and the sampler reads shuffle files
+      // instead
       .repartition(col("media_id"))
       .orderBy("media_id")
-  }
 
   val q68Sql: String =
     """SELECT doc_id AS media_id,

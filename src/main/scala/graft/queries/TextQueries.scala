@@ -1954,8 +1954,8 @@ object TextQueries {
     * hashed buckets, run-length the sorted array, accumulate n_b·lr_b
     * per run in ascending-b order (the oracle's exact IEEE sequence;
     * the round-9 (doc, bucket) shuffle + broadcast join is gone). The
-    * top-k membership never sorts globally either: a treeAggregate of
-    * ≤ k-entry partition heaps yields the exact k-th (key, doc_id)
+    * top-k membership never sorts globally either: an ordered limit of
+    * ≤ k-row partition heaps yields the exact k-th (key, doc_id)
     * boundary ([[graft.operators.GlobalRank.topKBoundary]]) and `kept`
     * is a literal comparison — O(n) scan, O(k) state, no
     * single-partition window anywhere in the plan. */
@@ -2083,7 +2083,7 @@ object TextQueries {
     // one narrow row per doc; the count probe and the rank pass below
     // both read it — materialize once. Measured A/B (min of 6, sf0.1):
     // eager localCheckpoint 1.15 s full vs lazy persist 1.79 s — the
-    // persisted plan's .rdd re-derivation reads the cache worse than
+    // persisted plan's RDD re-derivation reads the cache worse than
     // the checkpoint's truncated lineage does, so checkpoint wins here.
     val scored = q49LmLogprob(spark, dir).localCheckpointAudited()
     // n is the rank census's total — no separate count job

@@ -53,25 +53,26 @@ class CodegenAuditSpec extends SparkSpec {
       s"composed pqStage no longer huge ($st) — revisit whether the fused kernel is still needed")
   }
 
-  test("audit sees THROUGH the mapPartitionsInternal barrier; unregistered RDD scans read opaque") {
-    // the r16 review's finding: the barrier bakes the upstream
-    // pipeline into a LogicalRDD that codegenToSeq cannot walk, so
-    // without the bridge registry an oversized upstream expression
-    // would pass the round gate while running interpreted. Pin both
-    // directions: a FAILED-COMPILE upstream of the barrier must
+  test("audit sees THROUGH a registered checkpoint; foreign RDD scans read opaque") {
+    // the r16 review's finding: a materializing barrier bakes the
+    // upstream pipeline into a LogicalRDD that codegenToSeq cannot
+    // walk, so without the bridge registry an oversized upstream
+    // expression would pass the round gate while running interpreted.
+    // Pin both directions: a FAILED-COMPILE upstream of a
+    // localCheckpointAudited boundary (the registry's main user) must
     // surface through it, and an RDD scan the bridge did NOT produce
     // must be counted as opaque, never silently passed.
+    import graft.Checkpoints._
     val big = org.apache.spark.sql.GraftSqlBridge.column(
       CodegenAuditSpec.OversizedCodegen(12000))
-    val behind = org.apache.spark.sql.GraftSqlBridge.mapPartitionsInternal(
-      spark.range(1).select(big.as("v")), it => it)
-    val st = audited(behind)
+    val behind = spark.range(1).select(big.as("v")).localCheckpointAudited()
+    val st = audited(behind.select(col("v") + 1))
     assert(st.failed && st.opaque == 0,
-      s"oversized method behind the barrier must surface as FAILED-COMPILE: $st")
-    // q42's real capped path goes through the same registry: no opaque
+      s"oversized method behind the checkpoint must surface as FAILED-COMPILE: $st")
+    // q42's capped path runs in Spark's own operators: nothing opaque
     val fn = SparkEntry.queries("q42_knn_lsh")
     assert(audited(fn(spark, sf)).opaque == 0,
-      "q42's partial-cap barrier must be registered, not opaque")
+      "q42's bucket cap must leave no opaque leaf")
     // a foreign RDD scan (not from the bridge) is opaque by contract
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -45,14 +45,30 @@ class HarnessSpec extends SparkSpec {
     assert(checkpointed.columns.toSeq == Seq("v"))
   }
 
-  test("under src/main/scala only Harness.scala builds a session or cleans up") {
+  private lazy val sources: List[(String, String)] = {
     val files = Files.walk(Paths.get("src/main/scala"))
-    val sources = try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
       .map((p: Path) => p.getFileName.toString -> Files.readString(p)).toList
     finally files.close()
+  }
+
+  test("under src/main/scala only Harness.scala builds a session or cleans up") {
     Seq("SparkSession.builder", "System.gc()", "getPersistentRDDs").foreach { token =>
       val in = sources.collect { case (name, src) if src.contains(token) => name }
       assert(in == List("Harness.scala"), s"$token in $in")
+    }
+  }
+
+  test("under src/main/scala only the graph kernels and the rank sampler leave the plan for an RDD") {
+    // Catalyst gets whole plans: a DataFrame turns into an RDD only in
+    // Graph.scala (the graph kernels) and GlobalRank.scala (the key
+    // sampler). The lookbehind skips the org.apache.spark.rdd package.
+    val toRdd = """(?<!spark)\.rdd\b""".r
+    val in = sources.collect { case (name, src) if toRdd.findFirstIn(src).nonEmpty => name }
+    assert(in.sorted == List("GlobalRank.scala", "Graph.scala"), s".rdd in $in")
+    Seq("toRdd", "mapPartitionsInternal").foreach { token =>
+      val in = sources.collect { case (name, src) if src.contains(token) => name }
+      assert(in.isEmpty, s"$token in $in")
     }
   }
 }

@@ -160,6 +160,22 @@ class MultimodalSpec extends SparkSpec {
     feats.unpersist()
   }
 
+  test("q61 and q68 run their decode UDF once per row: one ScalaUDF per optimized plan") {
+    // filter pushdown and CollapseProject substitute aliases, which can
+    // copy a UDF call into every reference of its struct (the trap the
+    // Dedup/FuzzyJoin comments record); each decode must stay a single
+    // call whose struct is flattened above it
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    Seq("q61_media_features" -> "media_features", "q68_jpeg_decode" -> "jpeg_dims")
+      .foreach { case (query, udfName) =>
+        val plan = SparkEntry.queries(query)(spark, sf).queryExecution.optimizedPlan
+        val calls = plan.flatMap(_.expressions.flatMap(_.collect {
+          case u: ScalaUDF if u.udfName.contains(udfName) => u
+        }))
+        assert(calls.size == 1, s"$query: ${calls.size} $udfName calls in\n$plan")
+      }
+  }
+
   // ------------------------------------------------- partition sizing
 
   test("repartitionForIo sizes from plan stats and runs NO job") {

@@ -150,6 +150,33 @@ class SimilaritySpec extends SparkSpec {
     val ids = partial.select("vec_id").as[Long].collect().toSet
     assert((0L until cap.toLong).toSet.subsetOf(ids),
       s"global cap-lowest ids must survive the partial stage, got $ids")
+    // the bound comes from Spark's WindowGroupLimit: on signLshKnn's
+    // capped path a Partial limit runs in each input partition below
+    // the (t, s) exchange, and a Final one above it. Checked at q42's
+    // cap floor of 2048, above the 1000-row threshold up to which
+    // Spark's InferWindowGroupLimit would insert the node by itself
+    val planCap = 2048
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec, WindowGroupLimitMode}
+    object plans extends AdaptiveSparkPlanHelper
+    def names(es: Seq[Expression]) = es.collect { case a: Attribute => a.name }
+    def limits(p: SparkPlan, mode: WindowGroupLimitMode) = plans.collect(p) {
+      case l: WindowGroupLimitExec
+          if l.mode == mode && names(l.partitionSpec) == Seq("t", "s") && l.limit == planCap => l
+    }
+    val plan = Similarity.signLshKnn(emb, emb.filter(col("vec_id") < 10), 5,
+      bits = 4, tables = 8, bucketCap = Some(planCap)).queryExecution.executedPlan
+    val tsExchanges = limits(plan, Final).flatMap(f => plans.collect(f) {
+      case e @ ShuffleExchangeExec(HashPartitioning(keys, _), _, _, _)
+          if names(keys) == Seq("t", "s") => e
+    })
+    assert(tsExchanges.exists(e => limits(e, Partial).nonEmpty),
+      s"expected WindowGroupLimit Partial under Exchange hashpartitioning(t, s) " +
+        s"under WindowGroupLimit Final:\n$plan")
   }
 
   test("two-stage cap: 100x-cap hot bucket over many partitions keeps exactly the lowest ids") {
