@@ -47,17 +47,13 @@ object Bench {
       try { spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count(); () }
       catch { case _: Throwable => () }
     }
-    val loadStart = Harness.loadavg()
     // fixed-query session warm-up (first catalog entry, NOT the filtered
     // head): with args filters the old names.head warm-up varied by
     // subset, making subset runs not strictly comparable to full sweeps
     run(all.head)
-    // host-window stamp (see HostCalib): loadavg only counts runnable
-    // processes, but r14 measured ~25% throughput drift at load ≈ 1 —
-    // a fixed in-JVM probe at both ends makes a slow-window sweep
-    // self-identifying without cross-referencing other artifacts
-    val calibStart = HostCalib.seconds(spark)
-    val windowOk = Harness.windowOk(spark, calibStart, "bench")
+    // host-window stamp around the measured sweep: a sweep that shared
+    // the host (steal, other processes) marks itself window_ok=false
+    val window = Harness.HostWindow.start()
     val results = names.map(n => n -> run(n))
     // Variance instrument (r16 item 5, generalized per r17 verdict item
     // 1): single-shot sweep cells for cache-materializing and streaming
@@ -97,8 +93,7 @@ object Bench {
         Some(n -> (sweep, sorted.head, median, samples))
       }
     }
-    val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Harness.loadavg()
+    val windowEnv = window.end(spark)
 
     val queryVarJson = queryVar.map { case (n, (sw, mn, med, samples)) =>
       s""""$n":{"sweep":${fmt3(sw)},"min":${fmt3(mn)},"median":${fmt3(med)},"samples":[${samples.map(fmt3).mkString(",")}]}"""
@@ -107,11 +102,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val env = s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},""" +
-      s""""warm":$warm,"load_start":$loadStart,"load_end":$loadEnd,""" +
-      s""""calib_start":${fmt3(calibStart)},"calib_end":${fmt3(calibEnd)},""" +
-      s""""calib_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""window_ok":$windowOk,"idle_ref":${Harness.idleRef},""" +
-      s""""calib_note":"${Harness.CalibNote}"}"""
+      s""""warm":$warm,$windowEnv}"""
     val full =
       s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":$qs,""" +
         s""""query_variance":$queryVarJson,"sf":"$sfDir",$env}"""

@@ -21,7 +21,8 @@ import Harness.fmt3
   *
   * Protocol = Crossover's: 5 reps per query against the noop sink,
   * first dropped as warm-up, median of the remaining 4; cache-clear +
-  * unpersist + GC between reps; HostCalib window stamps. Core count
+  * unpersist + GC between reps; one Harness.HostWindow stamp (its
+  * single-thread calib loop reads the same at any core count). Core count
   * comes from SPARK_GRAFT_CPUS (master AND shuffle.partitions — the
   * bench's scale-adaptive convention, NOT a hardcoded 32, so the
   * 8-core run shuffles 8-wide like a real 8-core deployment would).
@@ -52,9 +53,8 @@ object CoreScale {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("/tmp/corescale.json")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = HostCalib.cpus
+    val cpus = Harness.cpus
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Harness.loadavg()
     val spark = Harness.session("graft-corescale")
 
     val dirs = Seq(
@@ -65,7 +65,7 @@ object CoreScale {
     val dir = dirs.head
 
     // window stamp AFTER corpus synthesis (its I/O would contaminate)
-    val calibStart = HostCalib.seconds(spark)
+    val window = Harness.HostWindow.start()
 
     val Reps = 5
     val cells = Cohort.flatMap { name =>
@@ -83,18 +83,14 @@ object CoreScale {
         None
       }
     }
-    val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Harness.loadavg()
+    val windowEnv = window.end(spark)
 
     val cellsJson = cells.map { case (n, (med, ts)) =>
       s""""$n":{"median":${fmt3(med)},"runs":[${ts.map(fmt3).mkString(",")}]}"""
     }.mkString("{", ",", "}")
     val json =
       s"""{"cores":$cpus,"factor":$factor,"reps":$Reps,"protocol":"drop-first median-of-4, noop sink, clear+gc between reps","cells":$cellsJson,""" +
-        s""""env":{"load_start":$loadStart,"load_end":$loadEnd,""" +
-        s""""calib_start":${fmt3(calibStart)},"calib_end":${fmt3(calibEnd)},""" +
-        s""""calib_parallelism":${spark.sparkContext.defaultParallelism},""" +
-        s""""calib_note":"HostCalib probe partitions by calib_parallelism; stamps are only comparable at equal parallelism"}}"""
+        s""""env":{$windowEnv}}"""
     Files.write(Paths.get(outFile), (json + "\n").getBytes("UTF-8"))
     println(s"[corescale] wrote $outFile")
     Tables.clear(spark)

@@ -76,8 +76,7 @@ object Crossover {
       case None => Cohort
     }
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = Harness.loadavg()
-    val cpus = HostCalib.cpus
+    val cpus = Harness.cpus
     val spark = Harness.session("graft-crossover")
 
     // q88/q97/q107/q146 read documents, q64/q72/q71 lineitem, q42
@@ -103,9 +102,8 @@ object Crossover {
       else SparkEntry.oracleSql(name)
 
     // host-window stamp after the corpora are ensured (synthesis I/O
-    // would contaminate the reading) — see HostCalib
-    val calibStart = HostCalib.seconds(spark)
-    val windowOk = Harness.windowOk(spark, calibStart, "crossover")
+    // would contaminate the reading)
+    val window = Harness.HostWindow.start()
 
     val Reps = 5 // first dropped as warmup, median of the remaining 4
     val runs = scala.collection.mutable.LinkedHashMap[(String, Int), Seq[Double]]()
@@ -128,8 +126,7 @@ object Crossover {
       }
     }
 
-    val calibEnd = HostCalib.seconds(spark)
-    val loadEnd = Harness.loadavg()
+    val windowEnv = window.end(spark)
     val done: Seq[String] = cohort.filter(n => factors.exists(f => runs.contains((n, f))))
     val sparkJson = done.map { name =>
       val perFactor = factors.flatMap { f =>
@@ -160,7 +157,7 @@ object Crossover {
          |  "corpora": "ScaleBench replicated documents (synth v${ScaleBench.SynthVersion}), same cache as the scaling table"
          |},
          |"corpora": {$corporaJson},
-         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, "load_start": $loadStart, "load_end": $loadEnd, "calib_start": ${fmt3(calibStart)}, "calib_end": ${fmt3(calibEnd)}, "calib_parallelism": ${spark.sparkContext.defaultParallelism}, "window_ok": $windowOk, "idle_ref": ${Harness.idleRef}, "calib_note": "${Harness.CalibNote}"},
+         |"env": {"cpus": ${Runtime.getRuntime.availableProcessors()}, $windowEnv},
          |"spark": {
          |  $sparkJson
          |},

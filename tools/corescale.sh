@@ -51,8 +51,8 @@ out = {
     "note": ("ratio = 8-core median / 32-core median over the same "
              "replicated corpus; shuffle.partitions follows the core "
              "count (the bench's scale-adaptive convention). calib "
-             "stamps are NOT comparable across core counts (the probe "
-             "partitions by parallelism)."),
+             "stamps are a single-thread loop, so they compare across "
+             "core counts; each env carries its own window_ok."),
 }
 json.dump(out, open(sys.argv[3], "w"), indent=1)
 print("wrote", sys.argv[3])

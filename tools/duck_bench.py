@@ -43,11 +43,11 @@ FLOOR_RUNS = 9
 
 
 def duck_calib():
-    """DuckDB twin of graft.HostCalib: fixed ALU probe, seconds.
+    """Fixed DuckDB ALU probe, seconds: a multiplicative-hash sum over
+    150M rows, about 1.7 s on an idle 32-core host. It stamps the
+    DuckDB half of a pairing/crossover at both ends, so a slow-window
+    DuckDB run identifies itself in the artifact.
 
-    Same arithmetic kernel, sized to ~1.7 s on this container idle —
-    a host-window stamp for the DuckDB half of a pairing/crossover so
-    a slow-window run self-identifies on BOTH engines' artifacts.
     DuckDB evaluates this single-streamish (~14 ns/row regardless of
     threads), which is fine: the signal is relative drift, not an
     absolute cross-engine constant.
