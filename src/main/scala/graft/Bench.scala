@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import Harness.fmt3
 
 /** Per-round benchmark main. Runs every SparkEntry query against
@@ -39,12 +40,14 @@ object Bench {
     val names =
       if (args.isEmpty) all
       else all.filter(n => args.exists(n.contains))
-    // untimed warm-up: touch every table once (file listing, footer
-    // reads, JVM/codegen baseline) so the first measured query isn't
-    // charged the session's cold-start
-    Seq("lineitem", "orders", "events", "documents", "embeddings", "part",
-      "customer", "supplier", "nation", "region").foreach { t =>
-      try { spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count(); () }
+    // untimed warm-up: open every table once through the session's
+    // Tables memo (file listing, footer read) and scan one row of it
+    // (JVM/codegen baseline), so the first measured query isn't charged
+    // the session's cold-start
+    val tables = Tables(spark, sfDir)
+    Seq[Tables => DataFrame](_.lineitem, _.orders, _.events, _.documents,
+      _.embeddings, _.part, _.customer, _.supplier, _.nation, _.region).foreach { t =>
+      try { t(tables).limit(1).count(); () }
       catch { case _: Throwable => () }
     }
     // fixed-query session warm-up (first catalog entry, NOT the filtered

@@ -587,7 +587,7 @@ object ScaleBench {
       // across many query batches — noted, not hidden.
       if (!cached(s"$dir/embeddings.parquet"))
         synthesizeEmb(spark, baseDir, factor, s"$dir/embeddings.parquet")
-      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+      val emb = Tables.parquet(spark, s"$dir/embeddings.parquet")
       val queries100 = emb.filter(col("vec_id") < 100)
       val annOps: Seq[(String, () => DataFrame)] = Seq(
         "knn_brute" -> (() => Similarity.bruteForceKnn(emb, queries100, 10)),
@@ -629,7 +629,7 @@ object ScaleBench {
       val timed = (ops ++ annOps).filter(p => opSelected(p._1))
         .map { case (name, mk) => name -> Harness.timeNoop(spark)(mk()) }
       val js = timed.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString(",")
-      val rows = spark.read.parquet(s"$dir/documents.parquet").count()
+      val rows = Tables.parquet(spark, s"$dir/documents.parquet").count()
       println(s"""{"factor":$factor,"rows":$rows,$js}""")
       Tables.clear(spark)
     }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Most-frequent-tag lexicon for high-frequency English words — the
@@ -106,5 +107,5 @@ object PosLexicon {
     asDataFrame(spark).coalesce(1).write.mode("overwrite").parquet(path)
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 }

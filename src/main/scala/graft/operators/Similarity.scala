@@ -563,7 +563,9 @@ object Similarity {
     ivfPqIndex(corpus, numCells, dim)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** Read a persisted [[ivfPqIndexWrite]] artifact. */
+  /** Read a persisted [[ivfPqIndexWrite]] artifact. Plain
+    * `spark.read.parquet`, not `Tables.parquet`: the `cell=` directories
+    * need Spark's partition discovery. */
   def ivfPqIndexRead(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
       .select(col("vec_id"), col("cell").cast("int").as("cell"), col("codes"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.TextFunctions.md5Hash60
 
 /** Distributed sketch operators: HyperLogLog distinct counting and a
@@ -176,7 +177,7 @@ object Sketches {
 
   /** Read a persisted [[hllRegistersWrite]] artifact. */
   def hllRegistersRead(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Estimate from a register frame ([[hllRegisters]] /
     * [[hllMergeRegisters]] output). Split out so sketches can be
@@ -369,7 +370,7 @@ object Sketches {
 
   /** Read a persisted [[countMinWrite]] artifact. */
   def countMinRead(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Sum-merge count-min sketch frames (counter addition — the CMS
     * merge law, the additive twin of [[hllMergeRegisters]]'s max): the

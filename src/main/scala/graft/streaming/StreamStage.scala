@@ -75,7 +75,7 @@ object StreamStage {
   def dupsDir(spark: SparkSession, dir: String): String =
     staged.computeIfAbsent(dir + "#dups", _ => {
       val out = TempDirs.create("graft-stream-dups").toString + "/dups"
-      spark.read.parquet(eventsDir(spark, dir))
+      Tables.parquet(spark, eventsDir(spark, dir))
         .filter(col("event_id") % 5 === 0)
         .write.mode("overwrite").parquet(out)
       out
@@ -108,7 +108,7 @@ object StreamStage {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   def eventsSchema(spark: SparkSession, dir: String): StructType =
     schemas.computeIfAbsent(dir,
-      _ => spark.read.parquet(eventsDir(spark, dir)).schema)
+      _ => Tables.parquet(spark, eventsDir(spark, dir)).schema)
 
   /** A fresh PRIVATE source dir for one query run: every parquet file
     * of the given staged dirs HARD-LINKED in (no data copied — the

@@ -130,6 +130,13 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("under src/main/scala only Tables.parquet and the IVF-PQ index reader call read.parquet") {
+    // every flat parquet open goes through Tables.parquet (a driver-side
+    // footer read, no Spark job); ivfPqIndexRead needs partition discovery
+    val in = sources.collect { case (name, src) if src.contains("read.parquet(") => name }
+    assert(in.sorted == List("Similarity.scala", "Tables.scala"), s"read.parquet( in $in")
+  }
+
   test("under src/main/scala no ALU probe, idle reference or idle gate is left") {
     Seq("HostCalib", "SPARK_GRAFT_IDLE_REF", "SPARK_GRAFT_REQUIRE_IDLE", "9_000_000_000")
       .foreach { token =>
