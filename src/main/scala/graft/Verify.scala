@@ -18,10 +18,9 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        spark.catalog.clearCache() // drop operator-cached intermediates
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      } finally Harness.cleanup(spark)
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")

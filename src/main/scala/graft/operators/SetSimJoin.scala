@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Checkpoints._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,13 +66,9 @@ object SetSimJoin {
     val t6 = math.round(threshold * 1000000L) // t in ppm, exact for 6-dp t
     val base = df.select(col(idCol).as("id"), col(tokensCol).as("toks"))
 
-    // global token frequencies: the ordering signal for prefix selection.
-    // Checkpointed because GlobalRank below evaluates its input three
-    // times (sample, census, rank) — vocabulary-sized, sublinear in the
-    // corpus.
+    // global token frequencies: the ordering signal for prefix selection
     val freq = base.select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("tok_freq"))
-      .localCheckpointAudited()
     // r19: token → dense long CODE, the rank under the (freq asc, tok
     // asc) total order, via the scale-safe distributed rank (no
     // single-partition window). Code order ≡ ordering order, so every

@@ -12,8 +12,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   * them — the conventional extension-point shim. Besides the two
   * forwarders and [[sortKey]], it builds the one Catalyst node the
   * public API cannot ([[windowGroupLimit]]) and keeps the audit
-  * registry for the two materializing barriers: local checkpoints and
-  * the graph kernels' `createDataFrame`. */
+  * registry for the two materializing barriers. Its users are
+  * GlobalRank's input checkpoint, Dedup's four checkpoints, the q72,
+  * q97 and q146 checkpoints, and the graph kernels'
+  * [[createDataFrameAudited]] (`Graph.longPairDF`). */
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -70,8 +72,8 @@ object GraftSqlBridge {
     * for graft.CodegenAudit: an eager localCheckpoint materializes to
     * an RDD and every downstream plan reads it through an opaque
     * RDDScanExec leaf, so the ENTIRE upstream pipeline silently left
-    * the audit's coverage (16 catalog sites — found the moment the
-    * audit learned to count opaque leaves, r16). Registering the
+    * the audit's coverage (16 catalog sites when the audit learned to
+    * count opaque leaves, r16; eight call sites now). Registering the
     * checkpoint RDD → source frame lets the audit recurse through the
     * boundary, so the committed zero-failed-compiles invariant again
     * covers whole queries, not their post-checkpoint suffixes. */

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Checkpoints._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -611,23 +610,19 @@ object Relational {
     * shape (round-11): the group key has FIVE values, so a per-group
     * window partition would buffer a fifth of all orders in one task —
     * the rank is [[graft.operators.GlobalRank.withGroupRowNumber]]
-    * instead (distributed global rank minus broadcast group offsets);
-    * the broadcast (group × 3)-row target frame is unchanged. The
-    * narrow projection is localCheckpoint'ed once for the rank's
-    * sample/census passes. */
+    * instead (distributed global rank minus broadcast group offsets),
+    * whose group sizes give each row its three targets. */
   def q106PercentileLadder(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables(spark, dir).orders
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-      .localCheckpointAudited()
-    val targets = o.groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
-      .select(col("o_orderpriority"), col("n"),
-        explode(array(lit(0.5), lit(0.9), lit(0.99))).as("p"))
-      .withColumn("target", ceil(col("p") * col("n")).cast("long"))
     graft.operators.GlobalRank.withGroupRowNumber(o,
         Seq("o_orderpriority"),
-        Seq(col("o_totalprice").asc, col("o_orderkey").asc), "rn")
-      .join(broadcast(targets), "o_orderpriority")
-      .filter(col("rn") === col("target"))
+        Seq(col("o_totalprice").asc, col("o_orderkey").asc), "rn",
+        countOut = "n")
+      .select(col("o_orderpriority"), col("o_totalprice"), col("rn"),
+        explode(array(lit(0.5), lit(0.9), lit(0.99))).as("p"),
+        col("n"))
+      .filter(col("rn") === ceil(col("p") * col("n")).cast("long"))
       .select(col("o_orderpriority"), col("p"),
         col("o_totalprice").as("pct_value"))
       .orderBy("o_orderpriority", "p")
@@ -838,10 +833,8 @@ object Relational {
     * deterministic sampled-boundary buckets, one shared sample pass and
     * one shared census for all three orders, each rank a codegen'd
     * projection over its own hash exchange; every task sorts ~1/P of
-    * the customers, no single-partition window anywhere). The aggregate
-    * is localCheckpoint'ed once so the sample/census/rank passes re-read
-    * a materialized ~|customers|-row relation instead of re-running the
-    * orders rollup; n comes from the census. */
+    * the customers, no single-partition window anywhere); n comes from
+    * the census. */
   def q112RfmSegments(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables(spark, dir).orders
       .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
@@ -853,11 +846,10 @@ object Relational {
       .crossJoin(broadcast(maxd))
       .withColumn("recency_days",
         datediff(col("maxd"), col("last_order")).cast("long"))
-    val rfmC = rfm.localCheckpointAudited()
     // the three ranks share ONE sample pass and ONE census pass; n is
     // the census total, not a separate count job
     val (ranked, nTotal) = graft.operators.GlobalRank.withRowNumbersCounted(
-      rfmC, Seq(
+      rfm, Seq(
         "rn_r" -> Seq(col("recency_days").desc, col("o_custkey").asc),
         "rn_f" -> Seq(col("frequency").asc, col("o_custkey").asc),
         "rn_m" -> Seq(col("monetary_cents").asc, col("o_custkey").asc)))
@@ -1094,15 +1086,11 @@ object Relational {
     * ([[graft.operators.GlobalRank.withRowNumberCounted]] over a
     * 2-column (value, tiebreak) projection, then `rank == (n+1) DIV 2`
     * with n from the rank census) — every task sorts ~1/P of the
-    * orders; no single-partition window. The narrow order-total
-    * projection is localCheckpoint'ed once so the sample/census/rank
-    * passes re-read a materialized 2-column relation instead of
-    * re-scanning parquet. */
+    * orders; no single-partition window. */
   def q119MadOutliers(spark: SparkSession, dir: String): DataFrame = {
     val o = Tables(spark, dir).orders
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .localCheckpointAudited()
     def lowerMedian(df: DataFrame, c: String, id: String): Long = {
       val (ranked, n) = graft.operators.GlobalRank.withRowNumberCounted(
         df.select(col(c), col(id)), Seq(col(c).asc, col(id).asc), "rn")
@@ -1844,8 +1832,7 @@ object Relational {
   def q83RankOutliers(spark: SparkSession, dir: String): DataFrame = {
     val ranked = graft.operators.GlobalRank.withGroupRowNumber(
       Tables(spark, dir).customer
-        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        .localCheckpointAudited(),
+        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal")),
       Seq("c_mktsegment"),
       Seq(col("c_acctbal").asc, col("c_custkey").asc), "rn", countOut = "n")
     val bounds = ranked

@@ -469,7 +469,9 @@ object SketchQueries {
     // (flag, bucket) rows are already unique, so max is the identity).
     // perFlag is NOT checkpointed: its two union consumers re-run a
     // map-side-combined agg over the checkpointed d, which measured
-    // cheaper than the eager materialization it replaced.
+    // cheaper than the eager materialization it replaced. d itself is
+    // checkpointed because it feeds three consumers: the same duel's
+    // no-checkpoint variant lost (Q72Duel, d1198c1).
     val d = li.select(col("l_returnflag"), col("l_partkey"))
       .distinct().localCheckpointAudited()
     val perFlag = Sketches.hllRegisters(d, col("l_partkey"), Seq("l_returnflag"))

@@ -1524,6 +1524,9 @@ object TextQueries {
           .stripMargin)).as("p"))
       .select(col("p.source_a").as("a"), col("p.source_b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n"))
+      // joinSizes reads the census in two jobs (the sizes broadcast and
+      // the pairs); at sf0.1 (median of 3 runs, each the min of 6)
+      // 1.70 s with the checkpoint, 1.93 s without
       .localCheckpointAudited()
     joinSizes(agg)
   }
@@ -1828,15 +1831,13 @@ object TextQueries {
     * embedding carries a cosine; every term-matching doc carries a
     * BM25), so each rank is a [[graft.operators.GlobalRank]]
     * distributed row_number — no single-partition window buffers a
-    * ranking relation (the q112/q119 migration applied here too); the
-    * scored inputs are localCheckpoint'ed once so the rank's sample/
-    * census/rank passes re-read a narrow materialized relation. The
+    * ranking relation (the q112/q119 migration applied here too). The
     * fusion join is doc-keyed. */
   val RrfK = 60
 
   def q110HybridRrf(spark: SparkSession, dir: String): DataFrame = {
     val lex = graft.operators.GlobalRank.withRowNumber(
-        bm25Frame(spark, dir).select("doc_id", "bm25").localCheckpointAudited(),
+        bm25Frame(spark, dir).select("doc_id", "bm25"),
         Seq(col("bm25").desc, col("doc_id").asc), "lex_rank")
       .select(col("doc_id"), col("lex_rank"))
     val e = Tables(spark, dir).embeddings
@@ -1847,7 +1848,7 @@ object TextQueries {
     val semScored = e.crossJoin(broadcast(q0))
       .withColumn("cos_sim",
         Similarity.dot(col("emb"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .select("vec_id", "cos_sim").localCheckpointAudited()
+      .select("vec_id", "cos_sim")
     val sem = graft.operators.GlobalRank.withRowNumber(semScored,
         Seq(col("cos_sim").desc, col("vec_id").asc), "sem_rank")
       .select(col("vec_id").as("doc_id"), col("sem_rank"))
@@ -1999,9 +2000,11 @@ object TextQueries {
         round(col("w") - log(-log(
           (md5Hash60(concat(lit("dsir|"), col("doc_id"))) + 1).cast("double") /
             lit(1152921504606846978L).cast("double"))), 6))
-      // the boundary probe below and the output both read this frame:
-      // materialize once (one narrow row per doc — the output's own
-      // size), so the fold never runs twice
+      // the boundary probe below and the output read this frame in
+      // separate jobs: materialize once (one narrow row per doc — the
+      // output's own size), so the fold never runs twice. Measured at
+      // sf0.1 (median of 3 runs, each the min of 6): 0.78 s with it,
+      // 1.17 s without
       .localCheckpointAudited()
     // exact top-k membership without a global sort: the k-th
     // (gumbel_key desc, doc_id asc) pair via bounded partition heaps
@@ -2080,15 +2083,9 @@ object TextQueries {
     * buckets take one extra row) maps rank → bucket. No
     * single-partition window anywhere; the keep pass itself is narrow. */
   def q152PerplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
-    // one narrow row per doc; the count probe and the rank pass below
-    // both read it — materialize once. Measured A/B (min of 6, sf0.1):
-    // eager localCheckpoint 1.15 s full vs lazy persist 1.79 s — the
-    // persisted plan's RDD re-derivation reads the cache worse than
-    // the checkpoint's truncated lineage does, so checkpoint wins here.
-    val scored = q49LmLogprob(spark, dir).localCheckpointAudited()
     // n is the rank census's total — no separate count job
     val (ranked, n) = graft.operators.GlobalRank.withRowNumberCounted(
-      scored, Seq(col("nll"), col("doc_id")), "rk")
+      q49LmLogprob(spark, dir), Seq(col("nll"), col("doc_id")), "rk")
     val base = n / 3
     val rem = n % 3
     // integer DIV, not Column./ (which is double division — inexact

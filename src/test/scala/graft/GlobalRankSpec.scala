@@ -81,6 +81,28 @@ class GlobalRankSpec extends SparkSpec {
     assert(got.sameElements(expected))
   }
 
+  test("GlobalRank evaluates its input once") {
+    // the key column counts its own evaluations; 8 explicit partitions
+    // make the sample, census and rank passes all run, and each would
+    // re-run the key UDF if the operator did not materialize its input
+    val calls = spark.sparkContext.longAccumulator("gr-key-calls")
+    val countedKey = udf { (id: Long) => calls.add(1); (id * 7919L) % 1000L }
+    val df = spark.range(20000).toDF("id").withColumn("k", countedKey(col("id")))
+    val (ranked, n) = GlobalRank.withRowNumbersCounted(df, Seq(
+        "a" -> Seq(col("k"), col("id")),
+        "b" -> Seq(col("k").desc, col("id"))),
+      numPartitions = 8)
+    ranked.collect()
+    assert(n == 20000L)
+    assert(calls.value == 20000L, s"withRowNumbersCounted: ${calls.value} key calls")
+    calls.reset()
+    GlobalRank.withGroupRowNumber(df.withColumn("grp", col("id") % 5),
+        Seq("grp"), Seq(col("k"), col("id")), "rk", countOut = "n",
+        numPartitions = 8)
+      .collect()
+    assert(calls.value == 20000L, s"withGroupRowNumber: ${calls.value} key calls")
+  }
+
   test("repartition(p, c) routes rows to pmod(hash(c), p) — the identity the bucket labels stand on") {
     // GlobalRank picks int labels so range-bucket b lands on shuffle
     // partition b. That works exactly while Spark's HashPartitioning

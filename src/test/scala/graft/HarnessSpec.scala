@@ -130,6 +130,18 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("under src/main/scala only GlobalRank, Dedup and two query files call localCheckpointAudited") {
+    // GlobalRank materializes its own input, so its callers pass plain
+    // plans; the definitions in Checkpoints.scala and SqlBridge.scala
+    // are not call sites
+    val in = sources.collect {
+      case (name, src) if src.contains(".localCheckpointAudited()") &&
+        name != "Checkpoints.scala" && name != "SqlBridge.scala" => name
+    }
+    assert(in.sorted == List("Dedup.scala", "GlobalRank.scala",
+      "SketchQueries.scala", "TextQueries.scala"), s"localCheckpointAudited in $in")
+  }
+
   test("under src/main/scala only Tables.parquet and the IVF-PQ index reader call read.parquet") {
     // every flat parquet open goes through Tables.parquet (a driver-side
     // footer read, no Spark job); ivfPqIndexRead needs partition discovery

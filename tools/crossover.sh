@@ -8,14 +8,15 @@
 # exactly as trisf.sh promoted the tri-SF gate.
 #
 # Protocol (round-13 duel, unchanged): Spark = median of 4 reps after a
-# dropped warmup at local[32] (graft.Crossover); DuckDB = min of 5 on
+# dropped warmup at Harness.cpus cores (graft.Crossover); DuckDB = min of 5 on
 # the per-factor oracle SQL the Spark side dumps, with the documents
 # view swapped to the scaled parquet and every other table from the
 # base SF dir. q107's support threshold scales with the factor on BOTH
 # sides (see Relational.q107SqlWith). Both halves run serially in one
 # invocation on an otherwise idle machine.
 #
-# Usage: tools/crossover.sh [round]      # e.g. tools/crossover.sh 14
+# The round number is a required argument.
+#   usage: tools/crossover.sh <round>
 # Output: CROSSOVER_r$R.json in the repo root + logs under
 # /tmp/crossover_r$R. Idempotent per round dir: the Spark half is
 # skipped when its json exists — wipe /tmp/crossover_r$R to re-run at
@@ -23,8 +24,8 @@
 #
 # NOTE: measurement — don't run while a pairing/bench sweep is live.
 set -e
-cd /root/repo
-R=${1:-14}
+cd "$(dirname "$0")/.."
+R=${1:?usage: tools/crossover.sh <round>}
 OUT=/tmp/crossover_r$R
 DATA=${GRAFT_TESTDATA:-/root/testdata}
 mkdir -p $OUT
@@ -195,7 +196,7 @@ for name in sp["cohort"]:
         queries[name] = row
 
 load = open("/proc/loadavg").read().split()[0]
-# host-window stamp for the duck half (script runs with cwd=/root/repo)
+# host-window stamp for the duck half (script runs from the repo root)
 sys.path.insert(0, "tools")
 try:
     from duck_bench import duck_calib

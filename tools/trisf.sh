@@ -5,7 +5,8 @@
 # the reproducible form of the "hash-green at three SFs" claim (round
 # 12 ran it ad hoc; the commit recorded the result but not the runner).
 #
-# Usage: tools/trisf.sh [round]         # e.g. tools/trisf.sh 13
+# The round number is a required argument.
+#   usage: tools/trisf.sh <round>
 # Output: TRISF_r$R.json in the repo root + full check logs under
 # /tmp/trisf_r$R. Idempotent per round dir: an SF whose check log
 # already exists is skipped — wipe /tmp/trisf_r$R to re-run at a new
@@ -13,10 +14,10 @@
 #
 # NOTE: runs sbt + DuckDB serially; don't run while a pairing or bench
 # sweep is live (measurement hygiene — this is a correctness gate, but
-# it still competes for all 32 CPUs).
+# it still competes for the host's cores).
 set -e
-cd /root/repo
-R=${1:-13}
+cd "$(dirname "$0")/.."
+R=${1:?usage: tools/trisf.sh <round>}
 OUT=/tmp/trisf_r$R
 DATA=${GRAFT_TESTDATA:-/root/testdata}
 mkdir -p $OUT
