@@ -111,14 +111,17 @@ object Bench {
         s""""query_variance":$queryVarJson,"sf":"$sfDir",$env}"""
     // The FULL per-query map (140 queries ≈ 4 KB) overflows the ~2 KB
     // stdout tail the driver keeps, so its regex never recovered the
-    // JSON (BENCH_r07/r08 "parsed": null). Write the full line to a
-    // file and PRINT a short parseable line — same metric/total/sf,
-    // `queries` truncated to the slowest entries (the ones a
-    // regression read cares about), plus a pointer to the full map.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
+    // JSON (`git show 88ba917:BENCH_r07.json`, "parsed": null). Write
+    // the full line to a file and PRINT a short parseable line — same
+    // metric/total/sf, `queries` truncated to the slowest entries (the
+    // ones a regression read cares about), plus the file's absolute
+    // path. The default file is in the checkout's target/ (the forked
+    // run starts in the project directory), so two checkouts on one
+    // host never overwrite each other's map.
+    val outPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/graft_bench.json")).toAbsolutePath
     try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (full + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(outPath, (full + "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }

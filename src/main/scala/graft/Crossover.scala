@@ -13,13 +13,16 @@ import Harness.{fmt3, jsonStr, medianOfLast4}
   * main re-measures that claim so it re-certifies per round instead of
   * living as transcribed spark-shell medians:
   *
-  *   - corpora: the exact ScaleBench replicated-documents parquet
-  *     ([[ScaleBench.ensureDocuments]] — same cache, same synthesis
-  *     version), so the crossover and the scaling table measure the
-  *     same bytes;
+  *   - corpora: the exact ScaleBench replicated documents, embeddings
+  *     and lineitem parquet ([[ScaleBench.ensure]] — same cache, same
+  *     synthesis version), so the crossover and the scaling table
+  *     measure the same bytes;
   *   - cohort: the stable floor residents (q88, q97) plus the adjacent
   *     under-bar floor queries the round-10..12 carousel rotated
-  *     through (q64, q72, q107);
+  *     through (q64, q72, q107); or any catalog queries named in
+  *     SPARK_GRAFT_CROSSOVER_COHORT ([[cohortOf]]) — tools/corescale.sh
+  *     runs its core-scaling cohort through this main that way, once
+  *     per core count;
   *   - timing: per (factor, query) five reps against the noop sink with
   *     cache-clear + GC between reps, first rep dropped as warmup,
   *     median of the remaining four (the round-13 duel protocol);
@@ -35,7 +38,7 @@ import Harness.{fmt3, jsonStr, medianOfLast4}
   *     parquet) and joins into CROSSOVER_r{N}.json.
   *
   * Run via tools/crossover.sh (which owns the DuckDB half and the
-  * artifact), or directly:
+  * artifact), tools/corescale.sh, or directly:
   *   sbt "runMain graft.Crossover /tmp/crossover_r14 1 10 100"
   */
 object Crossover {
@@ -58,23 +61,27 @@ object Crossover {
     "q71_heavy_hitters",
     "q146_dsir_resample")
 
+  /** The queries a run measures. `csv` is SPARK_GRAFT_CROSSOVER_COHORT:
+    * unset runs the full [[Cohort]] (the per-round artifact mode); set,
+    * it names the catalog queries to run, in that order — a focused
+    * re-cert at a higher factor (e.g. 300x for a floor-crossing
+    * demonstration) shouldn't pay for the whole cohort at that scale.
+    * Any `SparkEntry.queries` key is accepted; an unknown name fails the
+    * run before any corpus is built. */
+  def cohortOf(csv: Option[String]): Seq[String] = csv match {
+    case Some(names) =>
+      val want = names.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      val unknown = want.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty, s"unknown cohort entries: ${unknown.mkString(", ")}")
+      want
+    case None => Cohort
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/crossover")
     val factors =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 10, 100)
-    // SPARK_GRAFT_CROSSOVER_COHORT=q72_hll_merge,q107_frequent_pairs
-    // narrows the duel to the named queries — a focused re-cert at a
-    // higher factor (e.g. 300x for a floor-crossing demonstration)
-    // shouldn't pay for the whole cohort at that scale. Unset = full
-    // cohort, the per-round artifact mode.
-    val cohort = sys.env.get("SPARK_GRAFT_CROSSOVER_COHORT") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = want -- Cohort.toSet
-        require(unknown.isEmpty, s"unknown cohort entries: $unknown")
-        Cohort.filter(want)
-      case None => Cohort
-    }
+    val cohort = cohortOf(sys.env.get("SPARK_GRAFT_CROSSOVER_COHORT"))
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.cpus
     val spark = Harness.session("graft-crossover")
@@ -83,9 +90,8 @@ object Crossover {
     // embeddings — all in the shared per-factor corpus dir so the duck
     // half can swap views per-table by existence
     val corpora = factors.map { f =>
-      ScaleBench.ensureDocuments(spark, baseDir, f)
-      ScaleBench.ensureEmbeddings(spark, baseDir, f)
-      f -> ScaleBench.ensureLineitem(spark, baseDir, f)
+      f -> Seq("documents", "embeddings", "lineitem")
+        .map(ScaleBench.ensure(spark, baseDir, f, _)).last
     }.toMap
 
     def buildQuery(name: String, factor: Int, dir: String): DataFrame =

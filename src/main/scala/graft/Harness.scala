@@ -8,12 +8,11 @@ import scala.util.Try
 import scala.util.control.NonFatal
 
 /** The measuring harness shared by the mains (`Bench`, `Verify`,
-  * `Crossover`, `CoreScale`, `ScaleBench`, `CodegenAudit`,
-  * `FixtureGen`). It owns two decisions: how a measuring session is
-  * configured ([[session]]), and how a timed repetition is forced and
-  * cleaned up ([[timeNoop]], [[cleanup]]). The rest are the host-window
-  * stamp ([[HostWindow]]) and the small helpers the mains' JSON
-  * artifacts share.
+  * `Crossover`, `ScaleBench`, `CodegenAudit`, `FixtureGen`). It owns
+  * two decisions: how a measuring session is configured ([[session]]),
+  * and how a timed repetition is forced and cleaned up ([[timeNoop]],
+  * [[cleanup]]). The rest are the host-window stamp ([[HostWindow]])
+  * and the small helpers the mains' JSON artifacts share.
   */
 object Harness {
 
@@ -155,9 +154,10 @@ object Harness {
   final class HostWindow private (loadStart: String, calibStart: Double,
       cpuStart: String, selfStart: Long) {
 
-    /** The env-JSON fragment (no braces) of `Bench`, `Crossover` and
-      * `CoreScale`. Keys are append-only: readers compare key lists
-      * across artifacts, so a new key goes at the end. */
+    /** The env-JSON fragment (no braces) of `Bench` and `Crossover`
+      * (and so of tools/corescale.sh's two legs). Keys are
+      * append-only: readers compare key lists across artifacts, so a
+      * new key goes at the end. */
     def end(spark: SparkSession): String = {
       val w = windowShares(cpuStart, HostWindow.cpuLine(), selfStart, HostWindow.selfTicks())
       s""""load_start":$loadStart,"load_end":${loadavg()},""" +

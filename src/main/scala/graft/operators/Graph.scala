@@ -21,8 +21,9 @@ import scala.collection.mutable
   *    choice Spark's own GraphX Pregel makes: a K-round DataFrame loop
   *    re-runs analysis, optimization, and whole-stage codegen K times
   *    and pays a materializing job per round to truncate lineage
-  *    (~0.3-0.4 s of session constants per round at sf0.1, PAIRING_r08:
-  *    pageRank 8.4× DuckDB warm with plans already exchange-minimal).
+  *    (~0.3-0.4 s of session constants per round at sf0.1,
+  *    `git show 88ba917:PAIRING_r08.json`: pageRank 8.4× DuckDB warm
+  *    with plans already exchange-minimal).
   *    The RDD loop keeps the exact distributed shape — every round is
   *    ONE co-partitioned narrow join + one map-side-combined
   *    reduceByKey shuffle on a fixed HashPartitioner — and the fixed-

@@ -272,8 +272,9 @@ class CorpusStatsSpec extends SparkSpec {
   }
 
   test("q97 tier structure: ONE packed word below 64 sources, two above (plan pin)") {
-    // pins what PAIRING_r13 certified — a regression back to carrying
-    // the constantly-zero second word through the corpus exchange turns
+    // pins what `git show 88ba917:PAIRING_r13.json` certified — a
+    // regression back to carrying the constantly-zero second word
+    // through the corpus exchange turns
     // this red instead of waiting for the next pairing (the same device
     // as GlobalRankSpec's zero-WindowExec pins). The public query
     // finishes driver-side, so the pin reads the exposed census stage.

@@ -4,7 +4,9 @@ import org.apache.spark.sql.functions._
 
 /** Pins the round-14 scale-tooling contracts: the replicated-lineitem
   * synthesis the crossover duel feeds to the q64/q72 cardinality
-  * sketches (ScaleBench.synthesizeLineitem), and the per-query session
+  * sketches (ScaleBench.synthesizeLineitem), the other replicated
+  * tables (documents, embeddings, events, the zipf ladder), and the
+  * per-query session
   * clone the streaming parity entries run on
   * (StreamStage.streamSession). */
 class ScaleSynthSpec extends SparkSpec {
@@ -47,6 +49,53 @@ class ScaleSynthSpec extends SparkSpec {
       ScaleBench.synthesizeLineitem(spark, dir, 2, s"$dir/out.parquet")
     }
     assert(e.getMessage.contains("per-copy offsets"))
+  }
+
+  test("documents, embeddings, events and the zipf ladder replicate at factor 3") {
+    val out = java.nio.file.Files.createTempDirectory("graft-synth").toString
+    val t = Tables(spark, sf)
+    // (table, synthesizer, base, offset id columns, copy 0's id bound)
+    Seq(
+      ("documents", ScaleBench.synthesize _, t.documents, Seq("doc_id"), 10000000L),
+      ("embeddings", ScaleBench.synthesizeEmb _, t.embeddings, Seq("vec_id"), 10000000L),
+      ("events", ScaleBench.synthesizeEvents _, t.events, Seq("event_id", "user_id"),
+        100000000L)
+    ).foreach { case (name, synth, base, ids, copy0Bound) =>
+      synth(spark, sf, 3, s"$out/$name.parquet")
+      val syn = spark.read.parquet(s"$out/$name.parquet")
+      assert(syn.count() == 3 * base.count(), name)
+      ids.foreach { id =>
+        assert(syn.select(id).distinct().count() ==
+          3 * base.select(id).distinct().count(), s"$name.$id")
+      }
+      // the base columns the synthesis copies (Tables.events adds ts_ns)
+      val baseCols = base.select(syn.columns.map(col).toSeq: _*)
+      val copy0 = syn.filter(col(ids.head) < copy0Bound)
+      assert(copy0.exceptAll(baseCols).isEmpty && baseCols.exceptAll(copy0).isEmpty,
+        s"$name: copy 0 is not the base table")
+    }
+    ScaleBench.synthesizeZipf(spark, sf, 3, s"$out/zipf.parquet")
+    val zipf = spark.read.parquet(s"$out/zipf.parquet")
+    val docs = t.documents
+    assert(zipf.count() == 3 * docs.count())
+    assert(zipf.select("doc_id").distinct().count() ==
+      3 * docs.select("doc_id").distinct().count())
+    // every copy's n_chars is its base doc's plus the 26-char ladder
+    val deltas = zipf
+      .join(docs.select(col("doc_id").as("base_id"), col("n_chars").as("base_n")),
+        col("doc_id") % 10000000L === col("base_id"))
+      .groupBy((col("n_chars") - col("base_n")).as("delta")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(deltas == Seq(26L -> zipf.count()), deltas)
+    assert(zipf.filter(array_contains(split(col("text"), " "), "zzz_hot")).count() ==
+      zipf.count())
+  }
+
+  test("ensure refuses a table it does not replicate, before touching any cache") {
+    val e = intercept[IllegalArgumentException] {
+      ScaleBench.ensure(spark, sf, 3, "orders")
+    }
+    assert(e.getMessage.contains("orders"))
   }
 
   test("streamSession: isolated shuffle-partition override, shared context, caller untouched") {
