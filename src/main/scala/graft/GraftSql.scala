@@ -7,10 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * in the catalog has an equivalent SQL spelling over these views. */
 object GraftSql {
 
-  val TableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
-
   def registerTables(spark: SparkSession, dir: String): Unit = {
     val t = Tables(spark, dir)
     Seq(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
 import graft.queries.{SimilarityQueries, StatsQueries, TextQueries}
 
-/** Scaling harness behind ARCHITECTURE.md's measured-scaling table:
+/** Scaling harness behind ARCHITECTURE.md "Measured scaling":
   * synthesizes an N×-duplicated copy of the sf0.1 documents table
   * (doc_id offset per copy → natural duplicate clusters of size N) and
   * times the text/dedup operators on it. This is the evidence for the

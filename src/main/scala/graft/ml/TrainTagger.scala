@@ -102,7 +102,8 @@ object TrainTagger {
     // open-class training word whose top tag dominates (share >=
     // EmissionMinShare): the classic trained-unigram baseline, and the
     // r17 accuracy lever (gold 0.9156 → 0.9319; the verdict-suggested
-    // suffix table alone measured 0.9164 — duel in ROUND_NOTES).
+    // suffix table alone measured 0.9164 — duel in `git show
+    // 06799ef:ROUND_NOTES.md`, "Round 17 notes").
     // Excludes PosLexicon words (the hand lexicon wins at decode anyway)
     // and closed-class words (authoritative already). Includes
     // singletons deliberately: they are held-out-validated, and a

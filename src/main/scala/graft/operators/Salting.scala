@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * split isn't available (non-equi join shapes, non-algebraic
   * aggregates) or when one key is hot enough to dominate a stage.
   *
-  * Salted join: the skewed (large) side gets a random salt in
+  * Salted join: the skewed (large) side gets a content-derived salt in
   * [0, salts); the small side is replicated `salts` times; the join key
   * becomes (key, salt) — one hot key now spreads over `salts` tasks.
   * Cost: small side × salts, which is why the small side must be small.
@@ -43,14 +43,6 @@ object Salting {
     saltedLarge.join(replicatedSmall, Seq(key, "__salt"))
       .drop("__salt")
   }
-
-  /** Source-compat overload for the earlier rand(seed)-based API. The
-    * salt is content-derived (deterministic under any partition layout),
-    * so the seed no longer influences placement. */
-  @deprecated("salt is content-derived; seed is ignored", "round 3")
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-                 salts: Int, seed: Long): DataFrame =
-    saltedJoin(large, small, key, salts)
 
   /** Two-stage salted aggregation: partial aggregate on (key, salt),
     * final on key. For algebraic aggregates Catalyst's partial

@@ -8,7 +8,8 @@ import graft.functions.TextFunctions.md5Hash60
 /** Distributed sketch operators: HyperLogLog distinct counting and a
   * Bloom-filter membership pre-filter.
   *
-  * Both follow this engine's determinism discipline (ARCHITECTURE.md):
+  * Both follow this engine's determinism discipline (ARCHITECTURE.md
+  * "Determinism and oracle discipline"):
   * every hash is an md5 slice with integer arithmetic, so the sketches
   * are reproducible across partitionings, engine versions, AND engines —
   * the identical sketch is expressible in ANSI SQL, which is what makes

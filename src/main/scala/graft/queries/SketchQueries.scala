@@ -83,7 +83,7 @@ object SketchQueries {
     // the old dedup->checkpoint->{hll,exact}->join form paid. Output
     // bit-identical (register max is idempotent; SketchesSpec pins the
     // equality). Remaining gap to DuckDB's 0.3 s exact-distinct is the
-    // documented floor — see ARCHITECTURE.md's q64 decomposition.
+    // documented floor — see ARCHITECTURE.md "Pinned floors".
     Sketches.hllDistinctExact(Tables(spark, dir).lineitem,
         col("l_partkey"), Seq("l_returnflag"))
       .select(col("l_returnflag"), col("hll_distinct"),

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * suppression, a scalable 2-D skyline, per-group OLS trend lines, a
   * corpus Zipf-law fit, and salted exact distinct counts.
   *
-  * Shared determinism discipline (ARCHITECTURE.md): integer-exact
+  * Shared determinism discipline (ARCHITECTURE.md "Determinism and
+  * oracle discipline"): integer-exact
   * aggregates wherever possible, ONE double expression in a pinned
   * association order mirrored by the oracle, `round(…, 4-6)` to absorb
   * ≤1-ulp libm divergence, and total orders on (ts_us, event_id) so

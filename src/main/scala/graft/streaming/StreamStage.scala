@@ -87,8 +87,9 @@ object StreamStage {
     * the watermark computed from batch 1's max event time is already
     * beyond every real event, so ONE appended sentinel (batch 2) fires
     * every real-data timer — the harness runs 2 stateful micro-batches
-    * per query instead of 3 (measured on the six: 21.2 s → see
-    * ARCHITECTURE "Round-15"; each micro-batch re-instantiates one
+    * per query instead of 3 (measured on the six: `git show
+    * 06799ef:ARCHITECTURE.md`, "Round-15: the q42 hot-bucket cap, and
+    * two rejections"; each micro-batch re-instantiates one
     * state store per shuffle partition, so batch count is the
     * constant's multiplier). Kept OUT of [[eventsDir]] so q148's
     * dedup source and the dups derivation stay sentinel-free. */

@@ -1,25 +1,29 @@
 #!/usr/bin/env python3
-"""Render the latest CROSSOVER_r*.json as the markdown table
-ARCHITECTURE.md's "The crossover, measured" section carries — so the
-table of record is REGENERATED from the committed artifact instead of
-transcribed from a shell session (the round-13 state this replaces).
+"""Render a CROSSOVER_r*.json as the markdown table ARCHITECTURE.md's
+"The crossover, measured" section carries, so the table is regenerated
+from the committed artifact rather than transcribed.
 
 Usage: python3 tools/crossover_table.py [CROSSOVER_rN.json]
+Without an argument it renders the newest round in the repo root
+(numeric round order, as duck_bench.crossover_candidates sorts it).
 Prints the table to stdout; paste over the one in ARCHITECTURE.md.
 """
 import json, os, sys
 
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from duck_bench import crossover_candidates
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main(argv):
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if argv:
         path = argv[0]
     else:
-        arts = sorted(f for f in os.listdir(root)
-                      if f.startswith("CROSSOVER_r") and f.endswith(".json"))
+        arts = crossover_candidates(os.listdir(ROOT))
         if not arts:
-            sys.exit("no CROSSOVER_r*.json in repo root")
-        path = os.path.join(root, arts[-1])
+            sys.exit(f"no CROSSOVER_r*.json in {ROOT}")
+        path = os.path.join(ROOT, arts[0])
     cx = json.load(open(path))
     factors = cx["factors"]
     print(f"<!-- generated by tools/crossover_table.py from "

@@ -144,18 +144,20 @@ BASELINE_QUERIES = {
 # They STAY in over_2x_nontrivial whenever they measure over — the bar
 # is the bar — but the artifact attaches the pinned evidence so each
 # round stops re-deriving the adjudication in prose. Reopen conditions
-# live in the cited ARCHITECTURE entries.
+# live in ARCHITECTURE.md "Pinned floors".
 PINNED_FLOORS = {
-    "q64_hll_distinct": ("ARCHITECTURE.md 'Round-17: q64 fused (last "
-                         "removable constant) and its floor pinned' — two "
-                         "unmergeable exchanges + session constant; "
-                         "wide-register/configs/checkpoint+join alternatives "
-                         "all rejected with committed duels"),
-    "q72_hll_merge": ("ARCHITECTURE.md 'Round-18: q72's 300x re-cert — the "
-                      "floor pinned final, off the carousel' — 300x "
-                      "min-vs-min parity (1.09x), dedup exchange is the "
-                      "irreducible cost; r15/r17 alternatives rejected with "
-                      "committed duels"),
+    "q64_hll_distinct": ("ARCHITECTURE.md 'Pinned floors' (q64 row; duels "
+                         "in git show 06799ef:ARCHITECTURE.md 'Round-17: "
+                         "q64 fused (last removable constant) and its floor "
+                         "pinned') — two unmergeable exchanges + session "
+                         "constant; wide-register/configs/checkpoint+join "
+                         "alternatives all rejected with committed duels"),
+    "q72_hll_merge": ("ARCHITECTURE.md 'Pinned floors' (q72 row; duels in "
+                      "git show 06799ef:ARCHITECTURE.md 'Round-18: q72's "
+                      "300x re-cert — the floor pinned final, off the "
+                      "carousel') — 300x min-vs-min parity (1.09x), dedup "
+                      "exchange is the irreducible cost; r15/r17 "
+                      "alternatives rejected with committed duels"),
 }
 
 
@@ -316,7 +318,7 @@ def write_pairing(duck, spark_paths, pairing_path, sf_dir, duck_runs,
     # table row per over-2x nontrivial entry, written next to the
     # pairing artifact so certification and decomposition ship from ONE
     # command (the accepted device for residue queries; see
-    # ARCHITECTURE.md "floor decomposition"). Session constants of
+    # ARCHITECTURE.md "Pinned floors"). Session constants of
     # record: empty job 0.05s, one 32-task exchange ~0.35s, parquet
     # scan 0.14s.
     warm_summary = out["summary"]["warm"]

@@ -3,11 +3,14 @@
 
 Run directly: python3 tools/test_tools.py   (prints OK on success)
 """
-import io, os, sys
+import contextlib, fnmatch, io, os, re, subprocess, sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import crossover_table
 import duck_bench
 import scalebench_table
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_crossover_candidates_numeric_order():
@@ -17,6 +20,38 @@ def test_crossover_candidates_numeric_order():
     got = duck_bench.crossover_candidates(names)
     assert got == ["CROSSOVER_r100.json", "CROSSOVER_r15.json",
                    "CROSSOVER_r14.json", "CROSSOVER_r9.json"], got
+
+
+def test_crossover_table_renders_newest_round():
+    # the default artifact is the newest ROUND, not the last string in
+    # sort order (that would be r9, and r18 would beat r100)
+    import json, tempfile, unittest.mock as mock
+    with tempfile.TemporaryDirectory() as d:
+        for r in (9, 18, 100):
+            json.dump({"head": f"h{r}", "factors": [1], "queries": {}},
+                      open(os.path.join(d, f"CROSSOVER_r{r}.json"), "w"))
+        out = io.StringIO()
+        with mock.patch.object(crossover_table, "ROOT", d), \
+             contextlib.redirect_stdout(out):
+            crossover_table.main([])
+        header = out.getvalue().splitlines()[0]
+        assert "from CROSSOVER_r100.json (head h100)" in header, header
+
+
+def test_repository_map_accounts_for_tree():
+    # every tracked top-level entry and every tracked tools/ file matches
+    # a backticked path in README's "Repository map" section
+    tracked = subprocess.run(["git", "ls-files"], cwd=ROOT, check=True,
+                             capture_output=True, text=True).stdout.splitlines()
+    readme = open(os.path.join(ROOT, "README.md")).read()
+    m = re.search(r"^## Repository map\n(.*?)(?=^## |\Z)", readme, re.M | re.S)
+    assert m, "README.md has no '## Repository map' section"
+    globs = [g.rstrip("/") for g in re.findall(r"`([^`\s]+)`", m.group(1))]
+    entries = sorted({f.split("/")[0] for f in tracked} |
+                     {f for f in tracked if f.startswith("tools/")})
+    missing = [e for e in entries
+               if not any(fnmatch.fnmatchcase(e, g) for g in globs)]
+    assert not missing, f"not in README's Repository map: {missing}"
 
 
 def test_floor_resident_base_mismatch_skipped(tmp=None):
@@ -73,6 +108,8 @@ def test_scalebench_cell_missing_key():
 
 if __name__ == "__main__":
     test_crossover_candidates_numeric_order()
+    test_crossover_table_renders_newest_round()
+    test_repository_map_accounts_for_tree()
     test_floor_resident_base_mismatch_skipped()
     test_pinned_floors_attached_to_warm_residue()
     test_scalebench_cell_missing_key()
