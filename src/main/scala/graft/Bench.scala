@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import Harness.fmt3
 
 /** Per-round benchmark main. Runs every SparkEntry query against
@@ -40,20 +39,7 @@ object Bench {
     val names =
       if (args.isEmpty) all
       else all.filter(n => args.exists(n.contains))
-    // untimed warm-up: open every table once through the session's
-    // Tables memo (file listing, footer read) and scan one row of it
-    // (JVM/codegen baseline), so the first measured query isn't charged
-    // the session's cold-start
-    val tables = Tables(spark, sfDir)
-    Seq[Tables => DataFrame](_.lineitem, _.orders, _.events, _.documents,
-      _.embeddings, _.part, _.customer, _.supplier, _.nation, _.region).foreach { t =>
-      try { t(tables).limit(1).count(); () }
-      catch { case _: Throwable => () }
-    }
-    // fixed-query session warm-up (first catalog entry, NOT the filtered
-    // head): with args filters the old names.head warm-up varied by
-    // subset, making subset runs not strictly comparable to full sweeps
-    run(all.head)
+    Harness.warmUp(spark, sfDir)
     // host-window stamp around the measured sweep: a sweep that shared
     // the host (steal, other processes) marks itself window_ok=false
     val window = Harness.HostWindow.start()

@@ -107,8 +107,9 @@ object Crossover {
           graft.queries.Relational.MinPairSupport * factor)
       else SparkEntry.oracleSql(name)
 
-    // host-window stamp after the corpora are ensured (synthesis I/O
-    // would contaminate the reading)
+    // warm-up and host-window stamp after the corpora are ensured
+    // (synthesis I/O would contaminate the reading)
+    Harness.warmUp(spark, baseDir)
     val window = Harness.HostWindow.start()
 
     val Reps = 5 // first dropped as warmup, median of the remaining 4

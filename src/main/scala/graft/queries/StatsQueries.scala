@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.streaming.{EventStreams, StreamStage}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -83,54 +84,31 @@ object StatsQueries {
   /** The STREAMING kernel answering q121's batch question over the same
     * bounded source, hash-checked against the SAME oracle — the
     * batch-parity proof that moves the streaming twins from "spec" to
-    * "pass". Mechanics: the events table is staged as a parquet file
-    * stream (all files arrive in the first micro-batch, so per-user
-    * arrival order within the batch is whatever the files held — the
-    * operator re-sorts each group by (ts_us, event_id), q121's exact
-    * tie-break); two far-future sentinel files then advance the
-    * watermark in two further micro-batches so every open run's
-    * event-time timer fires (the flush horizon is set beyond the
-    * table's whole time span, so NO run is ever split by a timeout —
-    * the documented equivalence precondition). The memory-sink result
-    * is the closed-runs relation: each row was emitted by
+    * "pass". [[StreamStage.run]] feeds it the staged events in one
+    * micro-batch and then fires every open run's event-time timer with
+    * its far-future sentinels. Per-user arrival order within the batch
+    * is whatever the files held, so the operator re-sorts each group by
+    * (ts_us, event_id), q121's exact tie-break. The flush horizon is set
+    * beyond the table's whole time span, so NO run is ever split by a
+    * timeout — the documented equivalence precondition. The memory-sink
+    * result is the closed-runs relation: each row was emitted by
     * flatMapGroupsWithState state transitions, not by a window pass,
     * yet the hash matches the batch islands oracle exactly. Sentinel
     * rows (user_id = -1) never reach the output. */
   def q141StreamingRuns(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val src = graft.streaming.StreamStage.linkedDir("graft-q141",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.sentinelDir(spark))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-      .as[graft.streaming.EventStreams.RunEvent]
     // flush horizon ≈ 200 years: longer than any gap inside the bounded
     // table, so only the sentinel-driven final flush closes open runs
     val flushMs = 6311520000000L
-    val qname = s"graft_q141_runs_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams.streamingRuns(stream, flushMs)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      query.processAllAvailable() // batch 1: every real event
-      // sentinel batches: each advances the watermark computed from the
-      // PREVIOUS batch's max event time, so batch 3 fires every timer
-      graft.streaming.StreamStage.advanceWatermark(spark, src, query)
-    } finally query.stop()
-    ss.table(qname)
+    StreamStage.run(spark, dir, "q141_runs", StreamStage.Sentinels)(stream =>
+      EventStreams.streamingRuns(stream.as[EventStreams.RunEvent], flushMs))
       .filter(col("user_id") >= 0)
       .select("user_id", "event_type", "valid_from_us", "valid_to_us",
         "n_events")
       .orderBy("user_id", "valid_from_us", "event_type", "valid_to_us",
         "n_events")
   }
-
-  /** Memory-sink names must be unique per stream start within a JVM. */
-  private val StreamQueryIds = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** The streaming kernel answers the BATCH oracle. */
   val q141Sql: String = q121Sql
@@ -140,11 +118,10 @@ object StatsQueries {
     * (EventStreams.streamingHllDistinct — 256 bytes of register state
     * per open hour×type, flatMapGroupsWithState) run over the bounded
     * events source, hash-checked against a plain batch SQL oracle that
-    * recomputes every window's registers from scratch. Same harness as
-    * q141: all real events arrive in the first micro-batch; two
-    * far-future sentinel files advance the watermark so every real
-    * window's event-time timer fires (the sentinels' own windows never
-    * close and are filtered by type). Window alignment is
+    * recomputes every window's registers from scratch. Run by
+    * [[StreamStage.run]] with its sentinels, which close every real
+    * window (the sentinels' own windows never close and are filtered
+    * by type). Window alignment is
     * floor(epoch_ms / 3600000) — identical to the oracle's truncating
     * `epoch_ns // 3600e9` on this table's positive-epoch domain (the
     * documented precondition; q13 states the same contract). The
@@ -155,24 +132,8 @@ object StatsQueries {
   def q145StreamingHll(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val src = graft.streaming.StreamStage.linkedDir("graft-q145",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.sentinelDir(spark))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-      .as[graft.streaming.EventStreams.UserEvent]
-    val qname = s"graft_q145_hll_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams.streamingHllDistinct(stream)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      query.processAllAvailable()
-      graft.streaming.StreamStage.advanceWatermark(spark, src, query)
-    } finally query.stop()
-    ss.table(qname)
+    StreamStage.run(spark, dir, "q145_hll", StreamStage.Sentinels)(stream =>
+      EventStreams.streamingHllDistinct(stream.as[EventStreams.UserEvent]))
       .filter(col("event_type") =!= "sentinel")
       .select(expr("unix_millis(window_start) DIV 1000").as("window_start_sec"),
         col("event_type"), round(col("hll_distinct"), 4).as("hll_distinct"))
@@ -1062,9 +1023,8 @@ object StatsQueries {
     * COUNT-MIN census (EventStreams.streamingCountMin — exactly d·w
     * longs of state per open hour×type) over the bounded events source,
     * hash-checked against a batch SQL oracle that recomputes every
-    * window's non-zero cells from scratch. Harness identical to
-    * q141/q145 (file stream, one real micro-batch, two far-future
-    * sentinel files to fire every event-time timer). The cells crossing
+    * window's non-zero cells from scratch. Run by [[StreamStage.run]]
+    * with its sentinels, as q145. The cells crossing
     * engines exactly is the md5-slice discipline: the streaming state
     * updates through Sketches.cmUpdate, whose positions are pinned
     * bit-identical to the oracle's hex-slice SQL in
@@ -1074,24 +1034,8 @@ object StatsQueries {
   def q147StreamingCountMin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val src = graft.streaming.StreamStage.linkedDir("graft-q147",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.sentinelDir(spark))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-      .as[graft.streaming.EventStreams.UserEvent]
-    val qname = s"graft_q147_cm_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams.streamingCountMin(stream)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      query.processAllAvailable()
-      graft.streaming.StreamStage.advanceWatermark(spark, src, query)
-    } finally query.stop()
-    ss.table(qname)
+    StreamStage.run(spark, dir, "q147_cm", StreamStage.Sentinels)(stream =>
+      EventStreams.streamingCountMin(stream.as[EventStreams.UserEvent]))
       .filter(col("event_type") =!= "sentinel")
       .select(expr("unix_millis(window_start) DIV 1000").as("window_start_sec"),
         col("event_type"), col("row").cast("int").as("r"),
@@ -1131,28 +1075,13 @@ object StatsQueries {
     * result is arrival-order-free (either survivor is the same row).
     * No sentinels needed: dedup emits rows as they pass, state eviction
     * is bookkeeping, not emission. */
-  def q148StreamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    // the shared staged table PLUS the duplicate feed (every 5th event
-    // again, identical values), both hard-linked into the private dir
-    val src = graft.streaming.StreamStage.linkedDir("graft-q148",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.dupsDir(spark, dir))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-    val qname = s"graft_q148_dedup_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams
-      .streamingDedup(stream, "event_id", "1 hour")
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try query.processAllAvailable() finally query.stop()
-    ss.table(qname)
+  def q148StreamingDedup(spark: SparkSession, dir: String): DataFrame =
+    // the staged table PLUS the duplicate feed (every 5th event again,
+    // identical values)
+    StreamStage.run(spark, dir, "q148_dedup", StreamStage.Duplicates)(stream =>
+      EventStreams.streamingDedup(stream, "event_id", "1 hour"))
       .select("event_id", "user_id", "event_type", "ts_us")
       .orderBy("event_id")
-  }
 
   /** The duplicates must be invisible: the oracle is the original table. */
   val q148Sql: String =
@@ -1168,28 +1097,12 @@ object StatsQueries {
     * (Sketches.bloomUpdate, 'bloom|' prefix, 3 slices mod m) — the
     * emitted artifact is the SAME ≤ m-row relation a batch bloomBuild
     * produces, so streaming windows feed bloomProbe / OR-merge
-    * unchanged. Harness identical to q145/q147. */
+    * unchanged. Run by [[StreamStage.run]] with its sentinels, as q145. */
   def q149StreamingBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val src = graft.streaming.StreamStage.linkedDir("graft-q149",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.sentinelDir(spark))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-      .as[graft.streaming.EventStreams.UserEvent]
-    val qname = s"graft_q149_bloom_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams.streamingBloom(stream)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      query.processAllAvailable()
-      graft.streaming.StreamStage.advanceWatermark(spark, src, query)
-    } finally query.stop()
-    ss.table(qname)
+    StreamStage.run(spark, dir, "q149_bloom", StreamStage.Sentinels)(stream =>
+      EventStreams.streamingBloom(stream.as[EventStreams.UserEvent]))
       .filter(col("event_type") =!= "sentinel")
       .select(expr("unix_millis(window_start) DIV 1000").as("window_start_sec"),
         col("event_type"), col("pos").cast("int").as("pos"))
@@ -1226,27 +1139,11 @@ object StatsQueries {
   def q150StreamingQuantile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val s: SparkSession = spark
-    val src = graft.streaming.StreamStage.linkedDir("graft-q150",
-      graft.streaming.StreamStage.eventsDir(spark, dir),
-      graft.streaming.StreamStage.sentinelDir(spark))
-    val ss = graft.streaming.StreamStage.streamSession(spark)
-    val stream = ss.readStream
-      .schema(graft.streaming.StreamStage.eventsSchema(spark, dir))
-      .parquet(src)
-      .as[graft.streaming.EventStreams.Event]
-    val qname = s"graft_q150_qs_${StreamQueryIds.incrementAndGet()}"
-    val query = graft.streaming.EventStreams.streamingQuantile(stream)
-      .writeStream.format("memory").queryName(qname)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .start()
-    try {
-      query.processAllAvailable()
-      graft.streaming.StreamStage.advanceWatermark(spark, src, query)
-    } finally query.stop()
     // unlike the typed twins there is no sentinel event_type to filter
     // on — the FIRST sentinel's window closes when the second advances
     // the watermark past it, so drop far-future windows by time instead
-    ss.table(qname)
+    StreamStage.run(spark, dir, "q150_qs", StreamStage.Sentinels)(stream =>
+      EventStreams.streamingQuantile(stream.as[EventStreams.Event]))
       .select(expr("unix_millis(window_start) DIV 1000").as("window_start_sec"),
         col("q"), col("quantile_est"), col("n_rows"))
       .filter(col("window_start_sec") <

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -57,9 +57,49 @@ object EventStreams {
         col("click_ts"), col("purchase_value"))
   }
 
-  // ------------------------------------------- streaming distinct (HLL)
+  // ------------------------------------------- windowed sketch state
 
   case class UserEvent(ts: Timestamp, event_type: String, user_id: Long)
+
+  /** The event-time state machine of the windowed sketch kernels, one
+    * group per (window start, event_type). A group's state starts as
+    * `empty` and `fold` adds each row into it in place; its timer is
+    * the window's end, clamped to `watermark + 1` so that a straggler
+    * arriving after the window emitted re-opens a partial window rather
+    * than being dropped. When the watermark passes the timer the state
+    * is removed and `emit` turns it into output rows (the same late-data
+    * policy as the built-in windowed aggs; a sink that wants
+    * exactly-once dedupes on (window_start, event_type)). */
+  private def windowedSketch[S: Encoder, U: Encoder](events: Dataset[UserEvent],
+      windowMillis: Long, watermark: String)(empty: => S)(fold: (S, UserEvent) => Unit)(
+      emit: (Timestamp, String, S) => Iterator[U])(implicit spark: SparkSession): Dataset[U] = {
+    import spark.implicits._
+
+    def update(key: (Long, String), rows: Iterator[UserEvent],
+               state: GroupState[S]): Iterator[U] = {
+      if (state.hasTimedOut) {
+        val s = state.get
+        state.remove()
+        return emit(new Timestamp(key._1), key._2, s)
+      }
+      val s = state.getOption.getOrElse(empty)
+      rows.foreach(fold(s, _))
+      state.update(s)
+      state.setTimeoutTimestamp(
+        math.max(key._1 + windowMillis, state.getCurrentWatermarkMs() + 1))
+      Iterator.empty
+    }
+
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(e =>
+        (Math.floorDiv(e.ts.getTime, windowMillis) * windowMillis, e.event_type))
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.EventTimeTimeout)(update)
+  }
+
+  // ------------------------------------------- streaming distinct (HLL)
+
   case class HllWinState(regs: Array[Byte])
   case class HllOut(window_start: Timestamp, event_type: String,
                     hll_distinct: Double)
@@ -75,42 +115,19 @@ object EventStreams {
     * makes a lambda architecture (stream serving + batch backfill)
     * reconcile without epsilon tolerances.
     *
-    * Emission is on event-time timeout: a window's estimate is final
-    * once the watermark passes its end (same late-data policy as the
-    * built-in windowed aggs). A straggler arriving after emission
-    * re-opens a partial window clamped to `watermark + 1` — it emits a
-    * supplementary row rather than silently dropping, and the sink
-    * dedupes on (window_start, event_type) if it wants exactly-once. */
+    * Emission is on event-time timeout ([[windowedSketch]]): a window's
+    * estimate is final once the watermark passes its end, and a
+    * straggler after emission emits a supplementary row. */
   def streamingHllDistinct(events: Dataset[UserEvent],
                            windowMillis: Long = 60 * 60 * 1000L,
                            watermark: String = "2 hours")
                           (implicit spark: SparkSession): Dataset[HllOut] = {
     import spark.implicits._
     import graft.operators.Sketches
-
-    def update(key: (Long, String), rows: Iterator[UserEvent],
-               state: GroupState[HllWinState]): Iterator[HllOut] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        return Iterator(
-          HllOut(new Timestamp(key._1), key._2, Sketches.hllEstimate(s.regs)))
-      }
-      val regs = state.getOption.map(_.regs)
-        .getOrElse(new Array[Byte](Sketches.HllBuckets))
-      rows.foreach(e => Sketches.hllUpdate(regs, "hll|" + e.user_id))
-      state.update(HllWinState(regs))
-      state.setTimeoutTimestamp(
-        math.max(key._1 + windowMillis, state.getCurrentWatermarkMs() + 1))
-      Iterator.empty
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e =>
-        (Math.floorDiv(e.ts.getTime, windowMillis) * windowMillis, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    windowedSketch(events, windowMillis, watermark)(
+      HllWinState(new Array[Byte](Sketches.HllBuckets)))(
+      (s, e) => Sketches.hllUpdate(s.regs, "hll|" + e.user_id))(
+      (w, t, s) => Iterator(HllOut(w, t, Sketches.hllEstimate(s.regs))))
   }
 
   case class CmWinState(counters: Array[Long])
@@ -125,9 +142,8 @@ object EventStreams {
     * (row, col, count) cells — the SAME artifact shape the batch build
     * produces, so closed windows reconcile bit-for-bit with a batch
     * backfill (the hash kernel is shared: Sketches.cmUpdate) and merge
-    * with other sketches by plain addition. Late-straggler policy is
-    * identical to the HLL twin: a post-emission arrival re-opens a
-    * partial window and emits a supplementary sketch, which ADDS
+    * with other sketches by plain addition. A late straggler's
+    * supplementary sketch ([[windowedSketch]]) therefore ADDS
     * correctly into any downstream merge — the mergeability that makes
     * a count-min census safe to emit incrementally. */
   def streamingCountMin(events: Dataset[UserEvent],
@@ -136,34 +152,14 @@ object EventStreams {
                        (implicit spark: SparkSession): Dataset[CmOut] = {
     import spark.implicits._
     import graft.operators.Sketches
-
-    def update(key: (Long, String), rows: Iterator[UserEvent],
-               state: GroupState[CmWinState]): Iterator[CmOut] = {
-      if (state.hasTimedOut) {
-        val c = state.get.counters
-        state.remove()
-        return (0 until Sketches.CmDepth).iterator.flatMap { r =>
-          (0 until Sketches.CmWidth).iterator
-            .filter(w => c(r * Sketches.CmWidth + w) != 0L)
-            .map(w => CmOut(new Timestamp(key._1), key._2, r, w,
-              c(r * Sketches.CmWidth + w)))
-        }
-      }
-      val counters = state.getOption.map(_.counters)
-        .getOrElse(new Array[Long](Sketches.CmDepth * Sketches.CmWidth))
-      rows.foreach(e => Sketches.cmUpdate(counters, e.user_id.toString))
-      state.update(CmWinState(counters))
-      state.setTimeoutTimestamp(
-        math.max(key._1 + windowMillis, state.getCurrentWatermarkMs() + 1))
-      Iterator.empty
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e =>
-        (Math.floorDiv(e.ts.getTime, windowMillis) * windowMillis, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    val w = Sketches.CmWidth
+    windowedSketch(events, windowMillis, watermark)(
+      CmWinState(new Array[Long](Sketches.CmDepth * w)))(
+      (s, e) => Sketches.cmUpdate(s.counters, e.user_id.toString))(
+      (start, t, s) => (0 until Sketches.CmDepth).iterator.flatMap { r =>
+        (0 until w).iterator.filter(c => s.counters(r * w + c) != 0L)
+          .map(c => CmOut(start, t, r, c, s.counters(r * w + c)))
+      })
   }
 
   case class BloomWinState(bits: Array[Long])
@@ -180,40 +176,20 @@ object EventStreams {
     * Sketches.bloomProbe unchanged. The use case is the streaming side
     * of a pre-join gate: each closed window ships its membership filter
     * downstream (e.g. "users active in hour H") without ever holding
-    * the distinct-key set. Late stragglers re-open a partial window and
-    * emit a supplementary position set, which ORs correctly into any
-    * downstream filter — bloom bits merge by union, the same
-    * mergeability as the other sketches. */
+    * the distinct-key set. A late straggler's supplementary position
+    * set ([[windowedSketch]]) ORs correctly into any downstream
+    * filter — bloom bits merge by union, the same mergeability as the
+    * other sketches. */
   def streamingBloom(events: Dataset[UserEvent],
                      windowMillis: Long = 60 * 60 * 1000L,
                      watermark: String = "2 hours")
                     (implicit spark: SparkSession): Dataset[BloomOut] = {
     import spark.implicits._
     import graft.operators.Sketches
-
-    def update(key: (Long, String), rows: Iterator[UserEvent],
-               state: GroupState[BloomWinState]): Iterator[BloomOut] = {
-      if (state.hasTimedOut) {
-        val bits = state.get.bits
-        state.remove()
-        return Sketches.bloomPositions(bits).iterator
-          .map(p => BloomOut(new Timestamp(key._1), key._2, p))
-      }
-      val bits = state.getOption.map(_.bits)
-        .getOrElse(new Array[Long](Sketches.BloomBits / 64))
-      rows.foreach(e => Sketches.bloomUpdate(bits, e.user_id.toString))
-      state.update(BloomWinState(bits))
-      state.setTimeoutTimestamp(
-        math.max(key._1 + windowMillis, state.getCurrentWatermarkMs() + 1))
-      Iterator.empty
-    }
-
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e =>
-        (Math.floorDiv(e.ts.getTime, windowMillis) * windowMillis, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(update)
+    windowedSketch(events, windowMillis, watermark)(
+      BloomWinState(new Array[Long](Sketches.BloomBits / 64)))(
+      (s, e) => Sketches.bloomUpdate(s.bits, e.user_id.toString))(
+      (w, t, s) => Sketches.bloomPositions(s.bits).iterator.map(BloomOut(w, t, _)))
   }
 
   // ------------------------------------------------- stateful sessions

@@ -2,13 +2,14 @@ package graft.streaming
 
 import graft.Tables
 import graft.sources.TempDirs
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
-/** Shared file-stream staging for the six streaming batch-parity
-  * catalog entries (q141/q145/q147–q150).
+/** How a bounded streaming catalog entry is run ([[run]]), and the
+  * shared file-stream staging behind it, for the six streaming
+  * batch-parity catalog entries (q141/q145/q147–q150).
   *
   * Round-9 each of them wrote its OWN full copy of the events table
   * into a fresh temp dir — six table writes (~36 s of the sf0.1 sweep)
@@ -30,7 +31,7 @@ object StreamStage {
 
   /** Shuffle-partition count for the six batch-parity STREAMING
     * catalog entries. Each stateful micro-batch instantiates one state
-    * store per shuffle partition, and the harness runs 3 micro-batches
+    * store per shuffle partition, and [[run]] runs a few micro-batches
     * over a kB-scale bounded source — so the per-query constant scales
     * with this number, not with the data. Measured (warm, local[32],
     * interleaved 5 reps, sf0.1): q141/q145/q150 each ~5.2–5.4 s at 32
@@ -72,7 +73,7 @@ object StreamStage {
 
   /** Every 5th event AGAIN (identical values), staged once per sf dir —
     * the duplicate feed q148's streaming dedup must suppress. */
-  def dupsDir(spark: SparkSession, dir: String): String =
+  private def dupsDir(spark: SparkSession, dir: String): String =
     staged.computeIfAbsent(dir + "#dups", _ => {
       val out = TempDirs.create("graft-stream-dups").toString + "/dups"
       Tables.parquet(spark, eventsDir(spark, dir))
@@ -81,19 +82,11 @@ object StreamStage {
       out
     })
 
-  /** The FIRST far-future sentinel (2400-01-01), staged once per JVM
-    * as its own tiny parquet dir and hard-linked into the timer
-    * queries' sources ALONGSIDE the real events. With it in batch 1,
-    * the watermark computed from batch 1's max event time is already
-    * beyond every real event, so ONE appended sentinel (batch 2) fires
-    * every real-data timer — the harness runs 2 stateful micro-batches
-    * per query instead of 3 (measured on the six: `git show
-    * 06799ef:ARCHITECTURE.md`, "Round-15: the q42 hot-bucket cap, and
-    * two rejections"; each micro-batch re-instantiates one
-    * state store per shuffle partition, so batch count is the
-    * constant's multiplier). Kept OUT of [[eventsDir]] so q148's
-    * dedup source and the dups derivation stay sentinel-free. */
-  def sentinelDir(spark: SparkSession): String =
+  /** The first far-future sentinel row (2400-01-01), staged once per
+    * JVM as its own tiny parquet dir. Kept OUT of [[eventsDir]] so
+    * q148's dedup source and the dups derivation stay sentinel-free;
+    * [[run]] describes what it is for. */
+  private def sentinelDir(spark: SparkSession): String =
     staged.computeIfAbsent("#sentinelA", _ => {
       import spark.implicits._
       val out = TempDirs.create("graft-stream-sentinel").toString + "/sentinel"
@@ -107,7 +100,7 @@ object StreamStage {
   /** Schema of the staged superset (one footer read, memoized). */
   private val schemas =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-  def eventsSchema(spark: SparkSession, dir: String): StructType =
+  private def eventsSchema(spark: SparkSession, dir: String): StructType =
     schemas.computeIfAbsent(dir,
       _ => Tables.parquet(spark, eventsDir(spark, dir)).schema)
 
@@ -115,7 +108,7 @@ object StreamStage {
     * of the given staged dirs HARD-LINKED in (no data copied — the
     * whole point of the shared stage), so the query can append its own
     * sentinel files without other queries ever seeing them. */
-  def linkedDir(prefix: String, srcDirs: String*): String = {
+  private def linkedDir(prefix: String, srcDirs: String*): String = {
     val out = TempDirs.create(prefix)
     srcDirs.zipWithIndex.foreach { case (src, i) =>
       val d = java.nio.file.Paths.get(src)
@@ -129,16 +122,9 @@ object StreamStage {
     out.toString
   }
 
-  /** The watermark-advancing harness shared by the timer-flushed
-    * kernels: batch N's watermark is computed from batch N−1's max
-    * event time, and [[sentinelDir]] already placed a 2400-01-01 row
-    * in batch 1 — so ONE appended far-future file (2500-01-01) is
-    * enough: the batch it triggers runs with the watermark already
-    * past every real event and fires every real-data timer. (Until
-    * r15 this appended TWO sentinels = two extra stateful
-    * micro-batches; sources built without [[sentinelDir]] would need
-    * that form back.) */
-  def advanceWatermark(spark: SparkSession, sentDir: String,
+  /** Appends the second far-future sentinel (2500-01-01) to the query's
+    * private source dir and runs the micro-batch it triggers. */
+  private def advanceWatermark(spark: SparkSession, sentDir: String,
       query: StreamingQuery): Unit = {
     import spark.implicits._
     val t = java.sql.Timestamp.valueOf("2500-01-01 00:00:00")
@@ -146,5 +132,58 @@ object StreamStage {
       .toDF("event_id", "user_id", "event_type", "ts_us", "ts", "value")
       .write.mode("append").parquet(sentDir)
     query.processAllAvailable()
+  }
+
+  /** The feed linked into a run's source beside the staged events. */
+  sealed trait Feed
+  /** The far-future sentinels that fire every event-time timer ([[run]]). */
+  case object Sentinels extends Feed
+  /** Every 5th event again ([[dupsDir]]); no watermark advance. */
+  case object Duplicates extends Feed
+
+  /** Memory-sink names must be unique per stream start within a JVM. */
+  private val queryIds = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Runs one bounded streaming catalog query and returns its memory
+    * sink, read back from the session clone the query ran in.
+    *
+    * The source is a private dir of links to the staged events plus
+    * `feed`, read as a parquet file stream with the staged schema in a
+    * [[streamSession]] clone; `kernel` turns it into the streaming
+    * result, which runs in Append mode into a memory sink named
+    * `graft_<name>_<n>`. Every staged file arrives in micro-batch 1.
+    *
+    * With [[Sentinels]] the timer kernels flush every real window or
+    * run. A batch's watermark comes from the earlier batches' max event
+    * time, and after a watermark advance Spark runs a no-data batch for
+    * the timers and state it makes due. A 2400-01-01 sentinel row sits
+    * in batch 1 beside the real events, so the watermark after batch 1
+    * is past every real event and no-data batch 2 fires every real-data
+    * timer. One 2500-01-01 sentinel file is then appended: data batch 3
+    * and no-data batch 4 close only the first sentinel's own group.
+    * That is 4 micro-batches per query (`StreamingCatalogSpec` pins the
+    * counts; each batch re-instantiates one state store per shuffle
+    * partition, so the count multiplies the constant). Sentinel rows
+    * carry user_id −1 and event_type "sentinel", and their windows
+    * lie past 2400-01-01; the caller's projection drops them. With
+    * [[Duplicates]] the query runs its data batch and the no-data batch
+    * of its watermark advance, 2 in all. */
+  def run(spark: SparkSession, dir: String, name: String, feed: Feed)(
+      kernel: DataFrame => Dataset[_]): DataFrame = {
+    val src = linkedDir(s"graft-$name", eventsDir(spark, dir), feed match {
+      case Sentinels => sentinelDir(spark)
+      case Duplicates => dupsDir(spark, dir)
+    })
+    val ss = streamSession(spark)
+    val qname = s"graft_${name}_${queryIds.incrementAndGet()}"
+    val query = kernel(ss.readStream.schema(eventsSchema(spark, dir)).parquet(src))
+      .writeStream.format("memory").queryName(qname)
+      .outputMode(OutputMode.Append())
+      .start()
+    try {
+      query.processAllAvailable()
+      if (feed == Sentinels) advanceWatermark(spark, src, query)
+    } finally query.stop()
+    ss.table(qname)
   }
 }

@@ -149,6 +149,16 @@ class HarnessSpec extends SparkSpec {
     assert(in.sorted == List("Similarity.scala", "Tables.scala"), s"read.parquet( in $in")
   }
 
+  test("under src/main/scala only StreamStage starts a stream and only EventStreams keeps group state") {
+    // one runner owns how a bounded streaming query is run, and the
+    // stateful streaming kernels live in one module
+    Seq(".writeStream" -> "StreamStage.scala",
+      ".flatMapGroupsWithState(" -> "EventStreams.scala").foreach { case (token, file) =>
+      val in = sources.collect { case (name, src) if src.contains(token) => name }
+      assert(in == List(file), s"$token in $in")
+    }
+  }
+
   test("under src/main/scala no ALU probe, idle reference or idle gate is left") {
     Seq("HostCalib", "SPARK_GRAFT_IDLE_REF", "SPARK_GRAFT_REQUIRE_IDLE", "9_000_000_000")
       .foreach { token =>
