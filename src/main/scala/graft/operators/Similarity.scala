@@ -8,17 +8,26 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an `embedding: array<float>` column.
   *
-  * Two paths, as a 100 TB pipeline needs both:
-  *  - [[bruteForceKnn]]: exact top-k. The query side is broadcast
-  *    (BroadcastNestedLoopJoin); the corpus is scanned once, never
-  *    shuffled. Cost O(|corpus| · |queries| · dim) — right when the
-  *    query set is small or as the ground-truth baseline.
-  *  - [[signLshKnn]]: approximate top-k via random-hyperplane sign LSH.
-  *    Corpus is bucketed by a b-bit signature (one narrow pass), queries
-  *    probe only their own bucket — the per-query cost drops by ~2^b.
-  *    Hyperplanes are pseudo-random but fully deterministic (hash of
-  *    (plane, dim)), so results are reproducible with no driver-side
-  *    randomness and no model state to ship.
+  * Seven nearest-neighbour entry points, one exact and the rest
+  * approximate:
+  *  - [[bruteForceKnn]]: exact top-k over a broadcast query side; the
+  *    corpus is scanned once, never shuffled. The ground truth.
+  *  - [[ivfKnn]]: a KMeans coarse quantizer; queries probe `nprobe`
+  *    cells.
+  *  - [[ivfKnnDeterministic]]: the same probe structure over an
+  *    md5-derived codebook, so it is oracle-expressible.
+  *  - [[pqAdcKnn]]: product-quantized codes scored by ADC table
+  *    lookups, optionally re-ranked by exact cosine.
+  *  - [[ivfPqKnn]] and [[ivfPqKnnIndexed]]: IVF cells gate the ADC scan
+  *    (built on the fly, or read from a persisted [[ivfPqIndex]]).
+  *  - [[signLshKnn]]: random-hyperplane sign-LSH buckets.
+  *
+  * Every cosine-ranked kernel ends in [[topK]], the one output
+  * contract: cos_sim = dot / (‖q‖·‖c‖) over precomputed norms, rank =
+  * `row_number` by cos_sim DESC then neighbor_id ASC as a long, rows
+  * with rank ≤ k, columns (query_id, rank, neighbor_id, cos_sim).
+  * Self-pairs are excluded. [[pqAdcKnn]] without re-rank ranks by ADC
+  * distance instead and emits adc_dist.
   *
   * All arithmetic is double (floats upcast once) and every fold is
   * sequential in array order, so scores are deterministic.
@@ -39,40 +48,41 @@ object Similarity {
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Exact top-k cosine neighbors of `queries` within `corpus`.
-    * Both frames must carry (`vec_id`, `embedding`). Self-pairs excluded.
-    * Output: query_id, rank (1-based), neighbor_id, cos_sim.
-    */
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(
-      col("vec_id"),
-      asDouble(col("embedding")).as("emb"))
+  /** Corpus side of every cosine: (vec_id, emb, nrm). */
+  private def corpusVectors(corpus: DataFrame): DataFrame =
+    corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("nrm", l2Norm(col("emb")))
-    val q = queries.select(
-      col("vec_id").as("query_id"),
-      asDouble(col("embedding")).as("q_emb"))
+
+  /** Query side of every cosine: (`id`, q_emb, q_nrm). */
+  private def queryVectors(queries: DataFrame, id: String = "query_id"): DataFrame =
+    queries.select(col("vec_id").as(id), asDouble(col("embedding")).as("q_emb"))
       .withColumn("q_nrm", l2Norm(col("q_emb")))
+
+  /** The kNN output contract (see the object doc): score the candidate
+    * `pairs` (query_id, q_emb, q_nrm, emb, nrm and the column
+    * `neighbor` names) and keep each query's k best, cosine ties by
+    * neighbor_id ASC. */
+  private def topK(pairs: DataFrame, neighbor: Column, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    c.join(broadcast(q), col("query_id") =!= col("vec_id"))
+    pairs
       .withColumn("cos_sim",
         dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos_sim"))
+      .select(col("query_id"), neighbor, col("cos_sim"))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "neighbor_id", "cos_sim")
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * md5-derived integer mapped to [-1, 1). Computed DRIVER-SIDE once —
-    * plane vectors are data-independent, so evaluating md5 per row per
-    * element (the naive column formulation) wastes executor time; the
-    * vectors ship as plan literals instead. No RNG, no driver state. */
-  /** Integer numerator of [[planeComponent]] (value × 10000) — exposed
-    * so oracle SQL can emit the component as the exact rational
-    * `k/10000.0` and reproduce the identical IEEE division. */
+  /** Exact top-k cosine neighbors of `queries` within `corpus`. Both
+    * frames carry (`vec_id`, `embedding`). The query side is broadcast
+    * (BroadcastNestedLoopJoin); cost O(|corpus| · |queries| · dim). */
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(corpusVectors(corpus)
+        .join(broadcast(queryVectors(queries)), col("query_id") =!= col("vec_id")),
+      col("vec_id").as("neighbor_id"), k)
+
+  /** md5 of `key` mapped to an integer in [-10000, 10000). */
   private def md5Scaled(key: String): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(key.getBytes("UTF-8"))
@@ -81,9 +91,17 @@ object Similarity {
     (h % 20000L) - 10000L
   }
 
+  /** Integer numerator of [[planeComponent]] (value × 10000) — exposed
+    * so oracle SQL can emit the component as the exact rational
+    * `k/10000.0` and reproduce the identical IEEE division. */
   private[graft] def planeComponentScaled(plane: Int, d: Int): Long =
     md5Scaled(s"plane$plane|$d")
 
+  /** Deterministic pseudo-random hyperplane component for (plane, dim):
+    * md5-derived integer mapped to [-1, 1). Computed DRIVER-SIDE once —
+    * plane vectors are data-independent, so evaluating md5 per row per
+    * element (the naive column formulation) wastes executor time; the
+    * vectors ship as plan literals instead. No RNG, no driver state. */
   private[graft] def planeComponent(plane: Int, d: Int): Double =
     planeComponentScaled(plane, d).toDouble / 10000.0
 
@@ -141,11 +159,8 @@ object Similarity {
     import spark.implicits._
     val centDf = centroids.toDF("cell", "centroid")
 
-    val q = queries.select(col("vec_id").as("query_id"),
-        asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_nrm", l2Norm(col("q_emb")))
     val probeW = Window.partitionBy("query_id").orderBy(col("dist").asc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(centDf))
+    val probes = queryVectors(queries).crossJoin(broadcast(centDf))
       .withColumn("dist",
         aggregate(zip_with(col("q_emb"), col("centroid"), (x, y) => (x - y) * (x - y)),
           lit(0.0), (acc, x) => acc + x))
@@ -153,16 +168,8 @@ object Similarity {
       .filter(col("probe_rank") <= nprobe)
       .select("query_id", "q_emb", "q_nrm", "cell")
 
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    assigned.join(probes, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim",
-        dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos_sim")
+    topK(assigned.join(probes, "cell").filter(col("query_id") =!= col("vec_id")),
+      col("vec_id").as("neighbor_id"), k)
   }
 
   /** Norm of the deterministic centroid of `cell` — ONE double computed
@@ -172,39 +179,43 @@ object Similarity {
   private[graft] def cellNorm(cell: Int, dim: Int): Double =
     math.sqrt((0 until dim).map { d => val c = cellComponent(cell, d); c * c }.sum)
 
-  /** Spherical quantizer score of `emb` against the centroid of `cell`:
-    * e·c/‖c‖ — direction-based assignment with the norms equalized out.
-    * Plain L2 argmin against the RAW md5 codebook degenerates: the
-    * random centroids' norms differ, and ‖e−c‖² = ‖e‖²−2e·c+‖c‖² is
-    * then dominated by ‖c‖², so the few smallest-norm centroids capture
-    * nearly everything (measured: 2 of 16 cells held 95% of a
-    * 200k-vector corpus). Normalizing the metric restores balanced
-    * cells AND matches the cosine metric the kNN itself ranks by. The
-    * dot runs on the codegen'd ArrayDotProduct kernel; ‖c‖ is a plan
-    * literal; the oracle spells the identical two-op expression —
-    * bit-identical scores, hence identical argmax cells and probe
-    * rankings. */
-  private def cellScore(emb: Column, cell: Int, dim: Int): Column = {
-    val cen = typedlit((0 until dim).map(d => cellComponent(cell, d)))
-    dot(emb, cen) / lit(cellNorm(cell, dim))
+  /** Spherical quantizer scores of `emb` against the `numCells`
+    * centroids: e·c/‖c‖ — direction-based assignment with the norms
+    * equalized out. Plain L2 argmin against the RAW md5 codebook
+    * degenerates: the random centroids' norms differ, and
+    * ‖e−c‖² = ‖e‖²−2e·c+‖c‖² is then dominated by ‖c‖², so the few
+    * smallest-norm centroids capture nearly everything (measured: 2 of
+    * 16 cells held 95% of a 200k-vector corpus). Normalizing the metric
+    * restores balanced cells AND matches the cosine metric the kNN
+    * itself ranks by. The dot runs on the codegen'd ArrayDotProduct
+    * kernel; ‖c‖ is a plan literal; the oracle spells the identical
+    * two-op expression — bit-identical scores, hence identical argmax
+    * cells and probe rankings. */
+  private def cellScores(emb: Column, numCells: Int, dim: Int): Column =
+    array((0 until numCells).map { cell =>
+      val cen = typedlit((0 until dim).map(d => cellComponent(cell, d)))
+      dot(emb, cen) / lit(cellNorm(cell, dim))
+    }: _*)
+
+  /** Index of the best score (first index on ties → lowest cell). */
+  private def argmaxCell(scores: Column): Column =
+    (array_position(scores, array_max(scores)) - 1).cast("int")
+
+  /** The `nprobe` best-scoring cells of every query in `q` (which holds
+    * query_id and q_emb): posexplode the score array, window rank on
+    * the query relation only (small side — the corpus never sees this
+    * shuffle), ties to the lower cell. Keeps `carry` plus `cell`. */
+  private def probeCells(q: DataFrame, carry: Seq[Column], numCells: Int,
+      nprobe: Int, dim: Int): DataFrame = {
+    val probeW = Window.partitionBy("query_id")
+      .orderBy(col("score").desc, col("cell").asc)
+    q.select(carry :+
+        posexplode(cellScores(col("q_emb"), numCells, dim)).as(Seq("cell", "score")): _*)
+      .withColumn("pr", row_number().over(probeW))
+      .filter(col("pr") <= nprobe)
+      .select(carry :+ col("cell"): _*)
   }
 
-  /** IVF ANN with a DETERMINISTIC codebook: the `numCells` coarse
-    * centroids are md5-derived pseudo-random directions (plan
-    * literals — no fit job, no model state, no engine-version
-    * dependence), corpus vectors are assigned to their argmax
-    * spherical-score cell in ONE NARROW pass (first index on score
-    * ties → lowest cell), and each query probes its `nprobe`
-    * best-scoring cells. Unlike [[ivfKnn]]'s KMeans quantizer this is
-    * fully oracle-expressible — every score is a literal-centroid dot
-    * DuckDB reproduces bit-for-bit — at the cost of data-agnostic
-    * (rather than learned) cell boundaries.
-    *
-    * 100 TB shape: the only corpus shuffle is the join on `cell`; the
-    * probe fanout (×nprobe) is query-side only and window-ranked on the
-    * tiny query relation; centroid math never leaves the scan's
-    * projection.
-    */
   /** Deterministic coarse-cell assignment: every corpus vector mapped to
     * its argmax spherical-score cell against the md5-derived codebook
     * (first index on score ties → lowest cell). One narrow pass — the
@@ -212,16 +223,11 @@ object Similarity {
     * projection. Returns (vec_id, emb, nrm, cell); shared by
     * [[ivfKnnDeterministic]] and [[semDedup]]. */
   def assignCellsDeterministic(corpus: DataFrame, numCells: Int = 8,
-      dim: Int = 64): DataFrame = {
-    val scores =
-      array((0 until numCells).map(cc => cellScore(col("emb"), cc, dim)): _*)
-    corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", l2Norm(col("emb")))
-      .withColumn("scores", scores)
-      .withColumn("cell",
-        (array_position(col("scores"), array_max(col("scores"))) - 1).cast("int"))
+      dim: Int = 64): DataFrame =
+    corpusVectors(corpus)
+      .withColumn("scores", cellScores(col("emb"), numCells, dim))
+      .withColumn("cell", argmaxCell(col("scores")))
       .drop("scores")
-  }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", public): semantic
@@ -262,34 +268,29 @@ object Similarity {
       .orderBy("vec_id")
   }
 
+  /** IVF ANN with a DETERMINISTIC codebook: the `numCells` coarse
+    * centroids are md5-derived pseudo-random directions (plan
+    * literals — no fit job, no model state, no engine-version
+    * dependence), corpus vectors are assigned to their argmax
+    * spherical-score cell in ONE NARROW pass (first index on score
+    * ties → lowest cell), and each query probes its `nprobe`
+    * best-scoring cells. Unlike [[ivfKnn]]'s KMeans quantizer this is
+    * fully oracle-expressible — every score is a literal-centroid dot
+    * DuckDB reproduces bit-for-bit — at the cost of data-agnostic
+    * (rather than learned) cell boundaries.
+    *
+    * 100 TB shape: the only corpus shuffle is the join on `cell`; the
+    * probe fanout (×nprobe) is query-side only and window-ranked on the
+    * tiny query relation; centroid math never leaves the scan's
+    * projection.
+    */
   def ivfKnnDeterministic(corpus: DataFrame, queries: DataFrame, k: Int,
       numCells: Int = 8, nprobe: Int = 2, dim: Int = 64): DataFrame = {
-    def scores(emb: Column): Column =
-      array((0 until numCells).map(cc => cellScore(emb, cc, dim)): _*)
     val c = assignCellsDeterministic(corpus, numCells, dim)
-    // nprobe best cells per query: posexplode the score array, window
-    // rank on the query relation only (small side — the corpus never
-    // sees this shuffle)
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("cell").asc)
-    val q = queries.select(col("vec_id").as("query_id"),
-        asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_nrm", l2Norm(col("q_emb")))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        posexplode(scores(col("q_emb"))).as(Seq("cell", "score")))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("q_emb"), col("q_nrm"), col("cell"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    c.join(q, Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim",
-        dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos_sim")
+    val q = probeCells(queryVectors(queries),
+      Seq(col("query_id"), col("q_emb"), col("q_nrm")), numCells, nprobe, dim)
+    topK(c.join(q, Seq("cell")).filter(col("query_id") =!= col("vec_id")),
+      col("vec_id").as("neighbor_id"), k)
   }
 
   // ------------------------------------------------------------------
@@ -364,13 +365,16 @@ object Similarity {
     * (PqSpec pins element-exact parity with the composed form), so
     * ADC hashes are unchanged. */
   private[graft] def pqQueryTable(df: DataFrame, dim: Int = 64): DataFrame = {
-    require(dim == PqSubspaces * PqSubDim,
-      s"pq: dim $dim != ${PqSubspaces * PqSubDim}")
+    requirePqDim(dim)
     val tab = graft.plans.PqDistTable(
       asDouble(col("embedding")), pqCodebookFlat, pqNorms2Flat,
       PqSubspaces, PqCodes, PqSubDim)
     df.select(col("vec_id"), tab.as("qtab"))
   }
+
+  private def requirePqDim(dim: Int): Unit =
+    require(dim == PqSubspaces * PqSubDim,
+      s"pq: dim $dim != ${PqSubspaces * PqSubDim}")
 
   /** Stage vec_id, normalized embedding, and the 8 per-subspace distance
     * arrays (d0..d7) in one narrow pass. Each non-cheap intermediate
@@ -383,10 +387,8 @@ object Similarity {
     * `flatten(array(d0..d7))` of this form bit-equal to the kernel's
     * output, which is what makes the fusion hash-safe. */
   private[graft] def pqStage(df: DataFrame, dim: Int = 64): DataFrame = {
-    require(dim == PqSubspaces * PqSubDim,
-      s"pq: dim $dim != ${PqSubspaces * PqSubDim}")
-    df.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", l2Norm(col("emb")))
+    requirePqDim(dim)
+    corpusVectors(df)
       .withColumn("ne", transform(col("emb"), x => x / col("nrm")))
       .select(col("vec_id") +: col("ne") +:
         (0 until PqSubspaces).map(s =>
@@ -407,12 +409,8 @@ object Similarity {
     * interpreter at ~135 µs/row and dominated the ADC scan (bit-same
     * arithmetic, so q62/q63 hashes are unchanged). */
   def pqEncode(corpus: DataFrame, dim: Int = 64): DataFrame = {
-    require(dim == PqSubspaces * PqSubDim,
-      s"pq: dim $dim != ${PqSubspaces * PqSubDim}")
-    val enc = graft.plans.PqEncode(
-      asDouble(col("embedding")), pqCodebookFlat, pqNorms2Flat,
-      PqSubspaces, PqCodes, PqSubDim)
-    corpus.select(col("vec_id"), enc.as("__pq_enc"))
+    requirePqDim(dim)
+    corpus.select(col("vec_id"), pqEncodeExpr(asDouble(col("embedding"))).as("__pq_enc"))
       .select(col("vec_id"), col("__pq_enc.codes").as("codes"),
         col("__pq_enc.recon_err").as("recon_err"))
   }
@@ -426,6 +424,11 @@ object Similarity {
   private[graft] lazy val pqNorms2Flat: Array[Double] =
     (for { s <- 0 until PqSubspaces; k <- 0 until PqCodes }
       yield pqCodewordNorm2(s, k)).toArray
+
+  /** The [[graft.plans.PqEncode]] kernel over `emb`: struct(codes, recon_err). */
+  private def pqEncodeExpr(emb: Column): Column =
+    graft.plans.PqEncode(emb, pqCodebookFlat, pqNorms2Flat,
+      PqSubspaces, PqCodes, PqSubDim)
 
   /** Approximate top-k via PQ asymmetric distance computation (ADC):
     * the corpus is its 8-byte codes; each query ships its 8×16 distance
@@ -461,44 +464,50 @@ object Similarity {
     // 8.6 s → 4.4 s on the same scan), and the fused kernel keeps the
     // table build inside JIT-compiled code (the composed form's 42.9 KB
     // method ran interpreted — r15 audit).
-    val q = pqQueryTable(queries, dim)
-      .select(col("vec_id").as("query_id"), col("qtab"))
+    val q = queryTables(queries, dim)
+    val ranked = adcRanked(c.join(broadcast(q), col("query_id") =!= col("vec_id")))
+    if (rerank <= 0)
+      ranked.filter(col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "adc_dist")
+    else exactRerank(ranked, rerank, corpus, queries, k)
+  }
+
+  /** (query_id, qtab): the per-query ADC lookup tables of [[pqQueryTable]]. */
+  private def queryTables(queries: DataFrame, dim: Int): DataFrame =
+    pqQueryTable(queries, dim).select(col("vec_id").as("query_id"), col("qtab"))
+
+  /** ADC stage over (query_id, qtab) × (vec_id, codes) `pairs`: the
+    * distance is 8 flat-table lookups + 8 adds, ranked ascending per
+    * query with ties by neighbor_id. Emits (query_id, neighbor_id,
+    * adc_dist, rank). */
+  private def adcRanked(pairs: DataFrame): DataFrame = {
     val adc = (lit(0.0) +: (0 until PqSubspaces).map { s =>
       element_at(col("qtab"),
         lit(s * PqCodes) + element_at(col("codes"), s + 1).cast("int") + 1)
     }).reduce(_ + _)
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    val adcRanked = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
+    pairs
       .withColumn("adc_dist", adc)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_dist"))
       .withColumn("rank", row_number().over(wAdc).cast("long"))
-    if (rerank <= 0)
-      adcRanked.filter(col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "adc_dist")
-    else {
-      val cand = adcRanked.filter(col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-      val cEmb = corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        .withColumn("nrm", l2Norm(col("emb")))
-      val qEmb = queries.select(col("vec_id").as("qid"),
-          asDouble(col("embedding")).as("q_emb"))
-        .withColumn("q_nrm", l2Norm(col("q_emb")))
-      val wCos = Window.partitionBy("query_id")
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      // |queries|·rerank candidate ids are the small side by
-      // construction — broadcast them so the full-vector corpus is
-      // probed in place instead of shuffled into a sort-merge join
-      broadcast(cand)
+  }
+
+  /** Second stage of the PQ kernels: the `rerank` best ADC candidates
+    * of each query, scored by exact cosine against the full vectors and
+    * cut to k by [[topK]]. */
+  private def exactRerank(adcRanked: DataFrame, rerank: Int, corpus: DataFrame,
+      queries: DataFrame, k: Int): DataFrame = {
+    val cand = adcRanked.filter(col("rank") <= rerank)
+      .select("query_id", "neighbor_id")
+    val cEmb = corpusVectors(corpus)
+    // |queries|·rerank candidate ids are the small side by
+    // construction — broadcast them so the full-vector corpus is
+    // probed in place instead of shuffled into a sort-merge join
+    topK(broadcast(cand)
         .join(cEmb, cand("neighbor_id") === cEmb("vec_id"))
-        .join(broadcast(qEmb), col("query_id") === col("qid"))
-        .withColumn("cos_sim",
-          dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-        .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-        .withColumn("rank", row_number().over(wCos).cast("long"))
-        .filter(col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    }
+        .join(broadcast(queryVectors(queries, "qid")), col("query_id") === col("qid")),
+      col("neighbor_id"), k)
   }
 
   /** IVF+PQ: the production ANN index shape (FAISS-style IVFADC — Jégou
@@ -537,20 +546,12 @@ object Similarity {
     * ivfPqKnn scaladoc promises: a deployment materializes THIS frame,
     * not the raw vectors, and every query batch scans it instead of
     * re-encoding the corpus. */
-  def ivfPqIndex(corpus: DataFrame, numCells: Int = 8, dim: Int = 64): DataFrame = {
-    def scores(emb: Column): Column =
-      array((0 until numCells).map(cc => cellScore(emb, cc, dim)): _*)
-    val enc = graft.plans.PqEncode(
-      col("emb"), pqCodebookFlat, pqNorms2Flat,
-      PqSubspaces, PqCodes, PqSubDim)
+  def ivfPqIndex(corpus: DataFrame, numCells: Int = 8, dim: Int = 64): DataFrame =
     corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("scores", scores(col("emb")))
-      .select(col("vec_id"),
-        (array_position(col("scores"), array_max(col("scores"))) - 1)
-          .cast("int").as("cell"),
-        enc.as("__pq_enc"))
+      .withColumn("scores", cellScores(col("emb"), numCells, dim))
+      .select(col("vec_id"), argmaxCell(col("scores")).as("cell"),
+        pqEncodeExpr(col("emb")).as("__pq_enc"))
       .select(col("vec_id"), col("cell"), col("__pq_enc.codes").as("codes"))
-  }
 
   /** Persist the IVF+PQ index, PARTITIONED BY CELL: each coarse cell is
     * its own parquet partition directory, so an indexed query that
@@ -583,25 +584,10 @@ object Similarity {
                       k: Int, numCells: Int = 8, nprobe: Int = 2,
                       rerank: Int = 30, dim: Int = 64,
                       pruneCells: Boolean = true): DataFrame = {
-    def scores(emb: Column): Column =
-      array((0 until numCells).map(cc => cellScore(emb, cc, dim)): _*)
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("cell").asc)
-    val probes = queries
-      .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_emb"))
-      .select(col("query_id"), posexplode(scores(col("q_emb"))).as(Seq("cell", "score")))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= nprobe)
-      .select("query_id", "cell")
-    val qtab = pqQueryTable(queries, dim)
-      .select(col("vec_id").as("query_id"), col("qtab"))
-    val q = probes.join(qtab, "query_id") // both tiny: |queries|·nprobe rows
-    val adc = (lit(0.0) +: (0 until PqSubspaces).map { s =>
-      element_at(col("qtab"),
-        lit(s * PqCodes) + element_at(col("codes"), s + 1).cast("int") + 1)
-    }).reduce(_ + _)
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
+    val probes = probeCells(
+      queries.select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("q_emb")),
+      Seq(col("query_id")), numCells, nprobe, dim)
+    val q = probes.join(queryTables(queries, dim), "query_id") // both tiny: |queries|·nprobe rows
     val c =
       if (!pruneCells) index
       else {
@@ -613,38 +599,33 @@ object Similarity {
           .collect().map(_.getInt(0)).toSeq
         index.filter(col("cell").isin(probed: _*))
       }
-    val cand = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("adc_dist", adc)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc_dist"))
-      .withColumn("rank", row_number().over(wAdc).cast("long"))
-      .filter(col("rank") <= rerank)
-      .select("query_id", "neighbor_id")
-    val cEmb = corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", l2Norm(col("emb")))
-    val qEmb = queries.select(col("vec_id").as("qid"),
-        asDouble(col("embedding")).as("q_emb"))
-      .withColumn("q_nrm", l2Norm(col("q_emb")))
-    val wCos = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    broadcast(cand)
-      .join(cEmb, cand("neighbor_id") === cEmb("vec_id"))
-      .join(broadcast(qEmb), col("query_id") === col("qid"))
-      .withColumn("cos_sim",
-        dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos_sim")
+    exactRerank(
+      adcRanked(c.join(broadcast(q), Seq("cell")).filter(col("query_id") =!= col("vec_id"))),
+      rerank, corpus, queries, k)
   }
+
+  /** The two-stage bucket cap: keep the `cap` lowest `vec_id` rows of
+    * every (t, s) bucket with Spark's `WindowGroupLimit`, which the
+    * planner splits into a `Partial` pass within each INPUT partition
+    * (a partition-local sort, then the per-group limit) below the
+    * exchange and a `Final` pass above it. Partial output per
+    * partition per bucket is ≤ cap, so no task after the exchange
+    * receives more than numPartitions·cap rows of a bucket even when
+    * one hot bucket holds the whole corpus. Each globally cap-lowest
+    * id is its own partition's lowest, so the Partial pass keeps a
+    * superset of the survivors and the result is bit-identical to the
+    * window alone. */
+  private[graft] def partialBucketCap(cAll: DataFrame, cap: Int): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.windowGroupLimit(
+      cAll, Seq("t", "s"), "vec_id", cap)
 
   /** Approximate top-k: bucket corpus and queries by sign-LSH signature,
     * rank only within the shared bucket. One shuffle on the signature —
     * the scale path when |queries| is large. Recall < 1 by construction;
     * callers wanting guarantees multi-probe (union over several `bits`
     * prefixes) or fall back to [[bruteForceKnn]].
-    */
-  /** @param multiProbe when true, each query also probes every bucket
+    *
+    * @param multiProbe when true, each query also probes every bucket
     *   at Hamming distance 1 from its own signature (bits+1 probes per
     *   table) — the standard recall lift that costs query-side fanout
     *   instead of a second corpus pass. The corpus is still bucketed
@@ -676,21 +657,6 @@ object Similarity {
     *   sort per bucket (O(B log B)) on the exchange the probe join
     *   already needs; at real scale the primary knob is still `bits`
     *   (smaller buckets), the cap is the guarantee. */
-  /** The two-stage bucket cap: keep the `cap` lowest `vec_id` rows of
-    * every (t, s) bucket with Spark's `WindowGroupLimit`, which the
-    * planner splits into a `Partial` pass within each INPUT partition
-    * (a partition-local sort, then the per-group limit) below the
-    * exchange and a `Final` pass above it. Partial output per
-    * partition per bucket is ≤ cap, so no task after the exchange
-    * receives more than numPartitions·cap rows of a bucket even when
-    * one hot bucket holds the whole corpus. Each globally cap-lowest
-    * id is its own partition's lowest, so the Partial pass keeps a
-    * superset of the survivors and the result is bit-identical to the
-    * window alone. */
-  private[graft] def partialBucketCap(cAll: DataFrame, cap: Int): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.windowGroupLimit(
-      cAll, Seq("t", "s"), "vec_id", cap)
-
   def signLshKnn(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int = 8,
                  multiProbe: Boolean = false, dim: Int = 64,
                  tables: Int = 1, bucketCap: Option[Int] = None): DataFrame = {
@@ -750,8 +716,6 @@ object Similarity {
       } yield struct(lit(t).as("t"), probe.as("s"))): _*)))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         col("ts.t").as("t"), col("ts.s").as("s"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
     val joined = c.join(q, Seq("t", "s"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
@@ -767,12 +731,6 @@ object Similarity {
     val once =
       if (tables == 1) joined
       else joined.dropDuplicates("query_id", "neighbor_id")
-    once
-      .withColumn("cos_sim",
-        dot(col("q_emb"), col("emb")) / (col("q_nrm") * col("nrm")))
-      .select(col("query_id"), col("neighbor_id"), col("cos_sim"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cos_sim")
+    topK(once, col("neighbor_id"), k)
   }
 }

@@ -769,6 +769,35 @@ object Relational {
 
   val q107Sql: String = q107SqlWith(MinPairSupport)
 
+  // ------------------------------------------------- co-purchase graph
+  /** The high-quantity co-purchase graph of q78, q86, q87 and q111:
+    * parts are connected when they appear in the same order with
+    * l_quantity ≥ 48, one (src, dst) edge per pair with src < dst.
+    * Edge generation is a per-order self-join: at 100 TB the quantity
+    * filter prunes first, and pair fanout is bounded by per-order line
+    * counts (single digits), not corpus size. */
+  private def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
+    val hi = Tables(spark, dir).lineitem
+      .filter(col("l_quantity") >= 48)
+      .select(col("l_orderkey"), col("l_partkey"))
+    hi.select(col("l_orderkey"), col("l_partkey").as("src"))
+      .join(hi.select(col("l_orderkey"), col("l_partkey").as("dst")),
+        "l_orderkey")
+      .filter(col("src") < col("dst"))
+      .select("src", "dst")
+  }
+
+  /** The oracle twin of [[coPurchaseEdges]]: CTE `e0` holds its edges,
+    * `e` both directions of each. */
+  private val coPurchaseCtes: String =
+    """hi AS (
+      |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 48),
+      |e0 AS (
+      |  SELECT a.l_partkey AS src, b.l_partkey AS dst
+      |  FROM hi a JOIN hi b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)""".stripMargin
+
   // --------------------------------------------------------------- q111
   /** Multi-source BFS over q78's co-purchase graph: every reachable
     * node labeled with its distance to the NEAREST seed (seeds = part
@@ -781,17 +810,10 @@ object Relational {
     * round ONE frontier⋈edges join co-partitioned on the edge key and
     * one anti-join against the seen set; rounds ≤ min(diameter, cap). */
   def q111BfsLevels(spark: SparkSession, dir: String): DataFrame = {
-    val hi = Tables(spark, dir).lineitem
-      .filter(col("l_quantity") >= 48)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val edges = hi.select(col("l_orderkey"), col("l_partkey").as("src"))
-      .join(hi.select(col("l_orderkey"), col("l_partkey").as("dst")),
-        "l_orderkey")
-      .filter(col("src") < col("dst"))
-      .select("src", "dst")
-      .cache() // the seed set below re-reads the same self-join; without
-               // this the lineitem scan+join runs twice (Bench/Verify
-               // clear the cache between queries)
+    // the seed set below re-reads the edges; without the cache the
+    // lineitem scan+join runs twice (Bench/Verify clear the cache
+    // between queries)
+    val edges = coPurchaseEdges(spark, dir).cache()
     val source = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
       .filter(col("node") % 10 === 0)
@@ -800,13 +822,7 @@ object Relational {
   }
 
   val q111Sql: String =
-    """WITH RECURSIVE hi AS (
-      |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 48),
-      |e0 AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM hi a JOIN hi b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    s"""WITH RECURSIVE $coPurchaseCtes,
       |s AS (
       |  SELECT DISTINCT src AS node FROM (
       |    SELECT src FROM e UNION SELECT dst AS src FROM e)
@@ -1348,28 +1364,17 @@ object Relational {
       |ORDER BY id_a, id_b""".stripMargin
 
   // ---------------------------------------------------------------- q78
-  /** Connected components of the high-quantity co-purchase graph:
-    * parts are connected when they appear in the same order with
-    * l_quantity ≥ 48; each part gets its component id (= min part id
-    * in the component) plus the component size. The Spark side is
+  /** Connected components of the co-purchase graph
+    * ([[coPurchaseEdges]]): each part gets its component id (= min part
+    * id in the component) plus the component size. The Spark side is
     * iterative min-label propagation run to fixpoint
     * (operators.Graph); the oracle computes the SAME fixpoint as a
     * DuckDB recursive CTE — two entirely different evaluation
     * strategies agreeing on the closure is the strongest cross-check
-    * in the catalog. Edge generation is a per-order self-join: at
-    * 100 TB the quantity filter prunes first, and pair fanout is
-    * bounded by per-order line counts (single digits), not corpus
-    * size. */
+    * in the catalog. */
   def q78ConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
-    val hi = Tables(spark, dir).lineitem
-      .filter(col("l_quantity") >= 48)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val edges = hi.select(col("l_orderkey"), col("l_partkey").as("src"))
-      .join(hi.select(col("l_orderkey"), col("l_partkey").as("dst")),
-        "l_orderkey")
-      .filter(col("src") < col("dst"))
-      .select("src", "dst")
-    val comp = graft.operators.Graph.connectedComponents(edges, "src", "dst")
+    val comp = graft.operators.Graph.connectedComponents(
+      coPurchaseEdges(spark, dir), "src", "dst")
     val sizes = comp.groupBy("component").agg(count(lit(1)).as("component_size"))
     comp.join(sizes, "component")
       .select(col("node").as("part_id"), col("component"),
@@ -1378,13 +1383,7 @@ object Relational {
   }
 
   val q78Sql: String =
-    """WITH RECURSIVE hi AS (
-      |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 48),
-      |e0 AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM hi a JOIN hi b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    s"""WITH RECURSIVE $coPurchaseCtes,
       |reach(node, root) AS (
       |  SELECT DISTINCT src, src FROM e
       |  UNION
@@ -1448,22 +1447,13 @@ object Relational {
     * engines). The oracle unrolls the same five rounds as chained CTEs:
     * two entirely different evaluation strategies computing the same
     * fixpoint prefix. */
-  def q86PageRank(spark: SparkSession, dir: String): DataFrame = {
-    val hi = Tables(spark, dir).lineitem
-      .filter(col("l_quantity") >= 48)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e0 = hi.select(col("l_orderkey"), col("l_partkey").as("src"))
-      .join(hi.select(col("l_orderkey"), col("l_partkey").as("dst")),
-        "l_orderkey")
-      .filter(col("src") < col("dst"))
-      .select("src", "dst")
+  def q86PageRank(spark: SparkSession, dir: String): DataFrame =
     // symmetrization happens inside the operator, fused with its edge-
     // count sizing pass — one DataFrame union+distinct exchange fewer
-    graft.operators.Graph.pageRank(e0, "src", "dst", iterations = 5,
-        symmetrize = true)
+    graft.operators.Graph.pageRank(coPurchaseEdges(spark, dir), "src", "dst",
+        iterations = 5, symmetrize = true)
       .select(col("node").as("part_id"), col("pr"))
       .orderBy("part_id")
-  }
 
   val q86Sql: String = {
     val k = 5
@@ -1477,13 +1467,7 @@ object Relational {
          |    JOIN e ON e.src = p.node
          |    GROUP BY e.dst) s ON s.node = n.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH hi AS (
-       |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 48),
-       |e0 AS (
-       |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-       |  FROM hi a JOIN hi b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-       |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    s"""WITH $coPurchaseCtes,
        |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
        |nodes AS (SELECT DISTINCT src AS node FROM e),
        |r0 AS (SELECT node, 1000000 AS pr FROM nodes),
@@ -1498,28 +1482,13 @@ object Relational {
     * by oriented out-degree ≤ O(√m), the guard that survives hub nodes
     * at 100 TB. The oracle runs the same orientation as plain SQL
     * joins. */
-  def q87Triangles(spark: SparkSession, dir: String): DataFrame = {
-    val hi = Tables(spark, dir).lineitem
-      .filter(col("l_quantity") >= 48)
-      .select(col("l_orderkey"), col("l_partkey"))
-    val e0 = hi.select(col("l_orderkey"), col("l_partkey").as("src"))
-      .join(hi.select(col("l_orderkey"), col("l_partkey").as("dst")),
-        "l_orderkey")
-      .filter(col("src") < col("dst"))
-      .select("src", "dst")
-    graft.operators.Graph.triangleCounts(e0, "src", "dst")
+  def q87Triangles(spark: SparkSession, dir: String): DataFrame =
+    graft.operators.Graph.triangleCounts(coPurchaseEdges(spark, dir), "src", "dst")
       .select(col("node").as("part_id"), col("triangles"))
       .orderBy("part_id")
-  }
 
   val q87Sql: String =
-    """WITH hi AS (
-      |  SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity >= 48),
-      |e0 AS (
-      |  SELECT a.l_partkey AS src, b.l_partkey AS dst
-      |  FROM hi a JOIN hi b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-      |e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+    s"""WITH $coPurchaseCtes,
       |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY 1),
       |o AS (
       |  SELECT e.src, e.dst FROM e

@@ -25,25 +25,70 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
   }
 
-  val q30Sql: String =
-    """WITH e AS (
+  // The kNN oracles (q30, q42, q42b, q43b, q63, q73) are built from
+  // the fragments below, the SQL twins of Similarity's staging helpers
+  // and of its one ranking contract, Similarity.topK.
+
+  /** `e`: the embeddings upcast to DOUBLE once, at the scan. */
+  private val embCte: String =
+    """e AS (
       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      |  FROM embeddings),
-      |n AS (
-      |  SELECT vec_id, emb,
-      |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm FROM e),
-      |scored AS (
-      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c.emb[i]))
-      |      / (q.nrm * c.nrm) AS cos_sim
-      |  FROM n q, n c
-      |  WHERE q.vec_id < 20 AND c.vec_id != q.vec_id)
-      |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-      |  SELECT query_id, neighbor_id, cos_sim,
-      |    CAST(row_number() OVER (PARTITION BY query_id
-      |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-      |  FROM scored)
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+      |  FROM embeddings)""".stripMargin
+
+  /** L2 norm of `emb`: list_sum is the 0.0-seeded ascending fold
+    * ArrayDotProduct runs. */
+  private val embNorm = "sqrt(list_sum(list_transform(emb, x -> x * x)))"
+
+  /** `e`, then CTE `name` over it: vec_id, emb, nrm and `cols`. */
+  private def normCtes(name: String, cols: String*): String =
+    s"""$embCte,
+       |$name AS (
+       |  SELECT vec_id, emb,
+       |    ${(s"$embNorm AS nrm" +: cols).mkString(",\n    ")}
+       |  FROM e)""".stripMargin
+
+  /** Cosine over precomputed norms, dot / (‖a‖·‖b‖). `a` and `b` prefix
+    * the `emb` and `nrm` columns: a table alias ("q.") or an alias plus
+    * column prefix ("p.q_"). */
+  private def cosSql(a: String, b: String): String =
+    s"""list_sum(list_transform(range(1, 65), i -> ${a}emb[i] * ${b}emb[i]))
+       |      / (${a}nrm * ${b}nrm)""".stripMargin
+
+  /** `scored`: query rows `q` against corpus rows `c` of CTE `n`;
+    * `from` is the FROM (and WHERE) text. */
+  private def scoredPairs(from: String): String =
+    s"""scored AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    ${cosSql("q.", "c.")} AS cos_sim
+       |  $from)""".stripMargin
+
+  /** `scored`: the (query_id, neighbor_id) pairs of CTE `cand`, with
+    * vectors read from CTE `vecs` and the corpus side aliased `c`. */
+  private def scoredCand(vecs: String, c: String): String =
+    s"""scored AS (
+       |  SELECT cand.query_id, cand.neighbor_id,
+       |    ${cosSql("q.", s"$c.")} AS cos_sim
+       |  FROM cand
+       |  JOIN $vecs q ON q.vec_id = cand.query_id
+       |  JOIN $vecs $c ON $c.vec_id = cand.neighbor_id)""".stripMargin
+
+  /** The kNN output contract over CTE `scored`: rank by cos_sim DESC
+    * then neighbor_id, as BIGINT, keep rank <= k. */
+  private def topKSql(k: Int): String =
+    s"""SELECT query_id, rank, neighbor_id, cos_sim FROM (
+       |  SELECT query_id, neighbor_id, cos_sim,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
+       |  FROM scored)
+       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+
+  val q30Sql: String =
+    s"""WITH $embCte,
+       |n AS (
+       |  SELECT vec_id, emb,
+       |    $embNorm AS nrm FROM e),
+       |${scoredPairs("FROM n q, n c\n  WHERE q.vec_id < 20 AND c.vec_id != q.vec_id")}
+       |${topKSql(5)}""".stripMargin
 
   // ---------------------------------------------------------------- q31
   /** Per-vector L2 norm — the scalar kernel under every cosine. */
@@ -225,18 +270,27 @@ object SimilarityQueries {
     // index build.)
     val distinctVecs = e.select("embedding").distinct().count()
     val cap = math.max(Q42BucketCap.toLong, distinctVecs / 4).toInt
-    val lsh = Similarity.signLshKnn(e, q, k = 5, bits = 4, tables = 8,
-      bucketCap = Some(cap))
+    recallGated("q42", Similarity.signLshKnn(e, q, k = 5, bits = 4, tables = 8,
+      bucketCap = Some(cap)), e, q, Q42RecallFloor)
+  }
+
+  /** The in-query recall gate of q42 and q43: the approximate top-5
+    * `approx` of queries `q` over `e` passes through unchanged while its
+    * mean recall@5 against brute force reaches `floor`, and otherwise
+    * the query RAISES — so a result in the correctness artifact
+    * certifies the floor held, not merely that the query ran. */
+  private def recallGated(name: String, approx: DataFrame, e: DataFrame,
+      q: DataFrame, floor: Double): DataFrame = {
     val exact = Similarity.bruteForceKnn(e, q, 5)
       .select(col("query_id"), col("neighbor_id"))
     val gate = exact.join(
-        lsh.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
+        approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
         Seq("query_id", "neighbor_id"), "left")
       .agg(avg(coalesce(col("hit"), lit(0))).as("mean_recall"))
-    lsh.crossJoin(broadcast(gate))
-      .filter(when(col("mean_recall") >= Q42RecallFloor, lit(true))
+    approx.crossJoin(broadcast(gate))
+      .filter(when(col("mean_recall") >= floor, lit(true))
         .otherwise(raise_error(concat(
-          lit(s"q42 recall floor $Q42RecallFloor violated: "),
+          lit(s"$name recall floor $floor violated: "),
           col("mean_recall").cast("string")))))
       .drop("mean_recall")
       .orderBy("query_id", "rank")
@@ -267,14 +321,7 @@ object SimilarityQueries {
     * `bits`-bit sign-LSH signature — the SQL twin of signLshKnn's
     * corpus/query preparation. */
   private def lshScoredCte(bits: Int): String =
-    s"""e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, emb,
-       |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm,
-       |    ${lshSigSql(bits)} AS sig
-       |  FROM e)""".stripMargin
+    normCtes("n", s"${lshSigSql(bits)} AS sig")
 
   val q42Sql: String = {
     // the OR-construction, candidate-capped: per (table, bucket) only
@@ -298,19 +345,8 @@ object SimilarityQueries {
        |  WHERE c.rn <= GREATEST($Q42BucketCap,
        |      (SELECT count(DISTINCT embedding) // 4 FROM embeddings))
        |    AND c.vec_id != qt.query_id),
-       |scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c.emb[i]))
-       |      / (q.nrm * c.nrm) AS cos_sim
-       |  FROM cand
-       |  JOIN n q ON q.vec_id = cand.query_id
-       |  JOIN n c ON c.vec_id = cand.neighbor_id)
-       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |${scoredCand("n", "c")}
+       |${topKSql(5)}""".stripMargin
   }
 
   // --------------------------------------------------------------- q42b
@@ -331,20 +367,12 @@ object SimilarityQueries {
 
   val q42bSql: String = {
     val probeSet = (0L +: (0 until 4).map(b => 1L << b)).mkString("(", ", ", ")")
-    s"""WITH ${lshScoredCte(4)},
-       |scored AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c.emb[i]))
-       |      / (q.nrm * c.nrm) AS cos_sim
-       |  FROM n q JOIN n c
+    val from = s"""FROM n q JOIN n c
        |    ON xor(q.sig, c.sig) IN $probeSet AND c.vec_id != q.vec_id
-       |  WHERE q.vec_id < 20)
-       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+       |  WHERE q.vec_id < 20""".stripMargin
+    s"""WITH ${lshScoredCte(4)},
+       |${scoredPairs(from)}
+       |${topKSql(5)}""".stripMargin
   }
 
   // ---------------------------------------------------------------- q43
@@ -362,21 +390,8 @@ object SimilarityQueries {
   def q43KnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir).embeddings
     val q = e.filter(col("vec_id") < AnnGateQueries) // gate cost envelope: see AnnGateQueries
-    val ivf = Similarity.ivfKnn(e, q, k = 5, numCells = 8, nprobe = 2,
-      maxIter = 5)
-    val exact = Similarity.bruteForceKnn(e, q, 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val gate = exact.join(
-        ivf.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(avg(coalesce(col("hit"), lit(0))).as("mean_recall"))
-    ivf.crossJoin(broadcast(gate))
-      .filter(when(col("mean_recall") >= Q43RecallFloor, lit(true))
-        .otherwise(raise_error(concat(
-          lit(s"q43 recall floor $Q43RecallFloor violated: "),
-          col("mean_recall").cast("string")))))
-      .drop("mean_recall")
-      .orderBy("query_id", "rank")
+    recallGated("q43", Similarity.ivfKnn(e, q, k = 5, numCells = 8, nprobe = 2,
+      maxIter = 5), e, q, Q43RecallFloor)
   }
 
   // --------------------------------------------------------------- q43b
@@ -392,30 +407,29 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
   }
 
-  val q43bSql: String = {
-    // one spherical score per cell in the SAME form the Spark plan
-    // computes: (e·c)/‖c‖, with the centroid emitted as exact rationals
-    // (the q42 trick) and ‖c‖ emitted as a DOUBLE-typed E-notation
-    // literal of the exact value the plan embeds (a plain decimal
-    // literal would parse as DECIMAL and double-round — see sqlDouble)
-    val scoreList = (0 until 8).map { c =>
+  /** The 8 cell scores of `emb` in the SAME form the Spark plan
+    * computes: (e·c)/‖c‖, with the centroid emitted as exact rationals
+    * (the q42 trick) and ‖c‖ emitted as a DOUBLE-typed E-notation
+    * literal of the exact value the plan embeds (a plain decimal
+    * literal would parse as DECIMAL and double-round — see sqlDouble).
+    * Shared by q43b, q73 and q96. */
+  private val cellScoreList: String =
+    (0 until 8).map { c =>
       val cen = (0 until 64)
         .map(d => s"${Similarity.cellComponentScaled(c, d)}.0/10000.0")
         .mkString("[", ",", "]")
       val cnorm = sqlDouble(Similarity.cellNorm(c, 64))
       s"list_sum(list_transform(range(1, 65), i -> emb[i] * ($cen)[i])) / $cnorm"
     }.mkString("[", ",\n    ", "]")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, emb,
-       |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm,
-       |    $scoreList AS scores
-       |  FROM e),
+
+  /** Argmax of `scores`, first index on ties: the cell assignment. */
+  private val argmaxCellSql = "CAST(list_position(scores, list_max(scores)) - 1 AS INT)"
+
+  val q43bSql: String =
+    s"""WITH ${normCtes("n", s"$cellScoreList AS scores")},
        |a AS (
        |  SELECT vec_id, emb, nrm, scores,
-       |    CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
+       |    $argmaxCellSql AS cell
        |  FROM n),
        |probes AS (
        |  SELECT query_id, q_emb, q_nrm, cell FROM (
@@ -427,16 +441,9 @@ object SimilarityQueries {
        |  WHERE pr <= 2),
        |scored AS (
        |  SELECT p.query_id, c.vec_id AS neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> p.q_emb[i] * c.emb[i]))
-       |      / (p.q_nrm * c.nrm) AS cos_sim
+       |    ${cosSql("p.q_", "c.")} AS cos_sim
        |  FROM probes p JOIN a c ON c.cell = p.cell AND c.vec_id != p.query_id)
-       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |${topKSql(5)}""".stripMargin
 
   // ---------------------------------------------------------------- q44
   /** Embedding-cosine near-duplicate pairs (LSH-bucketed). The synthetic
@@ -452,11 +459,7 @@ object SimilarityQueries {
 
   val q44Sql: String =
     s"""WITH ${lshScoredCte(3)},
-       |scored AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c.emb[i]))
-       |      / (q.nrm * c.nrm) AS cos_sim
-       |  FROM n q JOIN n c ON q.sig = c.sig AND c.vec_id != q.vec_id),
+       |${scoredPairs("FROM n q JOIN n c ON q.sig = c.sig AND c.vec_id != q.vec_id")},
        |ranked AS (
        |  SELECT query_id, neighbor_id, cos_sim,
        |    row_number() OVER (PARTITION BY query_id
@@ -559,13 +562,7 @@ object SimilarityQueries {
       s"$dists AS d$s"
     }.mkString(",\n  ")
     s"""cb AS (SELECT $pqCodebookSql AS cb),
-       |e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |pn AS (
-       |  SELECT vec_id, emb,
-       |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm
-       |  FROM e),
+       |${normCtes("pn")},
        |ne AS (
        |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS ne FROM pn),
        |xs AS (
@@ -615,40 +612,39 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
   }
 
-  val q63Sql: String = {
-    val posCols = (0 until Similarity.PqSubspaces)
-      .map(s => s"CAST(list_position(d$s, list_min(d$s)) AS INT)")
-      .mkString("[", ", ", "]")
-    val adc = (0 until Similarity.PqSubspaces)
-      .map(s => s"q.d$s[c.pos[${s + 1}]]").mkString("0.0 + ", " + ", "")
-    s"""WITH $pqStagedCte,
-       |c AS (SELECT vec_id, $posCols AS pos FROM d),
-       |adc AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |    $adc AS adc_dist
-       |  FROM d q JOIN c ON c.vec_id != q.vec_id
-       |  WHERE q.vec_id < 20),
-       |cand AS (
+  /** Each corpus row's PQ codes as 1-based positions into a query
+    * row's distance arrays (`pos`), and the ADC distance of query row
+    * `q` to code row `c`: the SQL twin of Similarity.adcRanked. */
+  private val pqPosCols: String = (0 until Similarity.PqSubspaces)
+    .map(s => s"CAST(list_position(d$s, list_min(d$s)) AS INT)")
+    .mkString("[", ", ", "]")
+  private val adcSql: String = (0 until Similarity.PqSubspaces)
+    .map(s => s"q.d$s[c.pos[${s + 1}]]").mkString("0.0 + ", " + ", "")
+
+  /** After CTE `adc`: `cand` keeps each query's `rerank` lowest ADC
+    * distances (ties by neighbor_id), `scored` re-scores them by exact
+    * cosine over `pn`, and the top-5 tail ranks them — the SQL twin of
+    * Similarity.exactRerank. */
+  private def adcRerankSql(rerank: Int): String =
+    s"""cand AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT query_id, neighbor_id,
        |      row_number() OVER (PARTITION BY query_id
        |        ORDER BY adc_dist ASC, neighbor_id) AS pr
        |    FROM adc)
-       |  WHERE pr <= 50),
-       |scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c2.emb[i]))
-       |      / (q.nrm * c2.nrm) AS cos_sim
-       |  FROM cand
-       |  JOIN pn q ON q.vec_id = cand.query_id
-       |  JOIN pn c2 ON c2.vec_id = cand.neighbor_id)
-       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |  WHERE pr <= $rerank),
+       |${scoredCand("pn", "c2")}
+       |${topKSql(5)}""".stripMargin
+
+  val q63Sql: String =
+    s"""WITH $pqStagedCte,
+       |c AS (SELECT vec_id, $pqPosCols AS pos FROM d),
+       |adc AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    $adcSql AS adc_dist
+       |  FROM d q JOIN c ON c.vec_id != q.vec_id
+       |  WHERE q.vec_id < 20),
+       |${adcRerankSql(50)}""".stripMargin
 
   // ---------------------------------------------------------------- q73
   /** IVF+PQ two-stage ANN (FAISS-style IVFADC): coarse deterministic
@@ -664,25 +660,14 @@ object SimilarityQueries {
       .orderBy("query_id", "rank")
   }
 
-  val q73Sql: String = {
-    // q43b's spherical score list (over the RAW emb, matching the plan)
-    val scoreList = (0 until 8).map { c =>
-      val cen = (0 until 64)
-        .map(d => s"${Similarity.cellComponentScaled(c, d)}.0/10000.0")
-        .mkString("[", ",", "]")
-      val cnorm = sqlDouble(Similarity.cellNorm(c, 64))
-      s"list_sum(list_transform(range(1, 65), i -> emb[i] * ($cen)[i])) / $cnorm"
-    }.mkString("[", ",\n    ", "]")
-    val posCols = (0 until Similarity.PqSubspaces)
-      .map(s => s"CAST(list_position(d$s, list_min(d$s)) AS INT)")
-      .mkString("[", ", ", "]")
-    val adc = (0 until Similarity.PqSubspaces)
-      .map(s => s"q.d$s[c.pos[${s + 1}]]").mkString("0.0 + ", " + ", "")
+  // the cell scores read the RAW emb of CTE `e`, as the plan does, not
+  // the normalized `ne` the PQ stage encodes
+  val q73Sql: String =
     s"""WITH $pqStagedCte,
-       |sc AS (SELECT vec_id, $scoreList AS scores FROM e),
+       |sc AS (SELECT vec_id, $cellScoreList AS scores FROM e),
        |cellassign AS (
        |  SELECT vec_id,
-       |    CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
+       |    $argmaxCellSql AS cell
        |  FROM sc),
        |probes AS (
        |  SELECT query_id, cell FROM (
@@ -693,34 +678,14 @@ object SimilarityQueries {
        |    WHERE s.vec_id < 20)
        |  WHERE pr <= 2),
        |c AS (
-       |  SELECT d.vec_id, $posCols AS pos, cellassign.cell
+       |  SELECT d.vec_id, $pqPosCols AS pos, cellassign.cell
        |  FROM d JOIN cellassign USING (vec_id)),
        |adc AS (
-       |  SELECT p.query_id, c.vec_id AS neighbor_id, $adc AS adc_dist
+       |  SELECT p.query_id, c.vec_id AS neighbor_id, $adcSql AS adc_dist
        |  FROM probes p
        |  JOIN d q ON q.vec_id = p.query_id
        |  JOIN c ON c.cell = p.cell AND c.vec_id != p.query_id),
-       |cand AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY adc_dist ASC, neighbor_id) AS pr
-       |    FROM adc)
-       |  WHERE pr <= 30),
-       |scored AS (
-       |  SELECT cand.query_id, cand.neighbor_id,
-       |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c2.emb[i]))
-       |      / (q.nrm * c2.nrm) AS cos_sim
-       |  FROM cand
-       |  JOIN pn q ON q.vec_id = cand.query_id
-       |  JOIN pn c2 ON c2.vec_id = cand.neighbor_id)
-       |SELECT query_id, rank, neighbor_id, cos_sim FROM (
-       |  SELECT query_id, neighbor_id, cos_sim,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cos_sim DESC, neighbor_id) AS BIGINT) AS rank
-       |  FROM scored)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |${adcRerankSql(30)}""".stripMargin
 
   // --------------------------------------------------------------- q142
   /** Persisted-index lifecycle, end to end: BUILD the IVF+PQ index once
@@ -805,18 +770,17 @@ object SimilarityQueries {
   }
 
   val q114Sql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, CAST(label AS BIGINT) AS label,
       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
       |  FROM embeddings),
       |n AS (
       |  SELECT vec_id, label, emb,
-      |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm FROM e),
+      |    $embNorm AS nrm FROM e),
       |scored AS (
       |  SELECT q.vec_id AS query_id, q.label AS q_label,
       |    c.vec_id AS neg_id, c.label AS neg_label,
-      |    list_sum(list_transform(range(1, 65), i -> q.emb[i] * c.emb[i]))
-      |      / (q.nrm * c.nrm) AS cos_sim
+      |    ${cosSql("q.", "c.")} AS cos_sim
       |  FROM n q JOIN n c ON c.label <> q.label
       |  WHERE q.vec_id < 20)
       |SELECT query_id, q_label, neg_id, neg_label, cos_sim FROM (
@@ -880,39 +844,22 @@ object SimilarityQueries {
     Similarity.semDedup(Tables(spark, dir).embeddings, tau = Q96Tau,
       numCells = 8)
 
-  val q96Sql: String = {
-    // identical literal-centroid spherical scores to q43b's CTE
-    val scoreList = (0 until 8).map { c =>
-      val cen = (0 until 64)
-        .map(d => s"${Similarity.cellComponentScaled(c, d)}.0/10000.0")
-        .mkString("[", ",", "]")
-      val cnorm = sqlDouble(Similarity.cellNorm(c, 64))
-      s"list_sum(list_transform(range(1, 65), i -> emb[i] * ($cen)[i])) / $cnorm"
-    }.mkString("[", ",\n    ", "]")
-    s"""WITH e AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-       |  FROM embeddings),
-       |n AS (
-       |  SELECT vec_id, emb,
-       |    sqrt(list_sum(list_transform(emb, x -> x * x))) AS nrm,
-       |    $scoreList AS scores
-       |  FROM e),
+  val q96Sql: String =
+    s"""WITH ${normCtes("n", s"$cellScoreList AS scores")},
        |a AS (
        |  SELECT vec_id, emb, nrm,
-       |    CAST(list_position(scores, list_max(scores)) - 1 AS INT) AS cell
+       |    $argmaxCellSql AS cell
        |  FROM n),
        |d AS (
        |  SELECT hi.vec_id AS vec_id, min(lo.vec_id) AS dup_of
        |  FROM a hi JOIN a lo ON hi.cell = lo.cell AND lo.vec_id < hi.vec_id
-       |  WHERE list_sum(list_transform(range(1, 65), i -> lo.emb[i] * hi.emb[i]))
-       |      / (lo.nrm * hi.nrm) >= ${sqlDouble(Q96Tau)}
+       |  WHERE ${cosSql("lo.", "hi.")} >= ${sqlDouble(Q96Tau)}
        |  GROUP BY 1)
        |SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell,
        |  d.dup_of IS NULL AS kept,
        |  coalesce(d.dup_of, -1) AS dup_of
        |FROM a LEFT JOIN d ON a.vec_id = d.vec_id
        |ORDER BY a.vec_id""".stripMargin
-  }
 
   // --------------------------------------------------------------- q130
   /** Per-label centroid cosine matrix — the class-separation /

@@ -159,6 +159,19 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("under src/main/scala the kNN rank contract is written once for Spark and once for SQL") {
+    // Similarity.topK and SimilarityQueries.topKSql: every kNN kernel
+    // and every kNN oracle ranks through these two definitions
+    Seq(""".orderBy(col("cos_sim").desc, col("neighbor_id").asc)""" -> "Similarity.scala",
+      "ORDER BY cos_sim DESC, neighbor_id) AS BIGINT" -> "SimilarityQueries.scala").foreach {
+      case (token, file) =>
+        val in = sources.flatMap { case (name, src) =>
+          Seq.fill(src.split(java.util.regex.Pattern.quote(token), -1).length - 1)(name)
+        }
+        assert(in == List(file), s"$token in $in")
+    }
+  }
+
   test("under src/main/scala no ALU probe, idle reference or idle gate is left") {
     Seq("HostCalib", "SPARK_GRAFT_IDLE_REF", "SPARK_GRAFT_REQUIRE_IDLE", "9_000_000_000")
       .foreach { token =>

@@ -53,6 +53,39 @@ class SimilaritySpec extends SparkSpec {
     assert(ivfFull == exact) // probing every cell == exhaustive search
   }
 
+  test("full-probe ANN configurations reproduce brute force exactly, cosine ties by neighbor_id") {
+    // every query vector planted twice more, at a lower and a higher id
+    // than any real one: each query's two copies tie on cosine, and so
+    // do the copies as neighbours of every other query
+    val copies = emb.filter(col("vec_id") < 10)
+    val corpus = emb
+      .unionByName(copies.withColumn("vec_id", col("vec_id") + 5000L))
+      .unionByName(copies.withColumn("vec_id", -col("vec_id") - 1L))
+      .cache()
+    val qs = corpus.filter(col("vec_id").between(0, 9))
+    val all = corpus.count().toInt - 1 // re-rank depth that keeps every candidate
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Double)] =
+      df.select("query_id", "rank", "neighbor_id", "cos_sim")
+        .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(r => (r._1, r._2))
+    val exact = rows(Similarity.bruteForceKnn(corpus, qs, 5))
+    assert(exact.size == 50)
+    // the ties are there, and brute force orders them by neighbor_id
+    val ties = exact.groupBy(r => (r._1, r._4)).values.filter(_.size > 1).toSeq
+    assert(ties.size >= 10, s"expected a tie per query, got $ties")
+    ties.foreach(t => assert(t.sortBy(_._2).map(_._3) == t.map(_._3).sorted, t))
+    Seq(
+      "ivfKnn nprobe=numCells" -> Similarity.ivfKnn(corpus, qs, 5, numCells = 8, nprobe = 8),
+      "ivfKnnDeterministic nprobe=numCells" ->
+        Similarity.ivfKnnDeterministic(corpus, qs, 5, numCells = 8, nprobe = 8),
+      "signLshKnn bits=1 multiProbe" ->
+        Similarity.signLshKnn(corpus, qs, 5, bits = 1, multiProbe = true),
+      s"pqAdcKnn rerank=$all" -> Similarity.pqAdcKnn(corpus, qs, 5, rerank = all),
+      s"ivfPqKnn nprobe=numCells rerank=$all" ->
+        Similarity.ivfPqKnn(corpus, qs, 5, numCells = 8, nprobe = 8, rerank = all)
+    ).foreach { case (name, knn) => assert(rows(knn) == exact, name) }
+    corpus.unpersist()
+  }
+
   test("IVF with partial probing returns valid ranks and decent recall") {
     val qs = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceKnn(emb, qs, 5)
