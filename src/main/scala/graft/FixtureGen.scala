@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import graft.ml.GraftPipelines
 import graft.sources.CorpusReader
-import org.apache.spark.ml.Pipeline
+import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -88,15 +88,15 @@ object FixtureGen {
     }
   }
 
-  /** Fit one seeded scripted variant on the corpus and return the
-    * (name, prediction) golden rows, sorted. */
-  def goldenRowsFor(spark: SparkSession, corpus: String,
-                    pipeline: Pipeline): Seq[(String, Double)] = {
+  /** Fit one seeded scripted variant on the corpus and return the fitted
+    * model with its (name, prediction) golden rows, sorted. */
+  def goldenFit(spark: SparkSession, corpus: String,
+                pipeline: Pipeline): (PipelineModel, Seq[(String, Double)]) = {
     val clean = (df: DataFrame) =>
       df.withColumn("review", graft.functions.TextFunctions.cleanLower(col("review")))
-    val train = clean(CorpusReader.loadLabeled(spark, s"$corpus/train"))
-    val scored = pipeline.fit(train).transform(clean(CorpusReader.loadUnknown(spark, s"$corpus/test")))
-    scored.select("name", "prediction").collect()
+    val model = pipeline.fit(clean(CorpusReader.loadLabeled(spark, s"$corpus/train")))
+    val scored = model.transform(clean(CorpusReader.loadUnknown(spark, s"$corpus/test")))
+    model -> scored.select("name", "prediction").collect()
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq
   }
 
@@ -151,7 +151,7 @@ object FixtureGen {
     if (!Files.exists(root.resolve("train/pos"))) writeCorpus(root)
     Files.createDirectories(Paths.get("fixtures"))
     goldenPipelines.toSeq.sortBy(_._1).foreach { case (name, mk) =>
-      val rows = goldenRowsFor(spark, CorpusDir, mk())
+      val (_, rows) = goldenFit(spark, CorpusDir, mk())
       val tsv = rows.map { case (n, p) => s"$n\t$p" }.mkString("", "\n", "\n")
       Files.writeString(Paths.get(goldenFileFor(name)), tsv)
       println(s"wrote ${rows.size} golden rows to ${goldenFileFor(name)}")

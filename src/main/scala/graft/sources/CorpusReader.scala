@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Corpus ingestion/egress (SURVEY.md §2.1).
   *
@@ -12,16 +13,26 @@ import org.apache.spark.sql.functions._
   * path, and nothing funnels through the driver. At 100 TB this is the
   * difference between a working source and an OOM.
   *
-  * Both loaders return frames packed by bytes: at most
-  * `max(defaultParallelism, ceil(sizeInBytes / spark.sql.files.maxPartitionBytes))`
-  * partitions. The file scan charges every file
-  * `spark.sql.files.openCostInBytes` (4 MB by default) when it packs
-  * splits, so a directory of tiny reviews arrives as one partition per
-  * 32 files (128 MB / 4 MB) holding a few tens of KB, and every later
-  * fit iteration, tree level and χ² pass runs one task per sliver. The
-  * packing is a shuffle-free `coalesce`, so it only ever merges: once
-  * files are large enough for the open cost not to matter, the scan
-  * already has no more partitions than the bound and the frame comes
+  * Both loaders return frames packed by bytes, by Spark's own file-split
+  * rule (`FilePartition.maxSplitBytes`) on the corpus's planned size:
+  * {{{
+  * splitBytes = min(maxPartitionBytes, max(openCostInBytes, ceil(bytes / minPartitionNum)))
+  * partitions = max(1, ceil(bytes / splitBytes))
+  * }}}
+  * with the `spark.sql.files.*` settings, and `minPartitionNum` resolved
+  * as the scan resolves it (`spark.sql.files.minPartitionNum`, else the
+  * leaf-node default parallelism). Unlike the scan, the rule does not
+  * charge every file `openCostInBytes` (4 MB by default): with that
+  * padding a directory of tiny reviews arrives as one partition per 32
+  * files of a few tens of KB, and every later fit iteration, tree level
+  * and χ² pass runs one task per sliver. It also rounds the per-core
+  * share up, so an even split gives exactly `minPartitionNum`
+  * partitions. A corpus under `minPartitionNum × openCostInBytes` (16 MB
+  * on 4 cores) thus reads as one partition per `openCostInBytes`, and a
+  * larger one as `max(minPartitionNum, ceil(bytes / maxPartitionBytes))`.
+  * The packing is a shuffle-free `coalesce`, so it only ever merges:
+  * once files are large enough for the open cost not to matter, the
+  * scan already has no more partitions than the rule and the frame comes
   * back as read.
   */
 object CorpusReader {
@@ -52,11 +63,16 @@ object CorpusReader {
     * size comes from the analyzed plan's statistics, which the read has
     * already computed, so no optimizer or physical planning runs here. */
   private def packed(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
+    val conf = df.sparkSession.sessionState.conf
+    val minPartitions = conf.filesMinPartitionNum
+      .orElse(conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
     val bytes = df.queryExecution.analyzed.stats.sizeInBytes
-    val maxBytes = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    val bySize = ((bytes + maxBytes - 1) / maxBytes).min(Int.MaxValue).toInt
-    df.coalesce(math.max(spark.sparkContext.defaultParallelism, bySize))
+    val perCore = (bytes + minPartitions - 1) / minPartitions
+    val splitBytes = BigInt(conf.filesMaxPartitionBytes)
+      .min(perCore.max(conf.filesOpenCostInBytes))
+    val n = (bytes + splitBytes - 1) / splitBytes
+    df.coalesce(n.max(1).min(Int.MaxValue).toInt)
   }
 
   /** S6 TSV prediction sink: `docid\tlabel` lines. Distributed write;

@@ -5,7 +5,8 @@ import graft.sources.CorpusReader
 import org.apache.spark.sql.DataFrame
 
 /** CorpusReader packs a directory of tiny review files by bytes, not by
-  * file count, and the packing changes neither labels nor file names. */
+  * file count, with Spark's file-split rule minus the per-file open cost,
+  * and the packing changes neither labels nor file names. */
 class CorpusReaderSpec extends SparkSpec {
 
   private val PerClass = 150
@@ -23,15 +24,21 @@ class CorpusReaderSpec extends SparkSpec {
     r
   }
 
-  /** max(defaultParallelism, ceil(bytes on disk / maxPartitionBytes)). */
-  private def bound(dirs: String*): Int = {
-    val bytes = dirs.map { d =>
-      val s = Files.list(root.resolve(d))
-      try s.mapToLong(Files.size(_)).sum() finally s.close()
-    }.sum
-    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    math.max(spark.sparkContext.defaultParallelism,
-      math.ceil(bytes.toDouble / maxBytes).toInt)
+  private def cores: Int = spark.sparkContext.defaultParallelism
+
+  /** The planned bytes CorpusReader packs by: the packed frame's size is
+    * its input's, since a coalesce does not change it. */
+  private def bytes(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
+
+  /** Spark's file-split rule on those bytes, without the per-file open
+    * cost: splitBytes = min(maxPartitionBytes, max(openCostInBytes,
+    * ceil(bytes / cores))), and ceil(bytes / splitBytes) partitions. */
+  private def bound(df: DataFrame): Int = {
+    val conf = spark.sessionState.conf
+    val b = bytes(df)
+    val split = BigInt(conf.filesMaxPartitionBytes)
+      .min(BigInt(conf.filesOpenCostInBytes).max((b + cores - 1) / cores))
+    ((b + split - 1) / split).max(1).toInt
   }
 
   private def scanPartitions(dir: String): Int =
@@ -40,14 +47,74 @@ class CorpusReaderSpec extends SparkSpec {
 
   private def partitions(df: DataFrame): Int = df.rdd.getNumPartitions
 
+  private def labeled: DataFrame = CorpusReader.loadLabeled(spark, s"$root/train")
+
+  private def withFilesConf(openCost: Long, maxBytes: Long)(f: => Unit): Unit = {
+    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), openCost.toString)
+    spark.conf.set(keys(1), maxBytes.toString)
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("loadLabeled and loadUnknown are packed to the byte bound") {
-    val labeledBound = bound("train/pos", "train/neg")
-    val unknownBound = bound("test")
-    // the raw scans are split by file count, so the bound has teeth here
-    assert(scanPartitions("train/pos") + scanPartitions("train/neg") > labeledBound)
-    assert(scanPartitions("test") > unknownBound)
-    assert(partitions(CorpusReader.loadLabeled(spark, s"$root/train")) <= labeledBound)
-    assert(partitions(CorpusReader.loadUnknown(spark, s"$root/test")) <= unknownBound)
+    // the raw scans are split by file count, so the packing has teeth
+    // here; a corpus of a few KB reads as one partition
+    assert(scanPartitions("train/pos") + scanPartitions("train/neg") > 1)
+    assert(scanPartitions("test") > 1)
+    val unknown = CorpusReader.loadUnknown(spark, s"$root/test")
+    assert(bound(labeled) == 1 && bound(unknown) == 1)
+    assert(partitions(labeled) == 1)
+    assert(partitions(unknown) == 1)
+  }
+
+  test("with a small open cost the same files pack to defaultParallelism partitions") {
+    withFilesConf(openCost = 64, maxBytes = 1 << 20) {
+      val df = labeled
+      assert(bytes(df) >= cores * 64 && bytes(df) <= cores * (1 << 20))
+      assert(scanPartitions("train/pos") + scanPartitions("train/neg") > cores)
+      assert(bound(df) == cores)
+      assert(partitions(df) == cores)
+    }
+  }
+
+  test("past cores × maxPartitionBytes the files pack to ceil(bytes / maxPartitionBytes)") {
+    val maxBytes = 1024L
+    withFilesConf(openCost = 64, maxBytes = maxBytes) {
+      val df = labeled
+      val bySize = ((bytes(df) + maxBytes - 1) / maxBytes).toInt
+      assert(bySize > cores)
+      assert(scanPartitions("train/pos") + scanPartitions("train/neg") > bySize)
+      assert(bound(df) == bySize)
+      assert(partitions(df) == bySize)
+    }
+  }
+
+  test("under cores × openCostInBytes the files pack to ceil(bytes / openCostInBytes)") {
+    val openCost = 4096L
+    withFilesConf(openCost = openCost, maxBytes = 1 << 20) {
+      val df = labeled
+      val byOpenCost = ((bytes(df) + openCost - 1) / openCost).toInt
+      assert(byOpenCost > 1 && byOpenCost < cores)
+      assert(bound(df) == byOpenCost)
+      assert(partitions(df) == byOpenCost)
+    }
+  }
+
+  test("from cores × openCostInBytes up the count is max(cores, ceil(bytes / maxPartitionBytes))") {
+    // the rule the loaders applied at every size before the open cost
+    // was taken into account; at and above that size nothing changes
+    Seq(64L -> (1L << 20), 64L -> 1024L, 256L -> 2048L).foreach { case (openCost, maxBytes) =>
+      withFilesConf(openCost, maxBytes) {
+        val df = labeled
+        assert(bytes(df) >= cores * openCost)
+        val before = math.max(cores, ((bytes(df) + maxBytes - 1) / maxBytes).toInt)
+        assert(partitions(df) == before, s"openCost $openCost, maxPartitionBytes $maxBytes")
+      }
+    }
   }
 
   test("every packed row keeps the label of its directory") {

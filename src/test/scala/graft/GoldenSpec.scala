@@ -20,7 +20,7 @@ class GoldenSpec extends SparkSpec {
       val expected = Files.readAllLines(file).asScala
         .filter(_.nonEmpty)
         .map { l => val Array(n, p) = l.split("\t"); (n, p.toDouble) }.toSeq
-      val actual = FixtureGen.goldenRowsFor(spark, FixtureGen.CorpusDir, mk())
+      val (_, actual) = FixtureGen.goldenFit(spark, FixtureGen.CorpusDir, mk())
       assert(actual == expected)
     }
   }

@@ -8,6 +8,7 @@ import contextlib, fnmatch, io, os, re, subprocess, sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import crossover_table
 import duck_bench
+import perf_ab
 import scalebench_table
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -106,6 +107,27 @@ def test_scalebench_cell_missing_key():
     assert scalebench_table.have(best, "vocab_df", 100)
 
 
+def test_perf_ab_verdict():
+    # 9 wins of 10 with a gap wider than the parent's IQR is a gain
+    parent = [10.0, 11.0, 12.0, 10.5, 11.5, 10.0, 12.0, 11.0, 10.5, 11.5]
+    change = [8.0, 8.5, 9.0, 8.0, 8.5, 9.0, 8.0, 8.5, 9.0, 12.5]
+    v = perf_ab.verdict(parent, change)
+    assert (v["wins"], v["pairs"]) == (9, 10), v
+    assert v["parent_median"] == 11.0 and v["change_median"] == 8.5, v
+    assert v["parent_iqr"] == 1.0 and v["gain"], v
+    # 8 of 10 is not enough, however wide the gap
+    assert not perf_ab.verdict(parent, change[:8] + [13.0, 13.0])["gain"]
+    # fewer than ten pairs is never a gain
+    assert not perf_ab.verdict(parent[:9], change[:9])["gain"]
+    # a tie counts for neither side
+    assert perf_ab.verdict([1.0, 2.0], [1.0, 1.0])["wins"] == 1
+    # every pair won, but the gap is inside the parent's own spread
+    assert not perf_ab.verdict([10.0, 20.0, 10.0, 20.0], [9.0, 19.0, 9.0, 19.0])["gain"]
+    # "higher is better" flips the sign
+    assert perf_ab.verdict([1.0] * 10, [2.0] * 10, better="higher")["gain"]
+    assert not perf_ab.verdict([1.0] * 10, [2.0] * 10)["gain"]
+
+
 if __name__ == "__main__":
     test_crossover_candidates_numeric_order()
     test_crossover_table_renders_newest_round()
@@ -113,4 +135,5 @@ if __name__ == "__main__":
     test_floor_resident_base_mismatch_skipped()
     test_pinned_floors_attached_to_warm_residue()
     test_scalebench_cell_missing_key()
+    test_perf_ab_verdict()
     print("OK")
