@@ -20,17 +20,20 @@ object Bench {
     // constants amortized. Default 0 = cold-per-query, the driver's mode.
     val warm = sys.env.getOrElse("SPARK_GRAFT_WARM", "0").toInt
 
-    def runOnce(name: String): Double =
-      try Harness.timeNoop(spark)(SparkEntry.queries(name)(spark, sfDir))
+    val failed = Harness.Usage(-1.0, -1.0, -1.0)
+
+    def runOnce(name: String): Harness.Usage =
+      try Harness.measureNoop(spark)(SparkEntry.queries(name)(spark, sfDir))
       catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
+          failed
       }
 
-    def run(name: String): Double = {
-      val times = (0 to warm).map(_ => runOnce(name))
-      if (times.contains(-1.0)) -1.0 else times.min
+    // a cell is its fastest run, with that run's CPU and JIT seconds
+    def run(name: String): Harness.Usage = {
+      val runs = (0 to warm).map(_ => runOnce(name))
+      if (runs.contains(failed)) failed else runs.minBy(_.wall)
     }
 
     // optional args = query-name filter (substring match), for fast
@@ -43,7 +46,8 @@ object Bench {
     // host-window stamp around the measured sweep: a sweep that shared
     // the host (steal, other processes) marks itself window_ok=false
     val window = Harness.HostWindow.start()
-    val results = names.map(n => n -> run(n))
+    val cells = names.map(n => n -> run(n))
+    val results = cells.map { case (n, u) => n -> u.wall }
     // Variance instrument (r16 item 5, generalized per r17 verdict item
     // 1): single-shot sweep cells for cache-materializing and streaming
     // queries are window-variance-dominated (q82 read 44.8 s in the r17
@@ -73,7 +77,7 @@ object Bench {
       if (sweep < 0) None
       else {
         val extraRuns = if (warm == 0) 2 else 3
-        val extras = (1 to extraRuns).map(_ => runOnce(n)).filter(_ >= 0)
+        val extras = (1 to extraRuns).map(_ => runOnce(n).wall).filter(_ >= 0)
         val samples = if (warm == 0) sweep +: extras else extras
         val sorted = samples.sorted
         val median =
@@ -92,9 +96,14 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val env = s""""env":{"cpus":${Runtime.getRuntime.availableProcessors},""" +
       s""""warm":$warm,$windowEnv}"""
+    // each sweep cell's process CPU and JIT compilation seconds, over
+    // the same run as its `queries` wall time (-1: the query failed)
+    val usage = cells.map { case (k, u) =>
+      s""""$k":{"cpu_s":${fmt3(u.cpu)},"jit_s":${fmt3(u.jit)}}"""
+    }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":$qs,""" +
-        s""""query_variance":$queryVarJson,"sf":"$sfDir",$env}"""
+        s""""query_variance":$queryVarJson,"sf":"$sfDir",$env,"query_usage":$usage}"""
     // The FULL per-query map (140 queries ≈ 4 KB) overflows the ~2 KB
     // stdout tail the driver keeps, so its regex never recovered the
     // JSON (`git show 88ba917:BENCH_r07.json`, "parsed": null). Write

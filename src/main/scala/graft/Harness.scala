@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.Locale
 
@@ -75,12 +76,35 @@ object Harness {
     * is inside the timed window: plan construction (e.g. q107's tier
     * census) is part of the operator's cost. [[cleanup]] runs after,
     * outside the window. */
-  def timeNoop(spark: SparkSession)(build: => DataFrame): Double = {
-    val t0 = System.nanoTime()
+  def timeNoop(spark: SparkSession)(build: => DataFrame): Double =
+    measureNoop(spark)(build).wall
+
+  /** Seconds of one timed window: wall clock, this process's CPU (every
+    * thread: tasks, GC, JIT compilers) and HotSpot's JIT compilation
+    * time, as deltas over the window. */
+  final case class Usage(wall: Double, cpu: Double, jit: Double)
+
+  /** [[timeNoop]] with the window's process CPU and JIT seconds; the
+    * CPU and JIT counters read 0 on a JVM that does not expose them. */
+  def measureNoop(spark: SparkSession)(build: => DataFrame): Usage = {
+    val (c0, j0, t0) = (processCpuNs(), jitMs(), System.nanoTime())
     build.write.mode("overwrite").format("noop").save()
-    val dt = (System.nanoTime() - t0) / 1e9
+    val usage = Usage((System.nanoTime() - t0) / 1e9,
+      (processCpuNs() - c0) / 1e9, (jitMs() - j0) / 1e3)
     cleanup(spark)
-    dt
+    usage
+  }
+
+  private def processCpuNs(): Long =
+    ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => math.max(0L, os.getProcessCpuTime)
+      case _ => 0L
+    }
+
+  private def jitMs(): Long = {
+    val jit = ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) jit.getTotalCompilationTime
+    else 0L
   }
 
   /** Deterministic between-repetition cleanup, run outside the timed

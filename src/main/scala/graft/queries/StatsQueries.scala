@@ -1140,8 +1140,8 @@ object StatsQueries {
     import spark.implicits._
     implicit val s: SparkSession = spark
     // unlike the typed twins there is no sentinel event_type to filter
-    // on — the FIRST sentinel's window closes when the second advances
-    // the watermark past it, so drop far-future windows by time instead
+    // on, so far-future windows are dropped by time (a bounded run never
+    // closes the sentinel's window; the filter keeps it out if one did)
     StreamStage.run(spark, dir, "q150_qs", StreamStage.Sentinels)(stream =>
       EventStreams.streamingQuantile(stream.as[EventStreams.Event]))
       .select(expr("unix_millis(window_start) DIV 1000").as("window_start_sec"),

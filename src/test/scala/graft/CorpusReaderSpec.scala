@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
 import graft.sources.CorpusReader
 import org.apache.spark.sql.DataFrame
 
@@ -26,9 +27,10 @@ class CorpusReaderSpec extends SparkSpec {
 
   private def cores: Int = spark.sparkContext.defaultParallelism
 
-  /** The planned bytes CorpusReader packs by: the packed frame's size is
-    * its input's, since a coalesce does not change it. */
-  private def bytes(df: DataFrame): BigInt = df.queryExecution.analyzed.stats.sizeInBytes
+  /** The bytes CorpusReader packs by: the sizes of the files the frame
+    * reads, summed from the filesystem. */
+  private def bytes(df: DataFrame): BigInt =
+    df.inputFiles.map(f => BigInt(Files.size(Paths.get(new URI(f))))).sum
 
   /** Spark's file-split rule on those bytes, without the per-file open
     * cost: splitBytes = min(maxPartitionBytes, max(openCostInBytes,
@@ -114,6 +116,22 @@ class CorpusReaderSpec extends SparkSpec {
         val before = math.max(cores, ((bytes(df) + maxBytes - 1) / maxBytes).toInt)
         assert(partitions(df) == before, s"openCost $openCost, maxPartitionBytes $maxBytes")
       }
+    }
+  }
+
+  test("the count follows the files' bytes, not the plan's row-width-scaled size") {
+    // the plan's size scales the files' by output over scan row width
+    // (12/7 for loadUnknown's extra name column), which here would pack
+    // to more partitions than the files' own bytes ask for
+    val maxBytes = 128L
+    withFilesConf(openCost = 64, maxBytes = maxBytes) {
+      val df = CorpusReader.loadUnknown(spark, s"$root/test")
+      def count(b: BigInt) = ((b + maxBytes - 1) / maxBytes).toInt
+      val byFiles = count(bytes(df))
+      assert(byFiles > cores)
+      assert(count(df.queryExecution.analyzed.stats.sizeInBytes) > byFiles)
+      assert(bound(df) == byFiles)
+      assert(partitions(df) == byFiles)
     }
   }
 

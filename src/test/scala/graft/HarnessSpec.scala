@@ -46,6 +46,15 @@ class HarnessSpec extends SparkSpec {
     assert(checkpointed.columns.toSeq == Seq("v"))
   }
 
+  test("measureNoop counts the window's process CPU and JIT seconds") {
+    val u = Harness.measureNoop(spark)(
+      spark.range(0, 20000000L, 1, 4).selectExpr("sum(id * id % 7) AS s"))
+    assert(u.wall > 0)
+    // four tasks ran on this JVM's threads inside the window
+    assert(u.cpu > 0, u)
+    assert(u.jit >= 0, u)
+  }
+
   // aggregate cpu lines: user nice system idle iowait irq softirq steal guest guest_nice
   private def cpu(t: Long*): String = ("cpu " +: t.map(_.toString)).mkString(" ")
   private val t0 = cpu(1000, 10, 300, 5000, 40, 0, 20, 60, 0, 0)

@@ -107,4 +107,22 @@ class ScaleSynthSpec extends SparkSpec {
     // the caller's session keeps its own setting (SparkSpec pins 4)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
+
+  test("streamSession: only a local checkpoint root switches the checkpoint file manager") {
+    import graft.streaming.StreamStage.localCheckpoints
+    assert(graft.streaming.StreamStage.streamSession(spark).conf
+      .get("spark.sql.streaming.checkpointFileManagerClass") ==
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    assert(spark.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+    val local = new org.apache.hadoop.conf.Configuration(false)
+    val hdfs = new org.apache.hadoop.conf.Configuration(false)
+    hdfs.set("fs.defaultFS", "hdfs://namenode:8020")
+    // no root: a temporary checkpoint under java.io.tmpdir, on fs.defaultFS
+    assert(localCheckpoints(None, local))
+    assert(!localCheckpoints(None, hdfs))
+    assert(localCheckpoints(Some("/data/ckpt"), local))
+    assert(!localCheckpoints(Some("/data/ckpt"), hdfs))
+    assert(localCheckpoints(Some("file:/data/ckpt"), hdfs))
+    assert(!localCheckpoints(Some("s3a://bucket/ckpt"), local))
+  }
 }
