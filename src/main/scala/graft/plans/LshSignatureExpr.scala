@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Fused sign-LSH signature: all `bits` hyperplane projections of an
-  * `array<double>` embedding in ONE compact codegen loop.
+  * `array<double>` embedding in ONE loop ([[LshSignatureExpr.compute]])
+  * that the generated code calls.
   *
   * Why an expression and not the composed column form
   * (Similarity.lshSignature round-5..14): the composed 32-plane
@@ -21,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * ALONE was 40.5 s of q42's 41.6 s — 95% of the query in an
   * interpreter the plan pretended was codegen (the same disease as the
   * round-13 PQ 64 KB overflow, one abstraction level up). This
-  * expression generates ~1 KB: one null/dim check, then a
+  * expression generates one call: a null/dim check, then a
   * bits × dim primitive loop over a references-held plane matrix.
   *
   * Semantics are EXACTLY the composed form's (oracle-stable):
@@ -60,80 +61,20 @@ case class LshSignatureExpr(child: Expression, bits: Int, dim: Int,
 
   override def prettyName: String = "lsh_signature"
 
-  private def fail(n: Int): Nothing =
-    throw new RuntimeException(
-      s"lshSignature: embedding dim != $dim (got $n)")
-
   @transient private lazy val planeArr: Array[Double] = planes.toArray
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) fail(-1)
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n != dim) fail(n)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return 0L
-      i += 1
-    }
-    var sig = 0L
-    var p = 0
-    while (p < bits) {
-      var acc = 0.0
-      var d = 0
-      val off = p * dim
-      while (d < dim) {
-        acc += arr.getDouble(d) * planeArr(off + d)
-        d += 1
-      }
-      if (java.lang.Double.compare(acc, 0.0) > 0) sig |= (1L << p)
-      p += 1
-    }
-    sig
-  }
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    LshSignatureExpr.compute(child.eval(input).asInstanceOf[ArrayData], planeArr, bits, dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
     val planesRef = ctx.addReferenceObj("lshPlanes", planeArr, "double[]")
-    val arr = ctx.freshName("arr")
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val p = ctx.freshName("p")
-    val d = ctx.freshName("d")
-    val off = ctx.freshName("off")
-    val acc = ctx.freshName("acc")
-    val sig = ctx.freshName("sig")
-    val anyNull = ctx.freshName("anyNull")
-    val code =
-      code"""
+    val call = s"graft.plans.LshSignatureExpr$$.MODULE$$.compute(" +
+      s"${c.isNull} ? null : ${c.value}, $planesRef, $bits, $dim)"
+    ev.copy(code = code"""
         |${c.code}
-        |if (${c.isNull}) {
-        |  throw new RuntimeException("lshSignature: embedding dim != $dim (got -1)");
-        |}
-        |ArrayData $arr = ${c.value};
-        |final int $n = $arr.numElements();
-        |if ($n != $dim) {
-        |  throw new RuntimeException("lshSignature: embedding dim != $dim (got " + $n + ")");
-        |}
-        |long $sig = 0L;
-        |boolean $anyNull = false;
-        |for (int $i = 0; $i < $n; $i++) {
-        |  if ($arr.isNullAt($i)) { $anyNull = true; break; }
-        |}
-        |if (!$anyNull) {
-        |  for (int $p = 0; $p < $bits; $p++) {
-        |    double $acc = 0.0;
-        |    final int $off = $p * $dim;
-        |    for (int $d = 0; $d < $dim; $d++) {
-        |      $acc += $arr.getDouble($d) * $planesRef[$off + $d];
-        |    }
-        |    if (java.lang.Double.compare($acc, 0.0) > 0) $sig |= (1L << $p);
-        |  }
-        |}
-        |final long ${ev.value} = $sig;
-       """.stripMargin
-    ev.copy(code = code, isNull = FalseLiteral)
+        |final long ${ev.value} = $call;
+       """.stripMargin, isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): LshSignatureExpr =
@@ -146,4 +87,38 @@ object LshSignatureExpr {
                 planes: IndexedSeq[Double]): Column =
     GraftSqlBridge.column(LshSignatureExpr(
       GraftSqlBridge.expression(emb), bits, dim, planes))
+
+  private def fail(dim: Int, n: Int): Nothing =
+    throw new RuntimeException(
+      s"lshSignature: embedding dim != $dim (got $n)")
+
+  /** The signature, shared by `eval` and the generated code (called via
+    * MODULE$ from janino). `arr` is null when the input is. Each
+    * component is read once and reused by every plane. */
+  def compute(arr: ArrayData, planes: Array[Double], bits: Int, dim: Int): Long = {
+    if (arr == null) fail(dim, -1)
+    val n = arr.numElements()
+    if (n != dim) fail(dim, n)
+    val xs = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return 0L
+      xs(i) = arr.getDouble(i)
+      i += 1
+    }
+    var sig = 0L
+    var p = 0
+    while (p < bits) {
+      var acc = 0.0
+      var d = 0
+      val off = p * dim
+      while (d < dim) {
+        acc += xs(d) * planes(off + d)
+        d += 1
+      }
+      if (java.lang.Double.compare(acc, 0.0) > 0) sig |= (1L << p)
+      p += 1
+    }
+    sig
+  }
 }

@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * measured ~0.3 ms/row on 60-token documents, which multiplied across
   * every shingle consumer (bigram counts, Jaccard, MinHash-LSH,
   * quality rules) made n-gram construction a top-3 engine cost. This
-  * expression builds each gram in a tight generated loop instead.
+  * expression builds each gram in one tight loop
+  * ([[NGramArray.grams]]) that the generated code calls.
   *
   * Null semantics: null input array → null (standard unary null
   * propagation — NOTE this differs from the replaced composed form,
@@ -43,12 +44,26 @@ case class NGramArray(child: Expression, n: Int) extends UnaryExpression {
 
   override def prettyName: String = "ngram_array"
 
+  override protected def nullSafeEval(v: Any): Any =
+    NGramArray.grams(v.asInstanceOf[ArrayData], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.plans.NGramArray$$.MODULE$$.grams($a, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): NGramArray =
+    copy(child = newChild)
+}
+
+object NGramArray {
+  def apply(tokens: Column, n: Int): Column =
+    GraftSqlBridge.column(NGramArray(GraftSqlBridge.expression(tokens), n))
+
   private val sep = UTF8String.fromString(" ")
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val len = arr.numElements()
-    val m = math.max(0, len - n + 1)
+  /** The grams, shared by `nullSafeEval` and the generated code (called
+    * via MODULE$ from janino). */
+  def grams(arr: ArrayData, n: Int): ArrayData = {
+    val m = math.max(0, arr.numElements() - n + 1)
     val grams = new Array[AnyRef](m)
     var i = 0
     while (i < m) {
@@ -63,38 +78,4 @@ case class NGramArray(child: Expression, n: Int) extends UnaryExpression {
     }
     new GenericArrayData(grams)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sepRef = ctx.addReferenceObj("sep", sep, classOf[UTF8String].getName)
-    nullSafeCodeGen(ctx, ev, a => {
-      val len = ctx.freshName("len")
-      val m = ctx.freshName("m")
-      val grams = ctx.freshName("grams")
-      val parts = ctx.freshName("parts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val utf8 = classOf[UTF8String].getName
-      s"""
-         |final int $len = $a.numElements();
-         |final int $m = java.lang.Math.max(0, $len - ${n - 1});
-         |final Object[] $grams = new Object[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  final $utf8[] $parts = new $utf8[$n];
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $parts[$j] = $a.isNullAt($i + $j) ? null : $a.getUTF8String($i + $j);
-         |  }
-         |  $grams[$i] = $utf8.concatWs($sepRef, $parts);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($grams);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NGramArray =
-    copy(child = newChild)
-}
-
-object NGramArray {
-  def apply(tokens: Column, n: Int): Column =
-    GraftSqlBridge.column(NGramArray(GraftSqlBridge.expression(tokens), n))
 }

@@ -9,21 +9,22 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 /** One-pass product-quantization encoder: `array<double>` embedding →
-  * `struct<codes: array<long>, recon_err: double>`, evaluated as a
-  * single tight loop inside whole-stage codegen.
+  * `struct<codes: array<long>, recon_err: double>`, evaluated by one
+  * Scala kernel ([[PqEncode.encode]] over [[PqDistTable.table]]) that
+  * the interpreted path and the generated code both call.
   *
   * The composed form (normalize via `transform`, 8 `slice` copies,
   * 24 dot products, 8 `array_min`/`array_position` scans) is
   * semantically identical but allocation-bound on the higher-order-
   * function interpreter — measured ~135 µs/row, which made PQ encoding
   * the dominant linear pass of the ADC pipeline (27 s of a 33 s scan at
-  * 200k rows). This kernel is the same arithmetic with zero
-  * intermediate arrays.
+  * 200k rows). This kernel is the same arithmetic with two
+  * intermediate arrays: the normalized embedding and its distance table.
   *
   * IEEE parity with the composed form (hash-stable for q62/q63):
   *  - nrm = sqrt(Σ x_i², ascending-index fold) — `ArrayDotProduct`'s order;
-  *  - normalized component recomputed as x_i/nrm at each use (the
-  *    staged `transform` materialized the same quotient);
+  *  - normalized component x_i/nrm, divided once per row (the staged
+  *    `transform` materialized the same quotient);
   *  - per-codeword distance is (xn2 − 2·(x·c)) + ‖c‖², both dots
   *    ascending, ‖c‖² the driver-side literal;
   *  - argmin keeps the FIRST strict minimum (== `array_position(d,
@@ -45,7 +46,6 @@ case class PqEncode(child: Expression, codebook: Array[Double],
                     subDim: Int)
   extends UnaryExpression {
 
-  private val dim = subspaces * subDim
   require(codebook.length == subspaces * codes * subDim &&
     norms2.length == subspaces * codes,
     s"pq_encode: codebook ${codebook.length}/${norms2.length} does not " +
@@ -63,117 +63,14 @@ case class PqEncode(child: Expression, codebook: Array[Double],
 
   override def prettyName: String = "pq_encode"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"pq_encode: embedding length ${arr.numElements()} != $dim")
-    var nrm2 = 0.0
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i))
-        throw new IllegalArgumentException(s"pq_encode: null element at $i")
-      val x = arr.getDouble(i)
-      nrm2 += x * x
-      i += 1
-    }
-    val nrm = math.sqrt(nrm2)
-    val out = new Array[Long](subspaces)
-    var err = 0.0
-    var s = 0
-    while (s < subspaces) {
-      val base = s * subDim
-      var xn2 = 0.0
-      var d = 0
-      while (d < subDim) {
-        val x = arr.getDouble(base + d) / nrm
-        xn2 += x * x
-        d += 1
-      }
-      var best = Double.PositiveInfinity
-      var bi = -1
-      var k = 0
-      while (k < codes) {
-        val cb = (s * codes + k) * subDim
-        var dot = 0.0
-        d = 0
-        while (d < subDim) {
-          dot += (arr.getDouble(base + d) / nrm) * codebook(cb + d)
-          d += 1
-        }
-        val dist = (xn2 - 2.0 * dot) + norms2(s * codes + k)
-        if (dist < best) { best = dist; bi = k }
-        k += 1
-      }
-      out(s) = bi.toLong
-      err += best
-      s += 1
-    }
-    InternalRow(new GenericArrayData(out), err)
-  }
+  override protected def nullSafeEval(v: Any): Any =
+    PqEncode.encode(v.asInstanceOf[ArrayData], codebook, norms2, subspaces, codes, subDim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
     val n2Ref = ctx.addReferenceObj("pqNorms2", norms2, "double[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val nrm2 = ctx.freshName("nrm2")
-      val nrm = ctx.freshName("nrm")
-      val out = ctx.freshName("out")
-      val err = ctx.freshName("err")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val k = ctx.freshName("k")
-      val x = ctx.freshName("x")
-      val xn2 = ctx.freshName("xn2")
-      val best = ctx.freshName("best")
-      val bi = ctx.freshName("bi")
-      val dot = ctx.freshName("dot")
-      val dist = ctx.freshName("dist")
-      val row = ctx.freshName("row")
-      s"""
-        |if ($arr.numElements() != $dim) {
-        |  throw new IllegalArgumentException(
-        |    "pq_encode: embedding length " + $arr.numElements() + " != $dim");
-        |}
-        |double $nrm2 = 0.0;
-        |for (int $i = 0; $i < $dim; $i++) {
-        |  if ($arr.isNullAt($i)) {
-        |    throw new IllegalArgumentException("pq_encode: null element at " + $i);
-        |  }
-        |  double $x = $arr.getDouble($i);
-        |  $nrm2 += $x * $x;
-        |}
-        |double $nrm = Math.sqrt($nrm2);
-        |long[] $out = new long[$subspaces];
-        |double $err = 0.0;
-        |for (int $s = 0; $s < $subspaces; $s++) {
-        |  double $xn2 = 0.0;
-        |  for (int $d = 0; $d < $subDim; $d++) {
-        |    double $x = $arr.getDouble($s * $subDim + $d) / $nrm;
-        |    $xn2 += $x * $x;
-        |  }
-        |  double $best = Double.POSITIVE_INFINITY;
-        |  int $bi = -1;
-        |  for (int $k = 0; $k < $codes; $k++) {
-        |    double $dot = 0.0;
-        |    for (int $d = 0; $d < $subDim; $d++) {
-        |      $dot += ($arr.getDouble($s * $subDim + $d) / $nrm)
-        |        * $cbRef[($s * $codes + $k) * $subDim + $d];
-        |    }
-        |    double $dist = ($xn2 - 2.0 * $dot) + $n2Ref[$s * $codes + $k];
-        |    if ($dist < $best) { $best = $dist; $bi = $k; }
-        |  }
-        |  $out[$s] = (long) $bi;
-        |  $err += $best;
-        |}
-        |org.apache.spark.sql.catalyst.InternalRow $row =
-        |  new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        |  new Object[] {
-        |    new org.apache.spark.sql.catalyst.util.GenericArrayData($out), $err });
-        |${ev.value} = $row;
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.plans.PqEncode$$.MODULE$$.encode(" +
+      s"$arr, $cbRef, $n2Ref, $subspaces, $codes, $subDim)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -185,13 +82,42 @@ object PqEncode {
             subspaces: Int, codes: Int, subDim: Int): Column =
     GraftSqlBridge.column(PqEncode(GraftSqlBridge.expression(emb),
       codebook, norms2, subspaces, codes, subDim))
+
+  /** The encoder, shared by `nullSafeEval` and the generated code
+    * (called via MODULE$ from janino): per subspace, the first strict
+    * minimum of [[PqDistTable.table]]'s row is the code, and the
+    * minima fold into `recon_err` in ascending subspace order from 0.0.
+    * A subspace whose distances are all NaN keeps code -1 and adds +∞. */
+  def encode(arr: ArrayData, codebook: Array[Double], norms2: Array[Double],
+             subspaces: Int, codes: Int, subDim: Int): InternalRow = {
+    val table = PqDistTable.table(arr, codebook, norms2, subspaces, codes, subDim,
+      "pq_encode")
+    val out = new Array[Long](subspaces)
+    var err = 0.0
+    var s = 0
+    while (s < subspaces) {
+      var best = Double.PositiveInfinity
+      var bi = -1
+      var k = 0
+      while (k < codes) {
+        val dist = table(s * codes + k)
+        if (dist < best) { best = dist; bi = k }
+        k += 1
+      }
+      out(s) = bi.toLong
+      err += best
+      s += 1
+    }
+    InternalRow(new GenericArrayData(out), err)
+  }
 }
 
 /** Fused ADC query-side distance table: `array<double>` embedding →
   * the flat `subspaces·codes` table of squared-L2 distances from each
   * normalized subvector to each codeword (flat index `s·codes + k`,
   * the layout `pqAdcKnn`'s `element_at(qtab, s·codes + code + 1)`
-  * probes), in ONE codegen loop.
+  * probes), in ONE loop ([[PqDistTable.table]]) that the generated code
+  * calls.
   *
   * Why (the r15 disease, one family over): the composed form
   * (`pqStage`'s normalize `transform`, 8 slices, 8 self-dots, then 128
@@ -201,12 +127,13 @@ object PqEncode {
   * `DontCompileHugeMethods` ceiling, so the ANN table build ran in the
   * bytecode interpreter in every PQ query (q63/q73/q142;
   * `graft.CodegenAudit` HUGE-METHOD). This kernel is the identical
-  * arithmetic as a ~1 KB method over a references-held codebook.
+  * arithmetic as one compiled Scala method over a references-held
+  * codebook.
   *
   * IEEE parity with the composed form (hash-stable for q63/q73/q142):
   *  - nrm = sqrt(Σ x_i², ascending fold) — `ArrayDotProduct`'s order;
-  *  - normalized component recomputed as x_i/nrm at each use (the
-  *    staged `transform` materialized the same quotient — division is
+  *  - normalized component x_i/nrm, divided once per row (the staged
+  *    `transform` materialized the same quotient — division is
   *    deterministic);
   *  - xn2_s = Σ_d (x/nrm)², ascending within the subspace — the staged
   *    `dot(xs_s, xs_s)`;
@@ -222,7 +149,6 @@ case class PqDistTable(child: Expression, codebook: Array[Double],
                        subDim: Int)
   extends UnaryExpression {
 
-  private val dim = subspaces * subDim
   require(codebook.length == subspaces * codes * subDim &&
     norms2.length == subspaces * codes,
     s"pq_dist_table: codebook ${codebook.length}/${norms2.length} does not " +
@@ -238,97 +164,17 @@ case class PqDistTable(child: Expression, codebook: Array[Double],
 
   override def prettyName: String = "pq_dist_table"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    if (arr.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"pq_dist_table: embedding length ${arr.numElements()} != $dim")
-    var nrm2 = 0.0
-    var i = 0
-    while (i < dim) {
-      if (arr.isNullAt(i))
-        throw new IllegalArgumentException(s"pq_dist_table: null element at $i")
-      val x = arr.getDouble(i)
-      nrm2 += x * x
-      i += 1
-    }
-    val nrm = math.sqrt(nrm2)
-    val out = new Array[Double](subspaces * codes)
-    var s = 0
-    while (s < subspaces) {
-      val base = s * subDim
-      var xn2 = 0.0
-      var d = 0
-      while (d < subDim) {
-        val x = arr.getDouble(base + d) / nrm
-        xn2 += x * x
-        d += 1
-      }
-      var k = 0
-      while (k < codes) {
-        val cb = (s * codes + k) * subDim
-        var dot = 0.0
-        d = 0
-        while (d < subDim) {
-          dot += (arr.getDouble(base + d) / nrm) * codebook(cb + d)
-          d += 1
-        }
-        out(s * codes + k) = (xn2 - 2.0 * dot) + norms2(s * codes + k)
-        k += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any): Any = new GenericArrayData(
+    PqDistTable.table(v.asInstanceOf[ArrayData], codebook, norms2, subspaces, codes,
+      subDim, prettyName))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", codebook, "double[]")
     val n2Ref = ctx.addReferenceObj("pqNorms2", norms2, "double[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val nrm2 = ctx.freshName("nrm2")
-      val nrm = ctx.freshName("nrm")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val k = ctx.freshName("k")
-      val x = ctx.freshName("x")
-      val xn2 = ctx.freshName("xn2")
-      val dot = ctx.freshName("dot")
-      s"""
-        |if ($arr.numElements() != $dim) {
-        |  throw new IllegalArgumentException(
-        |    "pq_dist_table: embedding length " + $arr.numElements() + " != $dim");
-        |}
-        |double $nrm2 = 0.0;
-        |for (int $i = 0; $i < $dim; $i++) {
-        |  if ($arr.isNullAt($i)) {
-        |    throw new IllegalArgumentException("pq_dist_table: null element at " + $i);
-        |  }
-        |  double $x = $arr.getDouble($i);
-        |  $nrm2 += $x * $x;
-        |}
-        |double $nrm = Math.sqrt($nrm2);
-        |double[] $out = new double[${subspaces * codes}];
-        |for (int $s = 0; $s < $subspaces; $s++) {
-        |  double $xn2 = 0.0;
-        |  for (int $d = 0; $d < $subDim; $d++) {
-        |    double $x = $arr.getDouble($s * $subDim + $d) / $nrm;
-        |    $xn2 += $x * $x;
-        |  }
-        |  for (int $k = 0; $k < $codes; $k++) {
-        |    double $dot = 0.0;
-        |    for (int $d = 0; $d < $subDim; $d++) {
-        |      $dot += ($arr.getDouble($s * $subDim + $d) / $nrm)
-        |        * $cbRef[($s * $codes + $k) * $subDim + $d];
-        |    }
-        |    $out[$s * $codes + $k] = ($xn2 - 2.0 * $dot)
-        |      + $n2Ref[$s * $codes + $k];
-        |  }
-        |}
-        |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr =>
+      "new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
+        s"graft.plans.PqDistTable$$.MODULE$$.table($arr, $cbRef, $n2Ref, $subspaces, " +
+        s"$codes, $subDim, \"$prettyName\"))")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -340,4 +186,59 @@ object PqDistTable {
             subspaces: Int, codes: Int, subDim: Int): Column =
     GraftSqlBridge.column(PqDistTable(GraftSqlBridge.expression(emb),
       codebook, norms2, subspaces, codes, subDim))
+
+  /** The distance table, shared by both PQ expressions' `nullSafeEval`
+    * and generated code (called via MODULE$ from janino); `name`
+    * prefixes the loud-failure messages. Each normalized component is
+    * divided once and reused by every codeword: the same quotient the
+    * staged `transform` materialized, so the sums are unchanged. */
+  def table(arr: ArrayData, codebook: Array[Double], norms2: Array[Double],
+            subspaces: Int, codes: Int, subDim: Int, name: String): Array[Double] = {
+    val dim = subspaces * subDim
+    if (arr.numElements() != dim)
+      throw new IllegalArgumentException(
+        s"$name: embedding length ${arr.numElements()} != $dim")
+    val xs = new Array[Double](dim)
+    var nrm2 = 0.0
+    var i = 0
+    while (i < dim) {
+      if (arr.isNullAt(i))
+        throw new IllegalArgumentException(s"$name: null element at $i")
+      val x = arr.getDouble(i)
+      xs(i) = x
+      nrm2 += x * x
+      i += 1
+    }
+    val nrm = math.sqrt(nrm2)
+    i = 0
+    while (i < dim) {
+      xs(i) /= nrm
+      i += 1
+    }
+    val out = new Array[Double](subspaces * codes)
+    var s = 0
+    while (s < subspaces) {
+      val base = s * subDim
+      var xn2 = 0.0
+      var d = 0
+      while (d < subDim) {
+        xn2 += xs(base + d) * xs(base + d)
+        d += 1
+      }
+      var k = 0
+      while (k < codes) {
+        val cb = (s * codes + k) * subDim
+        var dot = 0.0
+        d = 0
+        while (d < subDim) {
+          dot += xs(base + d) * codebook(cb + d)
+          d += 1
+        }
+        out(s * codes + k) = (xn2 - 2.0 * dot) + norms2(s * codes + k)
+        k += 1
+      }
+      s += 1
+    }
+    out
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * so a library registering custom Catalyst expressions needs one
   * object compiled into the `org.apache.spark.sql` package to reach
   * them — the conventional extension-point shim. Besides the two
-  * forwarders and [[sortKey]], it builds the one Catalyst node the
+  * forwarders, [[cloneSession]] and [[sortKey]], it builds the one Catalyst node the
   * public API cannot ([[windowGroupLimit]]) and keeps the audit
   * registry for the two materializing barriers. Its users are
   * GlobalRank's input checkpoint, Dedup's four checkpoints, the q72,
@@ -19,6 +19,13 @@ import org.apache.spark.sql.execution.LogicalRDD
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Spark's `private[sql]` `cloneSession`: a new session on the same
+    * SparkContext that starts from a copy of `spark`'s session state,
+    * runtime SQL settings included (`newSession` starts from the
+    * SparkContext's conf and drops them). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 
   /** Spark's own `WindowGroupLimit` over `df`: keep the `limit` rows
     * with the lowest `order` column in every `partitionCols` group, as

@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * allocates the zipped array and evaluates two lambda closures per
   * element, and it blocks whole-stage codegen for the surrounding
   * operators. For ANN queries the dot product runs |corpus|·|probes|
-  * times — measurably the dominant cost. This expression generates a
-  * tight primitive loop inside whole-stage codegen instead.
+  * times — measurably the dominant cost. This expression runs a tight
+  * primitive loop ([[ArrayDotProduct.dot]]) that the generated code
+  * calls inside whole-stage codegen instead.
   *
   * Semantics are EXACTLY the composed form's (drop-in, oracle-stable):
   *  - result is null if either array is null, the lengths differ
@@ -45,34 +46,17 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
+    val r = ArrayDotProduct.dot(x, y)
+    if (java.lang.Double.isNaN(r) && !ArrayDotProduct.defined(x, y)) null else r
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
+      val kernel = "graft.plans.ArrayDotProduct$.MODULE$"
       s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
+         |${ev.value} = $kernel.dot($x, $y);
+         |if (java.lang.Double.isNaN(${ev.value}) && !$kernel.defined($x, $y)) {
          |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $acc += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $acc; }
          |}
        """.stripMargin
     })
@@ -80,6 +64,39 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayDotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object ArrayDotProduct {
+
+  /** Whether the dot product of `x` and `y` is non-null: equal lengths
+    * and no null element. Asked only when [[dot]] returns NaN, so that the
+    * common row takes one pass and boxes nothing. */
+  def defined(x: ArrayData, y: ArrayData): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** The ascending-index fold, shared by `nullSafeEval` and the generated
+    * code (called via MODULE$ from janino). NaN when the product is not
+    * [[defined]]; a NaN from defined arrays is the fold's own value. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return Double.NaN
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return Double.NaN
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }
 
 object VectorExpressions {

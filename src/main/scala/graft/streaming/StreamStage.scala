@@ -4,7 +4,7 @@ import graft.Tables
 import graft.sources.TempDirs
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.OutputMode
@@ -62,10 +62,10 @@ object StreamStage {
     * no slower at 4. */
   val StreamShufflePartitions = 8
 
-  /** A session CLONE (shared SparkContext, isolated SQL conf) with
-    * [[StreamShufflePartitions]] set — the streaming query pins the
-    * value into its checkpoint at start, and the memory-sink table is
-    * read back from this same clone.
+  /** A session CLONE (shared SparkContext, a copy of the caller's SQL
+    * conf, runtime settings included) with [[StreamShufflePartitions]]
+    * set — the streaming query pins the value into its checkpoint at
+    * start, and the memory-sink table is read back from this same clone.
     *
     * When the checkpoints land on the local filesystem, the clone also
     * writes them through Spark's `FileSystemBasedCheckpointFileManager`.
@@ -77,7 +77,7 @@ object StreamStage {
     * Hadoop's `chmod` on each local create and mkdir. HDFS, S3 and any
     * other filesystem keep Spark's default manager. */
   def streamSession(spark: SparkSession): SparkSession = {
-    val ss = spark.newSession()
+    val ss = GraftSqlBridge.cloneSession(spark)
     ss.conf.set("spark.sql.shuffle.partitions",
       StreamShufflePartitions.toString)
     if (localCheckpoints(ss.sessionState.conf.checkpointLocation,

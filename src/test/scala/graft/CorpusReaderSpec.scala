@@ -4,6 +4,7 @@ import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 import graft.sources.CorpusReader
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{input_file_name, lit, regexp_extract}
 
 /** CorpusReader packs a directory of tiny review files by bytes, not by
   * file count, with Spark's file-split rule minus the per-file open cost,
@@ -44,23 +45,16 @@ class CorpusReaderSpec extends SparkSpec {
   }
 
   private def scanPartitions(dir: String): Int =
-    spark.read.option("wholetext", "true").text(root.resolve(dir).toString)
+    spark.read.format("binaryFile").load(root.resolve(dir).toString)
       .rdd.getNumPartitions
 
   private def partitions(df: DataFrame): Int = df.rdd.getNumPartitions
 
   private def labeled: DataFrame = CorpusReader.loadLabeled(spark, s"$root/train")
 
-  private def withFilesConf(openCost: Long, maxBytes: Long)(f: => Unit): Unit = {
-    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), openCost.toString)
-    spark.conf.set(keys(1), maxBytes.toString)
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withFilesConf(openCost: Long, maxBytes: Long)(f: => Unit): Unit =
+    withSQLConf("spark.sql.files.openCostInBytes" -> openCost.toString,
+      "spark.sql.files.maxPartitionBytes" -> maxBytes.toString)(f)
 
   test("loadLabeled and loadUnknown are packed to the byte bound") {
     // the raw scans are split by file count, so the packing has teeth
@@ -121,15 +115,16 @@ class CorpusReaderSpec extends SparkSpec {
 
   test("the count follows the files' bytes, not the plan's row-width-scaled size") {
     // the plan's size scales the files' by output over scan row width
-    // (12/7 for loadUnknown's extra name column), which here would pack
-    // to more partitions than the files' own bytes ask for
+    // (about 1/3 for loadUnknown's review and name over binaryFile's
+    // four columns), which here would pack to another partition count
+    // than the files' own bytes ask for
     val maxBytes = 128L
     withFilesConf(openCost = 64, maxBytes = maxBytes) {
       val df = CorpusReader.loadUnknown(spark, s"$root/test")
       def count(b: BigInt) = ((b + maxBytes - 1) / maxBytes).toInt
       val byFiles = count(bytes(df))
       assert(byFiles > cores)
-      assert(count(df.queryExecution.analyzed.stats.sizeInBytes) > byFiles)
+      assert(count(df.queryExecution.analyzed.stats.sizeInBytes) != byFiles)
       assert(bound(df) == byFiles)
       assert(partitions(df) == byFiles)
     }
@@ -151,6 +146,41 @@ class CorpusReaderSpec extends SparkSpec {
     assert(rows.length == TestDocs)
     rows.foreach(r => assert(r.getString(0) == r.getString(1), r))
     assert(rows.map(_.getString(0)).toSet.size == TestDocs)
+  }
+
+  /** The reference for the `binaryFile` loaders: the same loads through
+    * Spark's `wholetext` text reader, unpacked. */
+  private def wholetext(dir: String) = spark.read.option("wholetext", "true").text(dir)
+    .withColumnRenamed("value", "review")
+  private def wholetextLabeled(dir: String): DataFrame =
+    wholetext(s"$dir/pos").withColumn("label", lit(1.0))
+      .unionByName(wholetext(s"$dir/neg").withColumn("label", lit(0.0)))
+  private def wholetextUnknown(dir: String): DataFrame = wholetext(dir)
+    .withColumn("name", regexp_extract(input_file_name(), "([^/]+)\\.[^.]+$", 1))
+    .select("review", "name")
+
+  private def sameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.columns.toSeq == want.columns.toSeq)
+    val g = got.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    val w = want.collect().map(_.toSeq.mkString("\u0001")).sorted.toSeq
+    assert(g.nonEmpty && g == w)
+  }
+
+  test("binaryFile reads the rows, labels and names the wholetext reads did") {
+    sameRows(CorpusReader.loadLabeled(spark, "fixtures/corpus/train"),
+      wholetextLabeled("fixtures/corpus/train"))
+    sameRows(CorpusReader.loadUnknown(spark, "fixtures/corpus/test"),
+      wholetextUnknown("fixtures/corpus/test"))
+    // a space and an extra dot in file names, multi-line and non-ASCII text
+    val r = Files.createTempDirectory("graft-corpus-names")
+    Seq("pos", "neg", "test").foreach(d => Files.createDirectories(r.resolve(d)))
+    Seq("a b.txt" -> "line one\nline two\n", "x.y_3.txt" -> "caf\u00e9 \u2013 ok",
+        "12_7.txt" -> "plain", "empty_1.txt" -> "").foreach { case (f, text) =>
+      Seq("pos", "neg", "test").foreach(d =>
+        Files.writeString(r.resolve(s"$d/$f"), if (text.isEmpty) "" else s"$d $text"))
+    }
+    sameRows(CorpusReader.loadLabeled(spark, r.toString), wholetextLabeled(r.toString))
+    sameRows(CorpusReader.loadUnknown(spark, s"$r/test"), wholetextUnknown(s"$r/test"))
   }
 
   test("limitPerClass still yields k rows per class") {

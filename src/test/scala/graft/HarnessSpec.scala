@@ -181,6 +181,20 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("no generated code under graft/plans or in RuleTagExpr spells a loop") {
+    // a custom expression's algorithm lives in one Scala method that its
+    // eval and its doGenCode both call, so no Java string holds a loop
+    val files = Files.list(Paths.get("src/main/scala/graft/plans"))
+    val kernels = try files.iterator.asScala.toList finally files.close()
+    val literal = "(?s)\"\"\".*?\"\"\"|\"(?:[^\"\\\\\n]|\\\\.)*\"".r
+    val loop = """\b(for|while)\s*\(""".r
+    val in = (Paths.get("src/main/scala/graft/ml/RuleTagExpr.scala") :: kernels).flatMap { p =>
+      val code = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+      literal.findAllIn(code).filter(loop.findFirstIn(_).nonEmpty).map(_ => p.getFileName.toString)
+    }
+    assert(kernels.size > 10 && in.isEmpty, s"a generated loop in ${in.distinct}")
+  }
+
   test("under src/main/scala no ALU probe, idle reference or idle gate is left") {
     Seq("HostCalib", "SPARK_GRAFT_IDLE_REF", "SPARK_GRAFT_REQUIRE_IDLE", "9_000_000_000")
       .foreach { token =>

@@ -163,6 +163,50 @@ class PqSpec extends SparkSpec {
     assert(e2.getMessage.contains("null element"), e2.getMessage)
   }
 
+  test("PqEncode is the first argmin and the ascending sum of minima of PqDistTable, ties planted") {
+    // 3 subspaces x 4 codes x 2 dims: codes 0 and 2 of subspace 0 are
+    // one codeword, all four of subspace 1 are, and codes 1 and 3 of
+    // subspace 2 are, so their distances tie bit for bit
+    val (subspaces, codes, subDim) = (3, 4, 2)
+    val codebook = Array[Double](1, 0, 0, 1, 1, 0, -1, 0,
+      0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5, 0.5,
+      0, 1, 1, 0, 0, -1, 1, 0)
+    val norms2 = codebook.grouped(subDim).map(_.map(x => x * x).sum).toArray
+    val rnd = new scala.util.Random(7)
+    val rows = Seq(Seq(2.0, 0.1, 1.0, 1.0, 3.0, 0.2), Seq.fill(6)(0.0)) ++
+      Seq.fill(20)(Seq.fill(6)(rnd.nextGaussian()))
+    val df = rows.map(Tuple1(_)).toDF("e").select(
+      graft.plans.PqEncode(col("e"), codebook, norms2, subspaces, codes, subDim).as("enc"),
+      graft.plans.PqDistTable(col("e"), codebook, norms2, subspaces, codes, subDim).as("tab"))
+    def check(): Unit = {
+      val got = df.select("enc.codes", "enc.recon_err", "tab")
+        .as[(Seq[Long], Double, Seq[Double])].collect().toSeq
+      assert(got.length == rows.length)
+      got.foreach { case (enc, err, tab) =>
+        var sum = 0.0
+        val firstArgmin = (0 until subspaces).map { s =>
+          var (best, bi) = (Double.PositiveInfinity, -1)
+          (0 until codes).foreach { k =>
+            if (tab(s * codes + k) < best) { best = tab(s * codes + k); bi = k }
+          }
+          sum += best
+          bi.toLong
+        }
+        assert(enc == firstArgmin)
+        assert(java.lang.Double.doubleToRawLongBits(err) ==
+          java.lang.Double.doubleToRawLongBits(sum))
+      }
+      // the planted ties: the lowest of the tied codes wins
+      assert(got.head._1 == Seq(0L, 0L, 1L))
+      assert(got.head._3(0) == got.head._3(2) && got.head._3(9) == got.head._3(11))
+      // a zero vector normalizes to NaN: no code, +inf error
+      assert(got(1)._1 == Seq(-1L, -1L, -1L) && got(1)._2 == Double.PositiveInfinity)
+    }
+    check()
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+                "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
+  }
+
   test("adc distance approximates true normalized-L2 distance") {
     // ADC(q, c) should correlate with 2-2cos(q, c); spot-check that for
     // one query the ADC-nearest neighbor is within the true top half

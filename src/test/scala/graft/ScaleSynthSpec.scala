@@ -108,6 +108,18 @@ class ScaleSynthSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("streamSession: the clone keeps the caller's runtime SQL settings") {
+    withSQLConf("spark.sql.session.timeZone" -> "Pacific/Chatham",
+        "spark.sql.streaming.checkpointLocation" -> "s3a://bucket/ckpt") {
+      val ss = graft.streaming.StreamStage.streamSession(spark)
+      assert(ss.conf.get("spark.sql.session.timeZone") == "Pacific/Chatham")
+      assert(ss.conf.get("spark.sql.streaming.checkpointLocation") == "s3a://bucket/ckpt")
+      // an s3a checkpoint root keeps Spark's default file manager
+      assert(ss.conf.getOption("spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    }
+  }
+
   test("streamSession: only a local checkpoint root switches the checkpoint file manager") {
     import graft.streaming.StreamStage.localCheckpoints
     assert(graft.streaming.StreamStage.streamSession(spark).conf

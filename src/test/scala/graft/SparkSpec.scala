@@ -17,6 +17,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * corpus where support thresholds are actually reachable. */
   lazy val sfMid: String = s"$testdataBase/sf0.01"
   implicit def sqlImplicits: org.apache.spark.sql.SQLImplicits = spark.implicits
+
+  /** Run `f` with the shared session's `pairs` set, then restore them. */
+  def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
+    val conf = spark.conf
+    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f finally olds.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

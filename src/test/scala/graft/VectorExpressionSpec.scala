@@ -38,14 +38,21 @@ class VectorExpressionSpec extends SparkSpec {
       (1L, Some(Seq[java.lang.Double](1.0, 2.0)), Some(Seq[java.lang.Double](3.0, 4.0))),
       (2L, None, Some(Seq[java.lang.Double](3.0, 4.0))),
       (3L, Some(Seq[java.lang.Double](1.0, 2.0, 5.0)), Some(Seq[java.lang.Double](3.0, 4.0))),
-      (4L, Some(Seq[java.lang.Double](1.0, null)), Some(Seq[java.lang.Double](3.0, 4.0)))
+      (4L, Some(Seq[java.lang.Double](1.0, null)), Some(Seq[java.lang.Double](3.0, 4.0))),
+      (5L, Some(Seq[java.lang.Double](Double.NaN, 2.0)), Some(Seq[java.lang.Double](3.0, 4.0)))
     ).toDF("id", "a", "b")
-    val out = df.select($"id", VectorExpressions.dotProduct($"a", $"b").as("d"))
-      .orderBy("id").collect()
-    assert(out(0).getDouble(1) == 11.0)
-    assert(out(1).isNullAt(1)) // null array
-    assert(out(2).isNullAt(1)) // length mismatch (zip_with would null-pad)
-    assert(out(3).isNullAt(1)) // null element
+    def check(): Unit = {
+      val out = df.select($"id", VectorExpressions.dotProduct($"a", $"b").as("d"))
+        .orderBy("id").collect()
+      assert(out(0).getDouble(1) == 11.0)
+      assert(out(1).isNullAt(1)) // null array
+      assert(out(2).isNullAt(1)) // length mismatch (zip_with would null-pad)
+      assert(out(3).isNullAt(1)) // null element
+      assert(out(4).getDouble(1).isNaN) // a NaN element: a NaN product, not null
+    }
+    check()
+    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
+                "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") { check() }
   }
 
   test("optimizer rule rewrites the HOF dot-product pattern to the native kernel") {
@@ -331,13 +338,4 @@ class VectorExpressionSpec extends SparkSpec {
     }
   }
 
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val conf = spark.conf
-    val olds = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
 }
