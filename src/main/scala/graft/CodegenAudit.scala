@@ -34,21 +34,31 @@ object CodegenAudit {
     * in the bytecode interpreter. */
   val JitBudgetBytes = 8000
 
+  /** `sources` holds each distinct unit's source once: a unit reached
+    * twice (a subquery's, or one inner plan behind two scans) is one
+    * compile, as Spark's compile cache keys units by their source. */
   final case class UnitStats(srcMax: Int, byteMax: Int, failed: Boolean,
-                             opaque: Int = 0) {
+                             opaque: Int = 0, sources: Set[String] = Set.empty) {
     def huge: Boolean = !failed && byteMax > JitBudgetBytes
     def nearLimit: Boolean = srcMax > JaninoNearLimitSrc
+    /** Total source length of the query's distinct units. */
+    def srcSum: Long = sources.iterator.map(_.length.toLong).sum
+    def units: Int = sources.size
     def merge(o: UnitStats): UnitStats = UnitStats(
       math.max(srcMax, o.srcMax), math.max(byteMax, o.byteMax),
-      failed || o.failed, opaque + o.opaque)
+      failed || o.failed, opaque + o.opaque, sources ++ o.sources)
+    // the sources run to hundreds of KB per query; messages show their sum
+    override def toString: String =
+      s"UnitStats($srcMax, $byteMax, $failed, $opaque, srcSum=$srcSum, units=$units)"
   }
 
   /** Compile every whole-stage unit of `df`'s physical plan through
     * janino (the real compiler, not a size heuristic) and fold:
-    * max unit source length, max method bytecode size, and whether any
+    * max unit source length, max method bytecode size, whether any
     * unit FAILED to compile (CodeStats.maxMethodCodeSize == -1 — that
-    * stage will run interpreted). Requires AQE off on the session:
-    * AQE wraps the plan and codegenToSeq sees nothing.
+    * stage will run interpreted), and the distinct units' sources, whose
+    * total length and count are `srcSum` and `units`. Requires AQE off
+    * on the session: AQE wraps the plan and codegenToSeq sees nothing.
     *
     * Plan-hiding leaves are audited THROUGH, not skipped:
     *
@@ -85,7 +95,7 @@ object CodegenAudit {
       case s => s.max
     }
     val outer = UnitStats(srcMax, byteMax,
-      units.exists(_._3.maxMethodCodeSize < 0))
+      units.exists(_._3.maxMethodCodeSize < 0), sources = units.map(_._2).toSet)
     val leafStats = plan.collect {
       case org.apache.spark.sql.execution.RDDScanExec(_, rdd, _, _, _, _) =>
         org.apache.spark.sql.GraftSqlBridge.innerPlansOf(rdd) match {
@@ -105,7 +115,7 @@ object CodegenAudit {
     // rather than audited-through or opaque-counted (r17 ADVICE).
     // Recurse auditPlan over each node's immediate subqueries (nested
     // subqueries are reached by the recursion); the unit stats come
-    // back a second time, which the max/or merge absorbs, while the
+    // back a second time, which the max/or/set merge absorbs, while the
     // leaf accounting becomes tree-complete.
     val subStats = plan.collect { case p => p.subqueries }.flatten.map(auditPlan)
     (leafStats ++ subStats).foldLeft(outer)(_ merge _)
@@ -152,7 +162,7 @@ object CodegenAudit {
     def list(p: UnitStats => Boolean): String =
       sorted.collect { case (n, s) if p(s) => "\"" + n + "\"" }.mkString("[", ",", "]")
     val perQuery = sorted.map { case (n, s) =>
-      s"""  "$n": {"srcMax": ${s.srcMax}, "byteMax": ${s.byteMax}, "failed": ${s.failed}, "opaque": ${s.opaque}}"""
+      s"""  "$n": {"srcMax": ${s.srcMax}, "byteMax": ${s.byteMax}, "failed": ${s.failed}, "opaque": ${s.opaque}, "srcSum": ${s.srcSum}, "units": ${s.units}}"""
     }.mkString(",\n")
     val json =
       s"""{

@@ -360,18 +360,16 @@ object MlQueries {
       .orderBy("label", "prediction")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q50_pos_dist"           -> (q50PosDist _),
-    "q51_sentiment_pipeline" -> (q51SentimentPipeline _),
-    "q52_pos_lexicon_dist"   -> (q52PosLexiconDist _),
-    "q53_pos_context_dist"   -> (q53PosContextDist _),
-    "q53b_pos_hmm_dist"      -> (q53bPosHmmDist _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q50_pos_dist", q50PosDist _, q50Sql),
+    // rows-only: a fitted spark.ml pipeline has no SQL twin
+    CatalogEntry.rowsOnly("q51_sentiment_pipeline", q51SentimentPipeline _),
+    CatalogEntry("q52_pos_lexicon_dist", q52PosLexiconDist _, q52Sql),
+    CatalogEntry("q53_pos_context_dist", q53PosContextDist _, q53Sql),
+    CatalogEntry("q53b_pos_hmm_dist", q53bPosHmmDist _, q53bSql)
   )
 
-  val oracles: Map[String, String] = Map(
-    "q50_pos_dist" -> q50Sql,
-    "q52_pos_lexicon_dist" -> q52Sql,
-    "q53_pos_context_dist" -> q53Sql,
-    "q53b_pos_hmm_dist" -> q53bSql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

@@ -217,17 +217,14 @@ object MultimodalQueries {
       |  FROM documents)
       |GROUP BY lang ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q60_media_bytes"    -> (q60MediaBytes _),
-    "q61_media_features" -> (q61MediaFeatures _),
-    "q68_jpeg_decode"    -> (q68JpegDecode _),
-    "q79_mp3_probe"      -> (q79Mp3Probe _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q60_media_bytes", q60MediaBytes _, q60Sql),
+    CatalogEntry("q61_media_features", q61MediaFeatures _, q61Sql),
+    CatalogEntry("q68_jpeg_decode", q68JpegDecode _, q68Sql),
+    CatalogEntry("q79_mp3_probe", q79Mp3Probe _, q79Sql)
   )
 
-  val oracles: Map[String, String] = Map(
-    "q60_media_bytes" -> q60Sql,
-    "q61_media_features" -> q61Sql,
-    "q68_jpeg_decode" -> q68Sql,
-    "q79_mp3_probe" -> q79Sql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

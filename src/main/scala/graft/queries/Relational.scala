@@ -1877,110 +1877,60 @@ object Relational {
        |FROM z GROUP BY 1 ORDER BY z_cell""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q74_funnel"              -> (q74Funnel _),
-    "q76_cube"                -> (q76Cube _),
-    "q77_fuzzy_join"          -> (q77FuzzyJoin _),
-    "q78_connected_components" -> (q78ConnectedComponents _),
-    "q80_gapfill"             -> (q80Gapfill _),
-    "q81_editdist_join"       -> (q81EditDistJoin _),
-    "q85_interval_overlap"    -> (q85IntervalOverlap _),
-    "q86_pagerank"            -> (q86PageRank _),
-    "q87_triangles"           -> (q87Triangles _),
-    "q83_rank_outliers"       -> (q83RankOutliers _),
-    "q84_zorder_cluster"      -> (q84ZOrderCluster _),
-    "q01_scan_filter_project" -> (q01ScanFilterProject _),
-    "q02_agg_pricing"         -> (q02AggPricing _),
-    "q03_join_broadcast"      -> (q03JoinBroadcast _),
-    "q04_join_geo"            -> (q04JoinGeo _),
-    "q05_semi_join"           -> (q05SemiJoin _),
-    "q06_anti_join"           -> (q06AntiJoin _),
-    "q07_distinct"            -> (q07Distinct _),
-    "q08_union"               -> (q08Union _),
-    "q09_topk"                -> (q09TopK _),
-    "q10_window_rank"         -> (q10WindowRank _),
-    "q11_window_running"      -> (q11WindowRunning _),
-    "q12_group_having"        -> (q12GroupHaving _),
-    "q13_hourly_rollup"       -> (q13HourlyRollup _),
-    "q14_sessionize"          -> (q14Sessionize _),
-    "q93_event_transitions"   -> (q93EventTransitions _),
-    "q94_retention_cohorts"   -> (q94RetentionCohorts _),
-    "q102_rate_anomaly"       -> (q102RateAnomaly _),
-    "q103_conversion_latency" -> (q103ConversionLatency _),
-    "q104_small_qty_revenue"  -> (q104SmallQtyRevenue _),
-    "q105_lone_late_supplier" -> (q105LoneLateSupplier _),
-    "q106_percentile_ladder"  -> (q106PercentileLadder _),
-    "q107_frequent_pairs"     -> (q107FrequentPairs _),
-    "q111_bfs_levels"         -> (q111BfsLevels _),
-    "q112_rfm_segments"       -> (q112RfmSegments _),
-    "q116_region_revenue"     -> (q116RegionRevenue _),
-    "q117_grouping_sets"      -> (q117GroupingSets _),
-    "q55_asof_join"           -> (q55AsofJoin _),
-    "q118_asof_forward"       -> (q118AsofForward _),
-    "q119_mad_outliers"       -> (q119MadOutliers _),
-    "q120_changepoint"        -> (q120Changepoint _),
-    "q56_range_join"          -> (q56RangeJoin _),
-    "q15_json_extract"        -> (q15JsonExtract _),
-    "q16_pivot"               -> (q16Pivot _),
-    "q17_window_suite"        -> (q17WindowSuite _),
-    "q18_rollup"              -> (q18Rollup _),
-    "q19_scalar_subquery"     -> (q19ScalarSubquery _),
-    "q33_string_match"        -> (q33StringMatch _),
-    "q34_date_parts"          -> (q34DateParts _),
-    "q35_set_ops"             -> (q35SetOps _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q74_funnel", q74Funnel _, q74Sql),
+    CatalogEntry("q76_cube", q76Cube _, q76Sql),
+    CatalogEntry("q77_fuzzy_join", q77FuzzyJoin _, q77Sql),
+    CatalogEntry("q78_connected_components", q78ConnectedComponents _, q78Sql),
+    CatalogEntry("q80_gapfill", q80Gapfill _, q80Sql),
+    CatalogEntry("q81_editdist_join", q81EditDistJoin _, q81Sql),
+    CatalogEntry("q85_interval_overlap", q85IntervalOverlap _, q85Sql),
+    CatalogEntry("q86_pagerank", q86PageRank _, q86Sql),
+    CatalogEntry("q87_triangles", q87Triangles _, q87Sql),
+    CatalogEntry("q83_rank_outliers", q83RankOutliers _, q83Sql),
+    CatalogEntry("q84_zorder_cluster", q84ZOrderCluster _, q84Sql),
+    CatalogEntry("q01_scan_filter_project", q01ScanFilterProject _, q01Sql),
+    CatalogEntry("q02_agg_pricing", q02AggPricing _, q02Sql),
+    CatalogEntry("q03_join_broadcast", q03JoinBroadcast _, q03Sql),
+    CatalogEntry("q04_join_geo", q04JoinGeo _, q04Sql),
+    CatalogEntry("q05_semi_join", q05SemiJoin _, q05Sql),
+    CatalogEntry("q06_anti_join", q06AntiJoin _, q06Sql),
+    CatalogEntry("q07_distinct", q07Distinct _, q07Sql),
+    CatalogEntry("q08_union", q08Union _, q08Sql),
+    CatalogEntry("q09_topk", q09TopK _, q09Sql),
+    CatalogEntry("q10_window_rank", q10WindowRank _, q10Sql),
+    CatalogEntry("q11_window_running", q11WindowRunning _, q11Sql),
+    CatalogEntry("q12_group_having", q12GroupHaving _, q12Sql),
+    CatalogEntry("q13_hourly_rollup", q13HourlyRollup _, q13Sql),
+    CatalogEntry("q14_sessionize", q14Sessionize _, q14Sql),
+    CatalogEntry("q93_event_transitions", q93EventTransitions _, q93Sql),
+    CatalogEntry("q94_retention_cohorts", q94RetentionCohorts _, q94Sql),
+    CatalogEntry("q102_rate_anomaly", q102RateAnomaly _, q102Sql),
+    CatalogEntry("q103_conversion_latency", q103ConversionLatency _, q103Sql),
+    CatalogEntry("q104_small_qty_revenue", q104SmallQtyRevenue _, q104Sql),
+    CatalogEntry("q105_lone_late_supplier", q105LoneLateSupplier _, q105Sql),
+    CatalogEntry("q106_percentile_ladder", q106PercentileLadder _, q106Sql),
+    CatalogEntry("q107_frequent_pairs", q107FrequentPairs _, q107Sql),
+    CatalogEntry("q111_bfs_levels", q111BfsLevels _, q111Sql),
+    CatalogEntry("q112_rfm_segments", q112RfmSegments _, q112Sql),
+    CatalogEntry("q116_region_revenue", q116RegionRevenue _, q116Sql),
+    CatalogEntry("q117_grouping_sets", q117GroupingSets _, q117Sql),
+    CatalogEntry("q55_asof_join", q55AsofJoin _, q55Sql),
+    CatalogEntry("q118_asof_forward", q118AsofForward _, q118Sql),
+    CatalogEntry("q119_mad_outliers", q119MadOutliers _, q119Sql),
+    CatalogEntry("q120_changepoint", q120Changepoint _, q120Sql),
+    CatalogEntry("q56_range_join", q56RangeJoin _, q56Sql),
+    CatalogEntry("q15_json_extract", q15JsonExtract _, q15Sql),
+    CatalogEntry("q16_pivot", q16Pivot _, q16Sql),
+    CatalogEntry("q17_window_suite", q17WindowSuite _, q17Sql),
+    CatalogEntry("q18_rollup", q18Rollup _, q18Sql),
+    CatalogEntry("q19_scalar_subquery", q19ScalarSubquery _, q19Sql),
+    CatalogEntry("q33_string_match", q33StringMatch _, q33Sql),
+    CatalogEntry("q34_date_parts", q34DateParts _, q34Sql),
+    CatalogEntry("q35_set_ops", q35SetOps _, q35Sql)
   )
 
-  /** name → DuckDB oracle SQL */
-  val oracles: Map[String, String] = Map(
-    "q01_scan_filter_project" -> q01Sql,
-    "q02_agg_pricing"         -> q02Sql,
-    "q03_join_broadcast"      -> q03Sql,
-    "q04_join_geo"            -> q04Sql,
-    "q05_semi_join"           -> q05Sql,
-    "q06_anti_join"           -> q06Sql,
-    "q07_distinct"            -> q07Sql,
-    "q08_union"               -> q08Sql,
-    "q09_topk"                -> q09Sql,
-    "q10_window_rank"         -> q10Sql,
-    "q11_window_running"      -> q11Sql,
-    "q12_group_having"        -> q12Sql,
-    "q13_hourly_rollup"       -> q13Sql,
-    "q14_sessionize"          -> q14Sql,
-    "q93_event_transitions"   -> q93Sql,
-    "q94_retention_cohorts"   -> q94Sql,
-    "q102_rate_anomaly"       -> q102Sql,
-    "q103_conversion_latency" -> q103Sql,
-    "q104_small_qty_revenue"  -> q104Sql,
-    "q105_lone_late_supplier" -> q105Sql,
-    "q106_percentile_ladder"  -> q106Sql,
-    "q107_frequent_pairs"     -> q107Sql,
-    "q111_bfs_levels"         -> q111Sql,
-    "q112_rfm_segments"       -> q112Sql,
-    "q116_region_revenue"     -> q116Sql,
-    "q117_grouping_sets"      -> q117Sql,
-    "q118_asof_forward"       -> q118Sql,
-    "q119_mad_outliers"       -> q119Sql,
-    "q120_changepoint"        -> q120Sql,
-    "q55_asof_join"           -> q55Sql,
-    "q56_range_join"          -> q56Sql,
-    "q15_json_extract"        -> q15Sql,
-    "q16_pivot"               -> q16Sql,
-    "q17_window_suite"        -> q17Sql,
-    "q18_rollup"              -> q18Sql,
-    "q19_scalar_subquery"     -> q19Sql,
-    "q74_funnel"              -> q74Sql,
-    "q76_cube"                -> q76Sql,
-    "q77_fuzzy_join"          -> q77Sql,
-    "q78_connected_components" -> q78Sql,
-    "q80_gapfill"             -> q80Sql,
-    "q81_editdist_join"       -> q81Sql,
-    "q85_interval_overlap"    -> q85Sql,
-    "q86_pagerank"            -> q86Sql,
-    "q87_triangles"           -> q87Sql,
-    "q83_rank_outliers"       -> q83Sql,
-    "q84_zorder_cluster"      -> q84Sql,
-    "q33_string_match"        -> q33Sql,
-    "q34_date_parts"          -> q34Sql,
-    "q35_set_ops"             -> q35Sql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

@@ -977,48 +977,31 @@ object SimilarityQueries {
       |    / len(codes), 8) AS mse
       |FROM c ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q151_int8_quant" -> (q151Int8Quant _),
-    "q130_centroid_sim" -> (q130CentroidSim _),
-    "q96_semdedup" -> (q96SemDedup _),
-    "q99_dup_cluster_hist" -> (q99DupClusterHistogram _),
-    "q113_keep_best" -> (q113KeepBest _),
-    "q114_hard_negatives" -> (q114HardNegatives _),
-    "q44_embed_neardup" -> (q44EmbedNearDup _),
-    "q45_dedup_canonical" -> (q45DedupCanonical _),
-    "q30_knn_brute"   -> (q30KnnBrute _),
-    "q31_embed_norm"  -> (q31EmbedNorm _),
-    "q40_lsh_neardup" -> (q40LshNearDups _),
-    "q41_simhash"     -> (q41Simhash _),
-    "q42_knn_lsh"     -> (q42KnnLsh _),
-    "q42b_knn_lsh_multiprobe" -> (q42bKnnLshMultiProbe _),
-    "q43_knn_ivf"     -> (q43KnnIvf _),
-    "q43b_knn_ivf_det" -> (q43bKnnIvfDet _),
-    "q62_pq_encode"   -> (q62PqEncode _),
-    "q63_pq_adc_knn"  -> (q63PqAdcKnn _),
-    "q73_ivfpq_knn"   -> (q73IvfPqKnn _),
-    "q142_ivfpq_index_persist" -> (q142IvfPqIndexPersist _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q151_int8_quant", q151Int8Quant _, q151Sql),
+    CatalogEntry("q130_centroid_sim", q130CentroidSim _, q130Sql),
+    CatalogEntry("q96_semdedup", q96SemDedup _, q96Sql),
+    CatalogEntry("q99_dup_cluster_hist", q99DupClusterHistogram _, q99Sql),
+    CatalogEntry("q113_keep_best", q113KeepBest _, q113Sql),
+    CatalogEntry("q114_hard_negatives", q114HardNegatives _, q114Sql),
+    CatalogEntry("q44_embed_neardup", q44EmbedNearDup _, q44Sql),
+    CatalogEntry("q45_dedup_canonical", q45DedupCanonical _, q45Sql),
+    CatalogEntry("q30_knn_brute", q30KnnBrute _, q30Sql),
+    CatalogEntry("q31_embed_norm", q31EmbedNorm _, q31Sql),
+    CatalogEntry("q40_lsh_neardup", q40LshNearDups _, q40Sql),
+    CatalogEntry("q41_simhash", q41Simhash _, q41Sql),
+    CatalogEntry("q42_knn_lsh", q42KnnLsh _, q42Sql),
+    CatalogEntry("q42b_knn_lsh_multiprobe", q42bKnnLshMultiProbe _, q42bSql),
+    // rows-only: the KMeans fit has no SQL twin
+    CatalogEntry.rowsOnly("q43_knn_ivf", q43KnnIvf _),
+    CatalogEntry("q43b_knn_ivf_det", q43bKnnIvfDet _, q43bSql),
+    CatalogEntry("q62_pq_encode", q62PqEncode _, q62Sql),
+    CatalogEntry("q63_pq_adc_knn", q63PqAdcKnn _, q63Sql),
+    CatalogEntry("q73_ivfpq_knn", q73IvfPqKnn _, q73Sql),
+    CatalogEntry("q142_ivfpq_index_persist", q142IvfPqIndexPersist _, q142Sql)
   )
 
-  val oracles: Map[String, String] = Map(
-    "q151_int8_quant" -> q151Sql,
-    "q130_centroid_sim" -> q130Sql,
-    "q96_semdedup" -> q96Sql,
-    "q99_dup_cluster_hist" -> q99Sql,
-    "q113_keep_best" -> q113Sql,
-    "q114_hard_negatives" -> q114Sql,
-    "q45_dedup_canonical" -> q45Sql,
-    "q30_knn_brute"   -> q30Sql,
-    "q31_embed_norm"  -> q31Sql,
-    "q40_lsh_neardup" -> q40Sql,
-    "q41_simhash"     -> q41Sql,
-    "q42_knn_lsh"     -> q42Sql,
-    "q42b_knn_lsh_multiprobe" -> q42bSql,
-    "q43b_knn_ivf_det" -> q43bSql,
-    "q44_embed_neardup" -> q44Sql,
-    "q62_pq_encode"   -> q62Sql,
-    "q63_pq_adc_knn"  -> q63Sql,
-    "q73_ivfpq_knn"   -> q73Sql,
-    "q142_ivfpq_index_persist" -> q142Sql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

@@ -634,27 +634,20 @@ object SketchQueries {
        |ORDER BY as_of_day""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q135_hll_growth" -> (q135HllGrowth _),
-    "q57_doc_chunk" -> q57DocChunk,
-    "q64_hll_distinct" -> q64HllDistinct,
-    "q65_bloom_semijoin" -> q65BloomSemijoin,
-    "q66_quantile_sketch" -> q66QuantileSketch,
-    "q67_countmin" -> q67CountMin,
-    "q71_heavy_hitters" -> q71HeavyHitters,
-    "q72_hll_merge" -> q72HllMerge,
-    "q143_hll_index_persist" -> (q143HllIndexPersist _),
-    "q144_cms_index_persist" -> (q144CmsIndexPersist _))
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q135_hll_growth", q135HllGrowth _, q135Sql),
+    CatalogEntry("q57_doc_chunk", q57DocChunk, q57Sql),
+    CatalogEntry("q64_hll_distinct", q64HllDistinct, q64Sql),
+    CatalogEntry("q65_bloom_semijoin", q65BloomSemijoin, q65Sql),
+    CatalogEntry("q66_quantile_sketch", q66QuantileSketch, q66Sql),
+    CatalogEntry("q67_countmin", q67CountMin, q67Sql),
+    CatalogEntry("q71_heavy_hitters", q71HeavyHitters, q71Sql),
+    CatalogEntry("q72_hll_merge", q72HllMerge, q72Sql),
+    CatalogEntry("q143_hll_index_persist", q143HllIndexPersist _, q143Sql),
+    CatalogEntry("q144_cms_index_persist", q144CmsIndexPersist _, q67Sql)
+  )
 
-  val oracles: Map[String, String] = Map(
-    "q135_hll_growth" -> q135Sql,
-    "q57_doc_chunk" -> q57Sql,
-    "q64_hll_distinct" -> q64Sql,
-    "q65_bloom_semijoin" -> q65Sql,
-    "q66_quantile_sketch" -> q66Sql,
-    "q67_countmin" -> q67Sql,
-    "q71_heavy_hitters" -> q71Sql,
-    "q72_hll_merge" -> q72Sql,
-    "q143_hll_index_persist" -> q143Sql,
-    "q144_cms_index_persist" -> q67Sql)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

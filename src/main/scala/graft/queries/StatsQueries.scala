@@ -1176,57 +1176,34 @@ object StatsQueries {
       |WHERE cum >= target AND cum - c < target
       |ORDER BY window_start_sec, q""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q147_streaming_cms"   -> (q147StreamingCountMin _),
-    "q148_streaming_dedup" -> (q148StreamingDedup _),
-    "q149_streaming_bloom" -> (q149StreamingBloom _),
-    "q150_streaming_quantile" -> (q150StreamingQuantile _),
-    "q140_seasonal_anomaly" -> (q140SeasonalAnomaly _),
-    "q139_active_users"    -> (q139ActiveUsers _),
-    "q137_nearest_join"    -> (q137NearestJoin _),
-    "q138_ltv_curve"       -> (q138LtvCurve _),
-    "q136_source_drift"    -> (q136SourceDrift _),
-    "q121_scd2_runs"       -> (q121Scd2Runs _),
-    "q141_streaming_runs"  -> (q141StreamingRuns _),
-    "q145_streaming_hll"   -> (q145StreamingHll _),
-    "q122_dup_suppress"    -> (q122DupSuppress _),
-    "q123_skyline"         -> (q123Skyline _),
-    "q124_trend_slope"     -> (q124TrendSlope _),
-    "q125_zipf_slope"      -> (q125ZipfSlope _),
-    "q126_salted_distinct" -> (q126SaltedDistinct _),
-    "q127_distinct_growth" -> (q127DistinctGrowth _),
-    "q128_decay_score"     -> (q128DecayScore _),
-    "q129_key_skew"        -> (q129KeySkew _),
-    "q131_pit_features"    -> (q131PitFeatures _),
-    "q132_profile"         -> (q132Profile _),
-    "q133_ri_audit"        -> (q133RiAudit _),
-    "q134_session_paths"   -> (q134SessionPaths _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q147_streaming_cms", q147StreamingCountMin _, q147Sql),
+    CatalogEntry("q148_streaming_dedup", q148StreamingDedup _, q148Sql),
+    CatalogEntry("q149_streaming_bloom", q149StreamingBloom _, q149Sql),
+    CatalogEntry("q150_streaming_quantile", q150StreamingQuantile _, q150Sql),
+    CatalogEntry("q140_seasonal_anomaly", q140SeasonalAnomaly _, q140Sql),
+    CatalogEntry("q139_active_users", q139ActiveUsers _, q139Sql),
+    CatalogEntry("q137_nearest_join", q137NearestJoin _, q137Sql),
+    CatalogEntry("q138_ltv_curve", q138LtvCurve _, q138Sql),
+    CatalogEntry("q136_source_drift", q136SourceDrift _, q136Sql),
+    CatalogEntry("q121_scd2_runs", q121Scd2Runs _, q121Sql),
+    CatalogEntry("q141_streaming_runs", q141StreamingRuns _, q141Sql),
+    CatalogEntry("q145_streaming_hll", q145StreamingHll _, q145Sql),
+    CatalogEntry("q122_dup_suppress", q122DupSuppress _, q122Sql),
+    CatalogEntry("q123_skyline", q123Skyline _, q123Sql),
+    CatalogEntry("q124_trend_slope", q124TrendSlope _, q124Sql),
+    CatalogEntry("q125_zipf_slope", q125ZipfSlope _, q125Sql),
+    CatalogEntry("q126_salted_distinct", q126SaltedDistinct _, q126Sql),
+    CatalogEntry("q127_distinct_growth", q127DistinctGrowth _, q127Sql),
+    CatalogEntry("q128_decay_score", q128DecayScore _, q128Sql),
+    CatalogEntry("q129_key_skew", q129KeySkew _, q129Sql),
+    CatalogEntry("q131_pit_features", q131PitFeatures _, q131Sql),
+    CatalogEntry("q132_profile", q132Profile _, q132Sql),
+    CatalogEntry("q133_ri_audit", q133RiAudit _, q133Sql),
+    CatalogEntry("q134_session_paths", q134SessionPaths _, q134Sql)
   )
 
-  val oracles: Map[String, String] = Map(
-    "q121_scd2_runs"       -> q121Sql,
-    "q141_streaming_runs"  -> q141Sql,
-    "q145_streaming_hll"   -> q145Sql,
-    "q147_streaming_cms"   -> q147Sql,
-    "q148_streaming_dedup" -> q148Sql,
-    "q149_streaming_bloom" -> q149Sql,
-    "q150_streaming_quantile" -> q150Sql,
-    "q122_dup_suppress"    -> q122Sql,
-    "q123_skyline"         -> q123Sql,
-    "q124_trend_slope"     -> q124Sql,
-    "q125_zipf_slope"      -> q125Sql,
-    "q126_salted_distinct" -> q126Sql,
-    "q127_distinct_growth" -> q127Sql,
-    "q128_decay_score"     -> q128Sql,
-    "q129_key_skew"        -> q129Sql,
-    "q131_pit_features"    -> q131Sql,
-    "q132_profile"         -> q132Sql,
-    "q133_ri_audit"        -> q133Sql,
-    "q134_session_paths"   -> q134Sql,
-    "q136_source_drift"    -> q136Sql,
-    "q137_nearest_join"    -> q137Sql,
-    "q138_ltv_curve"       -> q138Sql,
-    "q139_active_users"    -> q139Sql,
-    "q140_seasonal_anomaly" -> q140Sql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

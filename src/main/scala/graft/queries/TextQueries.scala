@@ -2132,87 +2132,49 @@ object TextQueries {
       |    AS kept
       |FROM b ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q146_dsir_resample"  -> (q146DsirResample _),
-    "q152_ppl_buckets"    -> (q152PerplexityBuckets _),
-    "q115_curriculum_interleave" -> (q115CurriculumInterleave _),
-    "q110_hybrid_rrf"     -> (q110HybridRrf _),
-    "q108_token_drift"    -> ((s: SparkSession, d: String) => q108TokenDrift(s, d)),
-    "q109_quality_by_source" -> (q109QualityBySource _),
-    "q95_substring_dup"   -> (q95SubstringDup _),
-    "q97_source_overlap"  -> (q97SourceOverlap _),
-    "q98_tfidf_keywords"  -> (q98TfidfKeywords _),
-    "q100_kanonymity"     -> (q100KAnonymity _),
-    "q101_mixture_alloc"  -> (q101MixtureAlloc _),
-    "q88_inverted_index"  -> (q88InvertedIndex _),
-    "q89_bigram_pmi"      -> (q89BigramPmi _),
-    "q90_boilerplate_ngram" -> (q90BoilerplateNgram _),
-    "q91_vocab_oov"       -> ((s: SparkSession, d: String) => q91VocabOov(s, d)),
-    "q92_ngram_novelty"   -> (q92NgramNovelty _),
-    "q75_bigram_lm"       -> (q75BigramLm _),
-    "q20_token_stats"     -> (q20TokenStats _),
-    "q21_vocab_df"        -> (q21VocabDf _),
-    "q22_bigram_top"      -> (q22BigramTop _),
-    "q23_stopword_filter" -> (q23StopwordFilter _),
-    "q24_quality"         -> (q24Quality _),
-    "q25_langid"          -> (q25LangId _),
-    "q26_fingerprint"     -> (q26Fingerprint _),
-    "q27_dedup_exact"     -> (q27DedupExact _),
-    "q28_shingle_jaccard" -> (q28ShingleJaccard _),
-    "q29_minhash_sig"     -> (q29MinhashSig _),
-    "q36_idf"             -> (q36Idf _),
-    "q37_quality_rules"   -> (q37QualityRules _),
-    "q38_pii_scrub"       -> (q38PiiScrub _),
-    "q39_token_entropy"   -> (q39TokenEntropy _),
-    "q46_decontaminate"   -> (q46Decontaminate _),
-    "q47_unicode_tokens"  -> (q47UnicodeTokens _),
-    "q48_stratified_sample" -> (q48StratifiedSample _),
-    "q49_lm_logprob"      -> (q49LmLogprob _),
-    "q54_seq_pack"        -> (q54SequencePack _),
-    "q69_weighted_sample" -> (q69WeightedSample _),
-    "q70_bm25_topk"       -> (q70Bm25TopK _),
-    "q82_setsim_join"     -> (q82SetSimJoin _)
+  /** Every query of this module: name, Spark builder, DuckDB oracle. */
+  val catalog: Seq[CatalogEntry] = Seq(
+    CatalogEntry("q146_dsir_resample", q146DsirResample _, q146Sql),
+    CatalogEntry("q152_ppl_buckets", q152PerplexityBuckets _, q152Sql),
+    CatalogEntry("q115_curriculum_interleave", q115CurriculumInterleave _, q115Sql),
+    CatalogEntry("q110_hybrid_rrf", q110HybridRrf _, q110Sql),
+    CatalogEntry("q108_token_drift", (s: SparkSession, d: String) => q108TokenDrift(s, d), q108Sql),
+    CatalogEntry("q109_quality_by_source", q109QualityBySource _, q109Sql),
+    CatalogEntry("q95_substring_dup", q95SubstringDup _, q95Sql),
+    CatalogEntry("q97_source_overlap", q97SourceOverlap _, q97Sql),
+    CatalogEntry("q98_tfidf_keywords", q98TfidfKeywords _, q98Sql),
+    CatalogEntry("q100_kanonymity", q100KAnonymity _, q100Sql),
+    CatalogEntry("q101_mixture_alloc", q101MixtureAlloc _, q101Sql),
+    CatalogEntry("q88_inverted_index", q88InvertedIndex _, q88Sql),
+    CatalogEntry("q89_bigram_pmi", q89BigramPmi _, q89Sql),
+    CatalogEntry("q90_boilerplate_ngram", q90BoilerplateNgram _, q90Sql),
+    CatalogEntry("q91_vocab_oov", (s: SparkSession, d: String) => q91VocabOov(s, d), q91Sql),
+    CatalogEntry("q92_ngram_novelty", q92NgramNovelty _, q92Sql),
+    CatalogEntry("q75_bigram_lm", q75BigramLm _, q75Sql),
+    CatalogEntry("q20_token_stats", q20TokenStats _, q20Sql),
+    CatalogEntry("q21_vocab_df", q21VocabDf _, q21Sql),
+    CatalogEntry("q22_bigram_top", q22BigramTop _, q22Sql),
+    CatalogEntry("q23_stopword_filter", q23StopwordFilter _, q23Sql),
+    CatalogEntry("q24_quality", q24Quality _, q24Sql),
+    CatalogEntry("q25_langid", q25LangId _, q25Sql),
+    CatalogEntry("q26_fingerprint", q26Fingerprint _, q26Sql),
+    CatalogEntry("q27_dedup_exact", q27DedupExact _, q27Sql),
+    CatalogEntry("q28_shingle_jaccard", q28ShingleJaccard _, q28Sql),
+    CatalogEntry("q29_minhash_sig", q29MinhashSig _, q29Sql),
+    CatalogEntry("q36_idf", q36Idf _, q36Sql),
+    CatalogEntry("q37_quality_rules", q37QualityRules _, q37Sql),
+    CatalogEntry("q38_pii_scrub", q38PiiScrub _, q38Sql),
+    CatalogEntry("q39_token_entropy", q39TokenEntropy _, q39Sql),
+    CatalogEntry("q46_decontaminate", q46Decontaminate _, q46Sql),
+    CatalogEntry("q47_unicode_tokens", q47UnicodeTokens _, q47Sql),
+    CatalogEntry("q48_stratified_sample", q48StratifiedSample _, q48Sql),
+    CatalogEntry("q49_lm_logprob", q49LmLogprob _, q49Sql),
+    CatalogEntry("q54_seq_pack", q54SequencePack _, q54Sql),
+    CatalogEntry("q69_weighted_sample", q69WeightedSample _, q69Sql),
+    CatalogEntry("q70_bm25_topk", q70Bm25TopK _, q70Sql),
+    CatalogEntry("q82_setsim_join", q82SetSimJoin _, q82Sql)
   )
 
-  val oracles: Map[String, String] = Map(
-    "q146_dsir_resample"  -> q146Sql,
-    "q152_ppl_buckets"    -> q152Sql,
-    "q20_token_stats"     -> q20Sql,
-    "q21_vocab_df"        -> q21Sql,
-    "q22_bigram_top"      -> q22Sql,
-    "q23_stopword_filter" -> q23Sql,
-    "q24_quality"         -> q24Sql,
-    "q25_langid"          -> q25Sql,
-    "q26_fingerprint"     -> q26Sql,
-    "q27_dedup_exact"     -> q27Sql,
-    "q28_shingle_jaccard" -> q28Sql,
-    "q29_minhash_sig"     -> q29Sql,
-    "q36_idf"             -> q36Sql,
-    "q37_quality_rules"   -> q37Sql,
-    "q38_pii_scrub"       -> q38Sql,
-    "q39_token_entropy"   -> q39Sql,
-    "q46_decontaminate"   -> q46Sql,
-    "q47_unicode_tokens"  -> q47Sql,
-    "q48_stratified_sample" -> q48Sql,
-    "q49_lm_logprob"      -> q49Sql,
-    "q54_seq_pack"        -> q54Sql,
-    "q69_weighted_sample" -> q69Sql,
-    "q75_bigram_lm"       -> q75Sql,
-    "q82_setsim_join"     -> q82Sql,
-    "q70_bm25_topk"       -> q70Sql,
-    "q88_inverted_index"  -> q88Sql,
-    "q89_bigram_pmi"      -> q89Sql,
-    "q90_boilerplate_ngram" -> q90Sql,
-    "q91_vocab_oov"       -> q91Sql,
-    "q92_ngram_novelty"   -> q92Sql,
-    "q95_substring_dup"   -> q95Sql,
-    "q97_source_overlap"  -> q97Sql,
-    "q98_tfidf_keywords"  -> q98Sql,
-    "q100_kanonymity"     -> q100Sql,
-    "q101_mixture_alloc"  -> q101Sql,
-    "q108_token_drift"    -> q108Sql,
-    "q109_quality_by_source" -> q109Sql,
-    "q110_hybrid_rrf"     -> q110Sql,
-    "q115_curriculum_interleave" -> q115Sql
-  )
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    CatalogEntry.builders(catalog)
 }

@@ -38,6 +38,17 @@ class CodegenAuditSpec extends SparkSpec {
       s"deliberately oversized method no longer trips FAILED-COMPILE: $st")
   }
 
+  test("srcSum and units count each unit once, a scalar subquery's included") {
+    // codegenStringSeq already lists the subquery's units and auditPlan
+    // walks the subquery again for its leaves: no unit counts twice
+    val df = spark.sql("SELECT id + (SELECT max(id * 2) FROM range(10)) AS w FROM range(5)")
+    val st = audited(df)
+    val codes = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    assert(st.units >= 2 && st.units == codes.size, s"$st against ${codes.size} units")
+    assert(st.srcSum == codes.map(_.length.toLong).sum && st.srcSum >= st.srcMax, st)
+  }
+
   test("composed pqStage reference is the documented HUGE-METHOD case") {
     // the reason pqQueryTable's fused kernel exists: the composed
     // reference compiles but its table-build method is far past the

@@ -353,7 +353,7 @@ class CorpusStatsSpec extends SparkSpec {
       val bySource: Map[String, Set[String]] = rows.groupBy(_._4).map {
         case (src, rs) => src -> rs.flatMap(r =>
           r._2.split(" ").toSeq.sliding(8).filter(_.size == 8)
-            .map(_.mkString(" "))).toSet
+            .map(_.mkString("\u0000"))).toSet
       }
       val names = bySource.keys.toSeq.sorted
       val expected = for {

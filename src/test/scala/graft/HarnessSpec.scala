@@ -181,6 +181,17 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("under src/main/scala/graft/queries each \"qNN_…\" name is written once") {
+    // a query's name, builder and oracle are one CatalogEntry, so no
+    // name is spelled a second time to pair an oracle with its builder
+    val files = Files.list(Paths.get("src/main/scala/graft/queries"))
+    val modules = try files.iterator.asScala.toList finally files.close()
+    val literal = "\"q\\d+[a-z]?_\\w*\"".r
+    val names = modules.flatMap(p => literal.findAllIn(Files.readString(p)))
+    val twice = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(names.size >= 152 && twice.isEmpty, s"written twice: ${twice.toSeq.sorted}")
+  }
+
   test("no generated code under graft/plans or in RuleTagExpr spells a loop") {
     // a custom expression's algorithm lives in one Scala method that its
     // eval and its doGenCode both call, so no Java string holds a loop
